@@ -4,25 +4,37 @@ snapshot checkpoints, resume, and per-partition lineage metrics.
 This is the Spark lifecycle of the reference's EP2
 (reference script/model_magellan_ml.py:138-430) re-expressed as staged
 DataFrame jobs (SURVEY.md §3): scan -> normalize -> signature -> minhash
-band keys -> salted/capped block join -> pair features -> scorer ->
-threshold -> edge list -> connected components -> clusters table. Each
-stage commits a snapshot (sources/io.py) and appends lineage rows, so a
+band keys -> capped band-key blocks (or the sequential token-overlap
+cascade) -> candidate pairs -> scorer (fused threshold cascade, or
+features + trained matcher) -> edge list -> connected components ->
+clusters table. Each stage commits a snapshot (sources/io.py), so a
 killed run resumes from the last committed stage (north rule).
+
+Per-partition lineage and the blocker's cap/fallback events go to the
+append-only ``run_metrics`` table in one write per run. Their rows are
+built on the driver from the counts each snapshot records, so lineage
+costs no job beyond that write. Clustering runs on the driver
+(``algorithm='local'``) when the scored stage's row count, which bounds
+the match count, is at most ``LOCAL_MAX_EDGES``; above it, distributed
+label propagation.
 """
 
 from __future__ import annotations
 
 import json
-import time
 from dataclasses import asdict, dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neural_entity_matching_spark.functions.minhash import HASH_FAMILY
 from neural_entity_matching_spark.functions.normalize import build_signatures
 from neural_entity_matching_spark.operators.blocking import lsh_block
-from neural_entity_matching_spark.operators.clustering import connected_components
+from neural_entity_matching_spark.operators.clustering import (
+    LOCAL_MAX_EDGES,
+    connected_components,
+)
 from neural_entity_matching_spark.operators.scoring import (
     fast_threshold_score,
     featurize_pairs,
@@ -141,37 +153,27 @@ def _labels_digest(labeled_pairs: DataFrame) -> str:
     return f"+labels:{row['n']}:{row['h']}"
 
 
-def _lineage_rows(spark, run_id: str, stage: str, df: DataFrame,
-                  snapshot_id: str, wall_ms: int, resumed: bool) -> DataFrame:
-    """Per-partition lineage: one row per output partition + a stage total
-    (north rule 'per-partition lineage + metrics')."""
-    per_part = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows_out"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            "rows_out",
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-            F.lit(resumed).alias("resumed"),
-            F.lit(None).cast("string").alias("event"),
-            F.lit(None).cast("long").alias("event_value"),
-        )
-    )
-    return per_part
+# the run_metrics row: per-partition lineage rows carry partition_id,
+# rows_out and wall_ms; event rows carry event and event_value
+_RUN_METRICS_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("stage", pa.string()),
+    ("partition_id", pa.int32()), ("rows_out", pa.int64()),
+    ("wall_ms", pa.int64()), ("snapshot_id", pa.string()),
+    ("resumed", pa.bool_()), ("event", pa.string()),
+    ("event_value", pa.int64()),
+])
 
 
-_LINEAGE_EVENT_SCHEMA = (
-    "run_id string, stage string, partition_id int, rows_out long, "
-    "wall_ms long, snapshot_id string, resumed boolean, event string, "
-    "event_value long"
-)
+def _lineage_rows(run_id: str, stage: str, res) -> list[tuple]:
+    """Per-partition lineage (north rule 'per-partition lineage +
+    metrics'): one row per non-empty partition of the stage's snapshot,
+    from the counts the snapshot recorded."""
+    return [(run_id, stage, pid, n, res.wall_ms, res.snapshot_id,
+             res.resumed, None, None) for pid, n in res.partition_rows]
 
 
-def _event_rows(spark, run_id: str, stage: str, snapshot_id: str,
-                stats) -> DataFrame:
+def _event_rows(run_id: str, stage: str, snapshot_id: str,
+                stats) -> list[tuple]:
     """Cap/fallback events as queryable ``run_metrics`` rows (north rule:
     caps must be 'semantically visible', not just in-memory stats): one
     row per event with a numeric value; the packed strategy's
@@ -190,9 +192,18 @@ def _event_rows(spark, run_id: str, stage: str, snapshot_id: str,
     fb = stats.extra.get("fallback")
     if fb:
         events.append((f"fallback:{fb}", 1))
-    rows = [(run_id, stage, None, None, None, snapshot_id, False, k, v)
+    return [(run_id, stage, None, None, None, snapshot_id, False, k, v)
             for k, v in events]
-    return spark.createDataFrame(rows, _LINEAGE_EVENT_SCHEMA)
+
+
+def _append_run_metrics(spark: SparkSession, checkpoint_dir: str,
+                        rows: list[tuple]) -> None:
+    """One append of driver-built rows through an Arrow local relation."""
+    table = pa.Table.from_pylist(
+        [dict(zip(_RUN_METRICS_SCHEMA.names, r)) for r in rows],
+        schema=_RUN_METRICS_SCHEMA)
+    (spark.createDataFrame(table).write.mode("append")
+     .parquet(f"{checkpoint_dir}/run_metrics"))
 
 
 def read_run_metrics(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
@@ -226,7 +237,7 @@ def run_pipeline(
     cfg = config or PipelineConfig()
     ckpt = CheckpointManager(spark, checkpoint_dir)
     report = PipelineReport(run_id=run_id)
-    metrics: list[DataFrame] = []
+    metrics: list[tuple] = []
 
     def stage(name: str, upstream_fp: str, compute, repartition_by=None):
         fp = cfg.fingerprint(name, upstream_fp + input_fingerprint)
@@ -235,10 +246,7 @@ def run_pipeline(
             "rows": res.rows, "wall_ms": res.wall_ms, "resumed": res.resumed,
             "snapshot_id": res.snapshot_id,
         }
-        metrics.append(
-            _lineage_rows(spark, run_id, name, res.df, res.snapshot_id,
-                          res.wall_ms, res.resumed)
-        )
+        metrics.extend(_lineage_rows(run_id, name, res))
         report.outputs[name] = res.df
         return res
 
@@ -296,7 +304,7 @@ def run_pipeline(
         # cap/fallback events land in run_metrics next to the stage's
         # per-partition rows; a RESUMED candidates stage emits none (the
         # events describe the run that actually blocked)
-        metrics.append(_event_rows(spark, run_id, "candidates",
+        metrics.extend(_event_rows(run_id, "candidates",
                                    cand_res.snapshot_id, bstats_holder[0]))
 
     feat_handle: list[DataFrame] = []
@@ -376,6 +384,11 @@ def run_pipeline(
     for h in feat_handle:
         h.unpersist()
 
+    # the scored row count (known without a job) bounds the match edges:
+    # small graphs are clustered on the driver from one collect, the same
+    # min-id labels without a job per propagation round
+    algorithm = ("local" if scored_res.rows <= LOCAL_MAX_EDGES
+                 else "label_propagation")
     cluster_res = stage(
         "clusters",
         scored_res.snapshot_id,
@@ -383,16 +396,12 @@ def run_pipeline(
             scored_res.df.filter(F.col("is_match") == 1)
             .select("conv_id_a", "conv_id_b"),
             vertices=sig_res.df,
+            algorithm=algorithm,
         ),
         repartition_by=["cluster_id"],
     )
 
-    # append lineage (run_metrics table)
-    all_metrics = metrics[0]
-    for m in metrics[1:]:
-        all_metrics = all_metrics.unionByName(m)
-    all_metrics.write.mode("append").parquet(f"{checkpoint_dir}/run_metrics")
-
+    _append_run_metrics(spark, checkpoint_dir, metrics)
     return cluster_res.df, report
 
 

@@ -3,9 +3,16 @@ import pytest
 from neural_entity_matching_spark.session import get_spark
 
 
+# The suite's data fits a few GB of heap (perfbench runs the full pipeline in
+# 3g). get_spark's 48g default lets G1 grow the driver heap past the RAM of
+# a 16 GB host over a full run, and the kernel then kills the JVM mid-suite.
+TEST_DRIVER_MEMORY = "4g"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="nem-tests", master="local[4]", shuffle_partitions=4, tmpfs_shuffle=True)
+    s = get_spark(app_name="nem-tests", master="local[4]", shuffle_partitions=4, tmpfs_shuffle=True,
+                  extra_conf={"spark.driver.memory": TEST_DRIVER_MEMORY})
     yield s
     s.stop()
 

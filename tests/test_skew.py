@@ -117,8 +117,8 @@ def test_packed_physical_cap_fallback(spark):
     # name, the cap counters carry their values
     from neural_entity_matching_spark.plans.pipeline import _event_rows
 
-    d = {r["event"]: r["event_value"]
-         for r in _event_rows(spark, "r", "candidates", "snap", sf).collect()}
+    d = {event: value for *_, event, value
+         in _event_rows("r", "candidates", "snap", sf)}
     assert d["oversized_blocks"] == 1 and d["dropped_memberships"] == 120
     fb = [e for e in d if e.startswith("fallback:")]
     assert len(fb) == 1 and "prune-before-collect" in fb[0] and d[fb[0]] == 1
