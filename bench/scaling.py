@@ -51,9 +51,10 @@ protocol is built to NOT inherit it:
 Runs carry a plan-variant tag (the NEM_* flag set they ran under);
 estimators refuse to mix variants, and ``report`` headlines the newest
 variant while keeping every other variant's raw runs in the report.
-Round 5 forked ``NEM_SPLIT_BROADCAST=1`` (split scoring broadcast) after
-the fused-plan record showed the day's host bus-starved at 4 executors
-in every phase; the fused rows stay in the record as context.
+Round 5 forked a split-scoring-broadcast variant (its flag and scorer
+have since been deleted) after the fused-plan record showed the day's
+host bus-starved at 4 executors in every phase; the fused rows stay in
+the record as context.
 
 Usage:
     python bench/scaling.py run [n_base] [pairs]   # append one batch
@@ -589,8 +590,8 @@ terms.
   accumulated-record capability + paired-ratio estimators (protocol
   above); no plan change, so fused round-4/round-5 walls are directly
   comparable;
-* round 5b — SPLIT SCORING BROADCAST (``NEM_SPLIT_BROADCAST=1``,
-  ``fast_threshold_score(split_broadcast=True)``): 93.05% of the
+* round 5b — SPLIT SCORING BROADCAST (a fast_threshold_score variant
+  since deleted; the fused cascade is the only scorer): 93.05% of the
   chain's candidate pairs decide on token-jaccard alone (measured at
   n=20k: 4,768,416 of 5,124,559 skip the banded-levenshtein stage
   because w_lev + w_jacc*jacc < threshold even at lev_ratio=1), yet
@@ -598,9 +599,10 @@ terms.
   EVERY pair. The split ships a toks-only probe map (~0.3 KB/entry)
   probed by all pairs and a string map joined only by the ~7%
   survivors — ~75% fewer broadcast bytes per probe on the shared DRAM
-  bus, bit-identical decisions/scores (test_split_broadcast_bitexact,
-  byte-identical match sets in every run below). Sandwich A/B at
-  4x1 executors, back-to-back in one window: scoring 228.7s (split) /
+  bus, bit-identical decisions/scores (asserted by a bit-exactness
+  test while the variant existed; byte-identical match sets in every
+  run below). Sandwich A/B at 4x1 executors, back-to-back in one
+  window: scoring 228.7s (split) /
   429.2s (fused) / 260.7s (split) — pulled after the day's fused
   record showed the 4-executor level bus-starved in every phase.
 

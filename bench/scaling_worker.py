@@ -140,16 +140,8 @@ def main() -> None:
         # binds when 4 cores probe at once, so this is one of the few
         # levers that moves the N->4N ratio rather than both levels.
         sigs_iid = sigs_iid.coalesce(1).sortWithinPartitions("conv_id")
-    # NEM_SPLIT_BROADCAST=1: probe a toks-only broadcast map for every
-    # pair and fetch the levenshtein string operands only for the ~7%
-    # of pairs whose jaccard score ceiling clears the threshold —
-    # bit-identical decisions (test_split_broadcast_bitexact), ~75%
-    # fewer broadcast bytes per probe on the shared DRAM bus
-    split_handles = []
     scored = fast_threshold_score(
         candidates, sigs_iid, threshold=0.55, broadcast_signatures=True,
-        split_broadcast=os.environ.get("NEM_SPLIT_BROADCAST", "0") == "1",
-        persist_handles=split_handles,
     ).persist()
     # materialize the cache FIRST: filtering is_match on the lazy plan lets
     # Catalyst push the predicate through the projection chain, substituting
@@ -171,8 +163,6 @@ def main() -> None:
                 "score")
     )
     n_matches = matches.count()
-    for h in split_handles:
-        h.unpersist()
     stages["scoring_sec"] = round(time.monotonic() - t1, 2)
     wall = time.monotonic() - t0
     spark.stop()
@@ -182,16 +172,12 @@ def main() -> None:
         "pairs_per_sec": round(n_scored / wall, 1), **stages,
         # variant tag: the record spans rounds, so every row states which
         # plan flags it ran under — estimators refuse to mix variants.
-        # Flags added after the record started (SPLIT_BROADCAST) append
-        # to the tag only when non-default, so pre-existing rows keep
-        # their tag and stay comparable with new default-flag runs.
         "variant": "|".join(
             f"{k}={os.environ.get(k, d)}"
             for k, d in (("NEM_SHUFFLE_FACTOR", "2"),
                          ("NEM_CLUSTER_BY_A", "1"),
                          ("NEM_SORT_BROADCAST", "1"))
-        ) + ("|NEM_SPLIT_BROADCAST=1"
-             if os.environ.get("NEM_SPLIT_BROADCAST", "0") == "1" else ""),
+        ),
     }))
     assert n_pairs == n_scored
 
@@ -262,27 +248,14 @@ def _run_ml(spark, sigs, labeled, *, executors: int, cores: int,
     labeled = labeled.persist()
     labeled.count()
 
-    # NEM_FEAT_BAND=<b in (0,1]>: banded lev_ratio (exact within the
-    # band, deterministic upper bound beyond) + hashed once-per-signature
-    # tokenization — the round-5-verdict featurize treatment. Semantic
-    # feature change (documented in featurize_pairs), so it forks the
-    # variant tag; gates asserted in test_ml_scorer.
-    feat_band = os.environ.get("NEM_FEAT_BAND")
-    feat_kw = ({"lev_band": float(feat_band), "hashed_tokens": True}
-               if feat_band else {})
     stages = {}
     t0 = time.monotonic()
-    feats = featurize_pairs(cand, sigs, broadcast_signatures=True,
-                            **feat_kw).persist()
+    feats = featurize_pairs(cand, sigs, broadcast_signatures=True).persist()
     feats.count()
     stages["featurize_sec"] = round(time.monotonic() - t0, 2)
     t1 = time.monotonic()
-    # L2 1e-6 with the banded variant: unregularized logistic never
-    # converges on separable features (all 100 LBFGS treeAggregate
-    # barriers, measured 12.6s E1 / 52.7s E4 — the barrier cost is the
-    # whole stage); see train_scorer's reg_param note
     model = train_scorer(attach_labels(feats, labeled), model="logistic",
-                         seed=0, reg_param=1e-6 if feat_band else None)
+                         seed=0)
     stages["fit_sec"] = round(time.monotonic() - t1, 2)
     t2 = time.monotonic()
     scored = score_with_model(model, feats, threshold=0.5).persist()
@@ -298,19 +271,13 @@ def _run_ml(spark, sigs, labeled, *, executors: int, cores: int,
         "pairs_per_sec": round(n_scored / wall, 1), **stages,
         # v2: sample keyed on real-id pairs (level-independent); the two
         # ml-logistic rows keep the record of the iid-keyed sampling bug.
-        # v4 = v2 + banded/hashed featurize (NEM_FEAT_BAND) + L2 1e-6
-        # logistic — semantic feature/model changes fork the tag; the
-        # single v3 pair (banded featurize, unregularized fit) stays in
-        # the record as the measurement that exposed the fit barrier cost.
-        # v5 (r7): the EXACT featurize path moved from the JVM O(n*m)
-        # levenshtein + per-pair tokenize to the fused Arrow Myers kernel
-        # (operators/scoring.featurize_pairs) — same outputs bit-for-bit,
-        # different plan, so the exact-path record restarts under a new
+        # v3/v4 rows in the record ran a banded/hashed featurize that no
+        # longer exists. v5 (r7): the featurize path moved from the JVM
+        # O(n*m) levenshtein + per-pair tokenize to the fused Arrow Myers
+        # kernel (operators/scoring.featurize_pairs) — same outputs
+        # bit-for-bit, different plan, so the record restarts under a new
         # tag (v2 rows stay as the old plan's record).
-        "variant": (
-            f"ml-logistic-v4|NEM_ML_SAMPLE_MOD={ML_SAMPLE_MOD}"
-            f"|NEM_FEAT_BAND={feat_band}|l2=1e-06" if feat_band
-            else f"ml-logistic-v5-arrowlev|NEM_ML_SAMPLE_MOD={ML_SAMPLE_MOD}"),
+        "variant": f"ml-logistic-v5-arrowlev|NEM_ML_SAMPLE_MOD={ML_SAMPLE_MOD}",
     }))
     assert n_scored == n_cand
 

@@ -3,11 +3,14 @@
 The reference's feature generation is Magellan's auto feature generator
 (~22 similarity measures per attribute pair, reference
 script/model_magellan_ml.py:84,98-100); we compute an explicit fixed list.
-Hot path stays JVM-side (whole-stage codegen): Spark's built-in
-``levenshtein``, array-intersection Jaccard, length features. Python-side
-measures (Jaro-Winkler, indel fuzz.ratio parity with
-reference script/utilities.py:19-20) are vectorized pandas UDFs used only
-where the JVM lacks the function.
+The JVM column expressions here (``levenshtein`` ratio,
+array-intersection Jaccard, length ratio) are the reference semantics.
+The feature hot path computes the same integers in one fused Arrow UDF
+(``lev_tokjac_udf``: vectorized Myers Levenshtein + token sets) and
+rebuilds the ratios bit-identically in the JVM. Other Python-side measures
+(Jaro-Winkler, indel fuzz.ratio parity with reference
+script/utilities.py:19-20) are pandas UDFs used where the JVM lacks the
+function.
 """
 
 from __future__ import annotations
@@ -307,6 +310,9 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 _U1 = np.uint64(1)
 _U63 = np.uint64(63)
 _UFULL = np.uint64(0xFFFFFFFFFFFFFFFF)
+# per-chunk cap on the (W, A, B) uint64 Peq tables: a wide alphabet (e.g.
+# CJK, astral code points) splits the chunk row-wise until it fits
+PEQ_BUDGET_BYTES = 256 << 20
 
 
 def _lev_codes(a_mat: np.ndarray, b_mat: np.ndarray):
@@ -349,9 +355,9 @@ def _myers_lev_chunk(a_strs: np.ndarray, b_strs: np.ndarray,
     a_code, b_code, A = _lev_codes(a_mat, b_mat)
     m_max = int(a_len.max())
     W = (m_max + 63) // 64
-    # wide alphabets (e.g. CJK) inflate the (W, A, B) Peq tables; split
-    # the chunk row-wise so Peq stays under ~256 MB per worker
-    if A * W * B * 8 > (256 << 20) and B > 64:
+    # wide alphabets inflate the (W, A, B) Peq tables; split the chunk
+    # row-wise, down to single rows, so Peq stays within PEQ_BUDGET_BYTES
+    if A * W * B * 8 > PEQ_BUDGET_BYTES and B > 1:
         half = B // 2
         out[:half] = _myers_lev_chunk(a_strs[:half], b_strs[:half], tile)
         out[half:] = _myers_lev_chunk(a_strs[half:], b_strs[half:], tile)
@@ -465,23 +471,6 @@ def _lev_distance_batch(a_strs: np.ndarray, b_strs: np.ndarray,
         idx = idx[np.argsort(-maxlen[idx], kind="stable")]
         out[idx] = _myers_lev_chunk(pat[idx], txt[idx])
     return out
-
-
-@F.pandas_udf(LongType())
-def lev_batch_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact Levenshtein distance (Arrow-batched, vectorized Myers).
-
-    NULL-propagating like the JVM built-in: a NULL on either side yields
-    NULL. Distances are integer-exact equals of ``F.levenshtein``, so any
-    downstream float expression over them is bit-identical to the JVM
-    path."""
-    null = a.isna() | b.isna()
-    av = a.fillna("").to_numpy()
-    bv = b.fillna("").to_numpy()
-    d = _lev_distance_batch(av, bv)
-    res = pd.Series(d, dtype="Int64")
-    res[null.to_numpy()] = None
-    return res
 
 
 _JAVA_WS = re.compile("[ \t\n\x0b\x0c\r]+")

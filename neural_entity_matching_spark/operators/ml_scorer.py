@@ -59,7 +59,7 @@ def train_scorer(
     reference's sklearn LogisticRegression regularizes BY DEFAULT (C=1.0
     ~ regParam 1/n), so a small positive value is the faithful setting;
     the committed parity/gate runs keep None (bit-compatibility with the
-    recorded bands) and the scaling chain sets 1e-6.
+    recorded bands).
     """
     cols = feature_cols or FEATURE_COLS
     assembler = VectorAssembler(inputCols=cols, outputCol="features")

@@ -6,11 +6,14 @@ Reference flow: Magellan auto feature gen over candidate pairs
 blocker-as-matcher bypass when post-blocking labels are single-class
 (model_magellan_ml.py:119-134,214-219).
 
-Spark-first: features are column expressions (codegen) plus optional
-pandas-UDF measures; the payload fetch is two joins back to the signature
-table (the reference's pair re-alignment dance at
-blocking_algorithms.py:149-172 disappears because pairs carry
-(conv_id_a, conv_id_b) columns from the start).
+Two scoring paths. ``featurize_pairs`` computes the feature table with
+one fused Arrow UDF (Myers Levenshtein + token-set sizes) and JVM float
+expressions over its integers; it feeds the trained matchers and
+``threshold_scorer``. ``fast_threshold_score`` is the threshold
+pipeline's all-JVM filter-then-verify cascade. Both fetch the payload
+with two joins back to the signature table (the reference's pair
+re-alignment dance at blocking_algorithms.py:149-172 disappears because
+pairs carry (conv_id_a, conv_id_b) columns from the start).
 """
 
 from __future__ import annotations
@@ -21,9 +24,7 @@ from pyspark.sql import functions as F
 from neural_entity_matching_spark.functions.similarity import (
     jaro_winkler_udf,
     len_ratio,
-    lev_batch_udf,
     lev_tokjac_udf,
-    token_jaccard,
 )
 
 FEATURE_COLS = ["lev_ratio", "token_jaccard", "len_ratio"]
@@ -115,18 +116,16 @@ def featurize_pairs(
     tfidf_n_docs: int | None = None,
     with_embedding: bool = False,
     embedding_dim: int = 64,
-    lev_band: float | None = None,
-    hashed_tokens: bool = False,
 ) -> DataFrame:
     """Attach (sig_a, sig_b) payloads and compute pair features.
 
-    The default (exact) hot path computes the Levenshtein distance and
-    token intersect/union in ONE fused Arrow pass (batch-vectorized
-    Myers kernel + exact-Spark-semantics tokenizer — r7, see the fused
-    branch below); lev_ratio / token_jaccard / len_ratio are JVM float
-    expressions over the returned integers, bit-identical to the all-JVM
-    formulation. The banded/hashed variants stay JVM-only; the
-    Jaro-Winkler pandas UDF is opt-in (Arrow batch per partition).
+    The Levenshtein distance and the token intersect/union sizes come
+    from ONE fused Arrow pass (``lev_tokjac_udf``: batch-vectorized Myers
+    kernel + exact-Spark-semantics tokenizer); lev_ratio / token_jaccard
+    / len_ratio are JVM float expressions over the returned integers,
+    bit-identical to the all-JVM formulation (similarity.lev_ratio /
+    token_jaccard / len_ratio). The Jaro-Winkler pandas UDF is opt-in
+    (Arrow batch per partition).
 
     ``with_tfidf`` adds the north-star TF-IDF cosine: per-doc normalized
     weight maps are precomputed ONCE over the signature table
@@ -139,50 +138,19 @@ def featurize_pairs(
     sandbox); per-doc vectors computed once, pair cosine is a JVM
     zip_with dot.
 
-    ``lev_prefix``: levenshtein is O(len_a * len_b) PER PAIR — on unbounded
-    multi-turn signatures that term dominates the whole pipeline, so the
-    edit ratio is computed over the first ``lev_prefix`` normalized chars
-    (None = unbounded). Token-Jaccard and length features still see the
-    full signature. At 10^12-turn scale a bounded edit window is the only
-    viable contract; the F1 gate is enforced on exactly this definition.
+    ``lev_prefix``: Levenshtein is O(len_a * len_b / 64) word ops PER
+    PAIR — on unbounded multi-turn signatures that term dominates the
+    whole pipeline, so the edit ratio is computed over the first
+    ``lev_prefix`` normalized chars (None = unbounded). Token-Jaccard and
+    length features still see the full signature. At 10^12-turn scale a
+    bounded edit window is the only viable contract; the F1 gate is
+    enforced on exactly this definition.
 
     Scale note: both payload joins shuffle on conv_id — the same key the
     signature table is already hash-partitioned on, so AQE keeps them
     cheap; candidates is the smaller post-blocking side.
-
-    ``lev_band``: opt-in BANDED edit distance for the ML feature table
-    (the exact O(n*m) levenshtein is ~95% of the trained-matcher wall —
-    400 s at 1x1-core on 201k pairs). With band b in (0, 1],
-    ``levenshtein(a, b, k)`` runs Spark's O(k*n) banded search with
-    k = floor(b * maxlen): ``lev_ratio`` is EXACT (bit-identical
-    expression to the default path) for every pair whose true edit
-    distance is within the band — i.e. true ratio >= ~100*(1-b) — and is
-    the deterministic upper bound ``100*(1-(k+1)/maxlen)`` otherwise.
-    Feature semantics: pairs more distant than the band collapse to
-    ~100*(1-b) instead of spreading over [0, 100*(1-b)); a trained
-    matcher separates on the near side of the band, so the gates
-    (pairwise F1 / AP on the fixture) are asserted unchanged in
-    test_ml_scorer. None (default) = exact everywhere.
-
-    ``hashed_tokens``: opt-in once-per-SIGNATURE tokenization into
-    distinct xxhash64 arrays (the fast scorer's allocation discipline)
-    instead of tokenizing both full strings per PAIR — per-pair
-    split/distinct on full text makes the stage allocation-stall bound
-    (measured: 32 threads pinned at ~25% CPU). ``token_jaccard`` equals
-    the string-token value except under 64-bit token-hash collisions
-    (~n_tokens^2 / 2^65 per signature — the same trade the decision path
-    already accepts).
     """
     sig = signatures.select("conv_id", "sig_text")
-    if hashed_tokens:
-        # same expression text as the fast scorer's toks map
-        sig = sig.withColumn(
-            "toks",
-            F.expr(
-                "array_distinct(transform(split(trim(sig_text), '\\\\s+'),"
-                " x -> xxhash64(x)))"
-            ),
-        )
     if broadcast_signatures:
         # Both payload joins become broadcast-hash joins — zero shuffle of
         # the (much larger) pair table. Only valid while the signature
@@ -195,97 +163,37 @@ def featurize_pairs(
         lb = F.substring("sig_b", 1, lev_prefix)
 
     def _side(suffix: str) -> DataFrame:
-        s = (sig.withColumnRenamed("conv_id", f"conv_id_{suffix}")
-                .withColumnRenamed("sig_text", f"sig_{suffix}"))
-        return (s.withColumnRenamed("toks", f"toks_{suffix}")
-                if hashed_tokens else s)
+        return (sig.withColumnRenamed("conv_id", f"conv_id_{suffix}")
+                   .withColumnRenamed("sig_text", f"sig_{suffix}"))
 
-    out = candidates.join(_side("a"), "conv_id_a").join(_side("b"), "conv_id_b")
-    fused_udf = lev_band is None and not hashed_tokens
-    if fused_udf:
-        # r7 hot path (guide §4.2): ONE Arrow pass computes the exact
-        # Levenshtein distance (batch-vectorized Myers kernel,
-        # O(n*ceil(m/64)) instead of O(n*m) — integer-identical to
-        # F.levenshtein) AND the distinct-token intersect/union sizes
-        # (exact Spark trim/split semantics, memoized per signature).
-        # Replaces the two dominant per-pair JVM terms: the full cell DP
-        # (~95% of the exact featurize wall) and the per-pair
-        # split/array_distinct/array_intersect chain. lev_ratio /
-        # token_jaccard are reconstructed with float expressions copied
-        # term-for-term from similarity.lev_ratio / token_jaccard, so
-        # every double is bit-identical to the JVM path (oracle-checked
-        # by pair_features).
-        out = (
-            out.withColumn(
-                "_lj", lev_tokjac_udf(lev_prefix)(F.col("sig_a"),
-                                                  F.col("sig_b")))
-            .withColumn(
-                "lev_ratio",
-                100.0
-                * (
-                    1.0
-                    - F.col("_lj.d")
-                    / F.greatest(F.length(la), F.length(lb), F.lit(1))
-                ),
-            )
-            .withColumn(
-                "token_jaccard",
-                F.when(F.col("_lj.tu") > 0, F.col("_lj.ti") / F.col("_lj.tu"))
-                 .otherwise(F.lit(0.0)),
-            )
-            .drop("_lj")
+    # ONE Arrow pass computes the exact Levenshtein distance
+    # (batch-vectorized Myers kernel, O(n*ceil(m/64)) instead of O(n*m) —
+    # integer-identical to F.levenshtein) AND the distinct-token
+    # intersect/union sizes (exact Spark trim/split semantics, memoized
+    # per signature). lev_ratio / token_jaccard are reconstructed with
+    # float expressions copied term-for-term from similarity.lev_ratio /
+    # token_jaccard, so every double is bit-identical to the JVM
+    # expressions (oracle-checked by pair_features).
+    out = (
+        candidates.join(_side("a"), "conv_id_a").join(_side("b"), "conv_id_b")
+        .withColumn(
+            "_lj", lev_tokjac_udf(lev_prefix)(F.col("sig_a"), F.col("sig_b")))
+        .withColumn(
+            "lev_ratio",
+            100.0
+            * (
+                1.0
+                - F.col("_lj.d")
+                / F.greatest(F.length(la), F.length(lb), F.lit(1))
+            ),
         )
-    elif lev_band is None:
-        # exact distance via the Myers kernel, jaccard handled by the
-        # hashed_tokens branch below
-        out = (
-            out.withColumn("_lev_d", lev_batch_udf(la, lb))
-            .withColumn(
-                "lev_ratio",
-                100.0
-                * (
-                    1.0
-                    - F.col("_lev_d")
-                    / F.greatest(F.length(la), F.length(lb), F.lit(1))
-                ),
-            )
-            .drop("_lev_d")
+        .withColumn(
+            "token_jaccard",
+            F.when(F.col("_lj.tu") > 0, F.col("_lj.ti") / F.col("_lj.tu"))
+             .otherwise(F.lit(0.0)),
         )
-    else:
-        out = (
-            out
-            .withColumn("_la", la)
-            .withColumn("_lb", lb)
-            .withColumn("_maxlen",
-                        F.greatest(F.length("_la"), F.length("_lb"), F.lit(1)))
-            .withColumn("_k", F.floor(F.lit(float(lev_band)) * F.col("_maxlen"))
-                        .cast("int"))
-            # SQL form: the banded threshold argument is only accepted as
-            # an expression through the SQL function (same as fast scorer)
-            .withColumn("_d", F.expr("levenshtein(_la, _lb, greatest(_k, 0))"))
-            .withColumn(
-                "lev_ratio",
-                F.when(F.col("_d") >= 0,
-                       100.0 * (1.0 - F.col("_d") / F.col("_maxlen")))
-                 .otherwise(100.0 * (1.0 - (F.col("_k") + 1) / F.col("_maxlen"))),
-            )
-            .drop("_la", "_lb", "_maxlen", "_k", "_d")
-        )
-    if hashed_tokens:
-        out = (
-            out
-            .withColumn("_inter", F.size(F.array_intersect("toks_a", "toks_b")))
-            .withColumn("_union", F.size(F.array_union("toks_a", "toks_b")))
-            .withColumn(
-                "token_jaccard",
-                F.when(F.col("_union") > 0, F.col("_inter") / F.col("_union"))
-                 .otherwise(F.lit(0.0)),
-            )
-            .drop("toks_a", "toks_b", "_inter", "_union")
-        )
-    elif not fused_udf:
-        out = out.withColumn(
-            "token_jaccard", token_jaccard(F.col("sig_a"), F.col("sig_b")))
+        .drop("_lj")
+    )
     out = out.withColumn("len_ratio", len_ratio(F.col("sig_a"), F.col("sig_b")))
     if with_jaro_winkler:
         out = out.withColumn(
@@ -343,8 +251,6 @@ def fast_threshold_score(
     w_jacc: float = 0.5,
     lev_prefix: int = 512,
     broadcast_signatures: bool = False,
-    split_broadcast: bool = False,
-    persist_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Decision-exact fused featurize+score using *thresholded* levenshtein.
 
@@ -389,39 +295,9 @@ def fast_threshold_score(
     threads pinned at ~25% CPU each, i.e. 8 effective cores, identical
     wall at 8 and 32 threads).
 
-    ``split_broadcast`` (requires ``broadcast_signatures``): ship TWO
-    broadcast maps instead of one — a toks-only map (token array +
-    lengths, ~0.3 KB/entry) probed by EVERY pair, and the string map
-    (the levenshtein operand, ~1 KB/entry) probed ONLY by pairs whose
-    jaccard-derived score ceiling clears the threshold. Measured on the
-    synthetic corpus at n=20k, 93.05% of candidate pairs decide on
-    jaccard alone, so the split removes ~75% of the per-probe broadcast
-    bytes — the shared-DRAM-bus resource concurrent executors contend
-    on. Costs one internal persist of the o(pairs) jaccard stage (the
-    two branches must not recompute it; the InMemoryRelation also keeps
-    the is_match pushdown hazard away from the branch filters). Results
-    are bit-identical to the fused path: same float expressions, same
-    band, same decision comparison (asserted in test_fast_scorer).
-
-    ``persist_handles``: the split path persists its jaccard stage
-    internally; pass a list and the handle is appended so the CALLER can
-    unpersist once the scored output is materialized (the same handle
-    discipline the blocking operators use via ``stats.extra``). Without
-    it each split-scoring call in a long-lived session leaks one cached
-    InMemoryRelation (MEMORY_AND_DISK spill blocks accumulate until
-    session end).
+    ``broadcast_signatures``: both payload joins become broadcast-hash
+    joins (same contract as in featurize_pairs).
     """
-    if split_broadcast:
-        if not broadcast_signatures:
-            raise ValueError(
-                "split_broadcast requires broadcast_signatures=True "
-                "(the split exists to shrink the broadcast probe payload)"
-            )
-        return _fast_threshold_score_split(
-            candidates, signatures, threshold=threshold, w_lev=w_lev,
-            w_jacc=w_jacc, lev_prefix=lev_prefix,
-            persist_handles=persist_handles,
-        )
     sig = signatures.select(
         "conv_id",
         (F.substring("sig_text", 1, lev_prefix) if lev_prefix is not None
@@ -511,133 +387,6 @@ def fast_threshold_score(
               "_inter", "_maxlen", "_req", "_k", "_smax", "_d")
     )
     return out
-
-
-def _fast_threshold_score_split(
-    candidates: DataFrame,
-    signatures: DataFrame,
-    threshold: float,
-    w_lev: float,
-    w_jacc: float,
-    lev_prefix: int,
-    persist_handles: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Split-broadcast body of fast_threshold_score — see its docstring.
-
-    Every expression below is copied verbatim from the fused path so the
-    reconstructed scores and decisions stay bit-identical; the only
-    structural change is WHICH broadcast relation each branch probes.
-    ``_maxlen`` (the fused path's ``greatest(length(_a), length(_b), 1)``)
-    is derived without the strings as ``least(sig_len, lev_prefix)`` per
-    side — exact because ``length(substring(s, 1, p)) == least(length(s),
-    p)`` in characters, the unit both functions use.
-    """
-    toks_map = signatures.select(
-        "conv_id",
-        F.length("sig_text").alias("sig_len"),
-        F.expr(
-            "array_distinct(transform(split(trim(sig_text), '\\\\s+'), x -> xxhash64(x)))"
-        ).alias("toks"),
-    ).withColumn("n_toks", F.size("toks"))
-    str_map = signatures.select(
-        "conv_id",
-        (F.substring("sig_text", 1, lev_prefix) if lev_prefix is not None
-         else F.col("sig_text")).alias("sig_lev"),
-    )
-    btoks = F.broadcast(toks_map)
-    bstr = F.broadcast(str_map)
-    cand_cols = list(candidates.columns)  # preserved like the fused path
-
-    def _lev_len(side: str):
-        # length of the levenshtein operand without fetching it
-        col = F.col(f"len_{side}")
-        return F.least(col, F.lit(lev_prefix)) if lev_prefix is not None else col
-
-    base = (
-        candidates
-        .join(btoks.select(F.col("conv_id").alias("conv_id_a"),
-                           F.col("sig_len").alias("len_a"),
-                           F.col("toks").alias("toks_a"),
-                           F.col("n_toks").alias("nt_a")), "conv_id_a")
-        .join(btoks.select(F.col("conv_id").alias("conv_id_b"),
-                           F.col("sig_len").alias("len_b"),
-                           F.col("toks").alias("toks_b"),
-                           F.col("n_toks").alias("nt_b")), "conv_id_b")
-        .withColumn("_inter", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "token_jaccard",
-            F.when(F.col("nt_a") + F.col("nt_b") - F.col("_inter") > 0,
-                   F.col("_inter") / (F.col("nt_a") + F.col("nt_b") - F.col("_inter")))
-             .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "len_ratio",
-            F.least("len_a", "len_b") / F.greatest("len_a", "len_b", F.lit(1)),
-        )
-        .withColumn("_maxlen", F.greatest(_lev_len("a"), _lev_len("b"), F.lit(1)))
-        .withColumn(
-            "_req",
-            (F.lit(threshold) - F.lit(w_jacc) * F.col("token_jaccard")) / F.lit(w_lev),
-        )
-        .withColumn(
-            "_k",
-            F.floor((F.lit(1.0) - F.col("_req")) * F.col("_maxlen")).cast("int")
-            + F.lit(1),
-        )
-        .withColumn(
-            "_smax",
-            F.lit(w_lev) * F.lit(100.0) / 100.0
-            + F.lit(w_jacc) * F.col("token_jaccard"),
-        )
-        .select(*cand_cols, "token_jaccard", "len_ratio",
-                "_maxlen", "_req", "_k", "_smax")
-        # both branches read this once-computed stage; without the persist
-        # each branch would re-run the toks joins AND Catalyst could push
-        # branch predicates into the jaccard projection
-        .persist()
-    )
-    if persist_handles is not None:
-        persist_handles.append(base)
-    skip = (
-        base.filter(F.col("_smax") < F.lit(threshold))
-        .withColumn("_d", F.lit(-1).cast("int"))
-    )
-    survivors = (
-        base.filter(~(F.col("_smax") < F.lit(threshold)))
-        .join(bstr.select(F.col("conv_id").alias("conv_id_a"),
-                          F.col("sig_lev").alias("_a")), "conv_id_a")
-        .join(bstr.select(F.col("conv_id").alias("conv_id_b"),
-                          F.col("sig_lev").alias("_b")), "conv_id_b")
-        .withColumn("_d", F.expr("levenshtein(_a, _b, greatest(_k, 1))"))
-        .drop("_a", "_b")
-    )
-    return (
-        skip.unionByName(survivors)
-        .withColumn(
-            "lev_ratio",
-            F.when(F.col("_d") >= 0,
-                   100.0 * (1.0 - F.col("_d") / F.col("_maxlen")))
-             .otherwise(
-                 F.greatest(
-                     F.least(
-                         100.0 * (1.0 - (F.col("_k") + 1) / F.col("_maxlen")),
-                         100.0 * F.col("_req") - F.lit(1e-6),
-                     ),
-                     F.lit(0.0),
-                 )
-             ),
-        )
-        .withColumn(
-            "score",
-            F.lit(w_lev) * F.col("lev_ratio") / 100.0
-            + F.lit(w_jacc) * F.col("token_jaccard"),
-        )
-        .withColumn(
-            "is_match",
-            ((F.col("_d") >= 0) & (F.col("score") >= F.lit(threshold))).cast("int"),
-        )
-        .drop("_maxlen", "_req", "_k", "_smax", "_d")
-    )
 
 
 def attach_labels(candidates: DataFrame, labeled_pairs: DataFrame) -> DataFrame:

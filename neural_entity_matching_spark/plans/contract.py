@@ -337,35 +337,48 @@ LEFT JOIN norms nb ON nb.doc_id = p.id_b
 
 
 def q_pair_features_banded(spark, sf_dir):
-    """F7 fast ML feature table: ``featurize_pairs(lev_band=0.2,
-    hashed_tokens=True)`` — the trained-matcher featurize treatment
-    (round-5 verdict item #4). lev_ratio is the exact expression for
-    pairs whose edit distance is within k = floor(0.2 * maxlen) and the
-    deterministic upper bound 100*(1-(k+1)/maxlen) beyond it; jaccard
-    comes from once-per-signature hashed token arrays. The oracle
-    computes the FULL DuckDB levenshtein and applies the identical
-    band/clamp arithmetic — every float expression matches term for
-    term, so the hash compares unrounded doubles."""
-    from neural_entity_matching_spark.operators.scoring import featurize_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    sigs = docs.select(F.col("doc_id").alias("conv_id"),
-                       F.col("text").alias("sig_text"))
-    d = docs.select("doc_id", "source")
-    # same oracle-harness-only quadratic block as q_pair_features
-    cands = (
-        d.select(F.col("source"), F.col("doc_id").alias("conv_id_a"))
-        .join(d.select(F.col("source"), F.col("doc_id").alias("conv_id_b")),
-              "source")
-        .filter(F.col("conv_id_a") < F.col("conv_id_b"))
-        .select("conv_id_a", "conv_id_b")
+    """F7 banded pair features, all JVM expressions: lev_ratio from
+    Spark's banded ``levenshtein(a, b, k)`` over the first 512 chars with
+    k = floor(0.2 * maxlen) — the exact ratio for pairs whose edit
+    distance is within k, the deterministic upper bound
+    100*(1-(k+1)/maxlen) beyond it — plus the string-token jaccard and
+    length ratio of similarity.py. The oracle computes the FULL DuckDB
+    levenshtein and applies the identical band/clamp arithmetic — every
+    float expression matches term for term, so the hash compares
+    unrounded doubles."""
+    from neural_entity_matching_spark.functions.similarity import (
+        len_ratio,
+        token_jaccard,
     )
-    feats = featurize_pairs(cands, sigs, lev_prefix=512,
-                            lev_band=0.2, hashed_tokens=True)
-    return feats.select(
-        F.col("conv_id_a").alias("id_a"),
-        F.col("conv_id_b").alias("id_b"),
-        "lev_ratio", "token_jaccard", "len_ratio",
+
+    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    # same oracle-harness-only quadratic block as q_pair_features
+    pairs = (
+        d.select("source", F.col("doc_id").alias("id_a"),
+                 F.col("text").alias("ta"))
+        .join(d.select("source", F.col("doc_id").alias("id_b"),
+                       F.col("text").alias("tb")), "source")
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+    return (
+        pairs
+        .withColumn("_la", F.substring("ta", 1, 512))
+        .withColumn("_lb", F.substring("tb", 1, 512))
+        .withColumn("_maxlen",
+                    F.greatest(F.length("_la"), F.length("_lb"), F.lit(1)))
+        .withColumn("_k", F.floor(F.lit(0.2) * F.col("_maxlen")).cast("int"))
+        # SQL form: the banded threshold argument is only accepted as an
+        # expression through the SQL function
+        .withColumn("_d", F.expr("levenshtein(_la, _lb, greatest(_k, 0))"))
+        .select(
+            "id_a", "id_b",
+            F.when(F.col("_d") >= 0,
+                   100.0 * (1.0 - F.col("_d") / F.col("_maxlen")))
+             .otherwise(100.0 * (1.0 - (F.col("_k") + 1) / F.col("_maxlen")))
+             .alias("lev_ratio"),
+            token_jaccard(F.col("ta"), F.col("tb")).alias("token_jaccard"),
+            len_ratio(F.col("ta"), F.col("tb")).alias("len_ratio"),
+        )
     )
 
 

@@ -38,7 +38,6 @@ from neural_entity_matching_spark.operators.clustering import (
 from neural_entity_matching_spark.operators.scoring import (
     fast_threshold_score,
     featurize_pairs,
-    threshold_scorer,
 )
 from neural_entity_matching_spark.sources.io import CheckpointManager, fingerprint
 
@@ -53,8 +52,7 @@ STAGE_FIELDS = {
     "candidates": ("blocker", "num_hashes", "bands", "char_ngram", "seed",
                    "block_cap", "seq_min_tokens", "seq_cutoff",
                    "seq_max_token_df"),
-    "scored": ("scorer", "threshold", "w_lev", "w_jacc", "exact_scores",
-               "ml_seed", "feat_lev_band", "feat_hashed_tokens"),
+    "scored": ("scorer", "threshold", "w_lev", "w_jacc", "ml_seed"),
     "clusters": (),
 }
 
@@ -76,9 +74,12 @@ class PipelineConfig:
     seq_min_tokens: int = 2
     seq_cutoff: float = 60.0
     seq_max_token_df: int | None = 1000
-    # scoring axis — 'threshold' (deterministic linear) or a trained
-    # matcher 'logistic' | 'gbt' | 'random_forest' (reference M1, trained
-    # on the post-blocking labeled candidates; requires labeled_pairs).
+    # scoring axis — 'threshold' (deterministic linear, scored by the
+    # fused JVM cascade fast_threshold_score) or a trained matcher
+    # 'logistic' | 'gbt' | 'random_forest' over the featurize_pairs table
+    # (reference M1, trained on the post-blocking labeled candidates;
+    # requires labeled_pairs). Neither path takes a physical or
+    # feature-variant option.
     # A trained scorer's output depends on the label table; run_pipeline
     # digests labeled_pairs and folds it into the scored-stage
     # fingerprint, so a changed label set re-scores instead of resuming
@@ -88,33 +89,6 @@ class PipelineConfig:
     threshold: float = 0.55
     w_lev: float = 0.5
     w_jacc: float = 0.5
-    # broadcast the signature table into the featurize joins — valid while
-    # signatures fit an executor; keep False at full table scale
-    broadcast_signatures: bool = False
-    # in-partition sort of candidates by conv_id_a before scoring for
-    # payload-probe cache locality — pays only on bandwidth-starved
-    # few-core executors; measured a net loss on many-core hosts
-    # (see compute_scored)
-    cluster_pairs_by_a: bool = False
-    # split the scoring broadcast into a toks-only probe map plus a
-    # string map probed only by jaccard survivors — bit-identical
-    # decisions/scores, ~75% fewer broadcast bytes per probe (93% of
-    # pairs never fetch the string); requires broadcast_signatures.
-    # Physical knob: excluded from stage fingerprints like the other
-    # broadcast/sort toggles, so flipping it never invalidates snapshots
-    split_broadcast: bool = False
-    # exact_scores=False uses the banded-levenshtein cascade: identical
-    # match decisions, exact scores on matches, upper-bounded scores on
-    # non-matches, ~order-of-magnitude less edit-distance work
-    exact_scores: bool = False
-    # feature-table knobs for the paths that run featurize_pairs (trained
-    # scorers and exact_scores=True): banded lev_ratio (exact within the
-    # band, deterministic upper bound beyond — see featurize_pairs) and
-    # once-per-signature hashed tokenization. SEMANTIC knobs (feature
-    # values feed the model), so both sit in the scored stage fingerprint
-    # — unlike the physical broadcast/sort toggles
-    feat_lev_band: float | None = None
-    feat_hashed_tokens: bool = False
     # bumped whenever ANY persisted stage output changes meaning for the
     # same config fields ("2": round-4 minhash family change — old
     # candidate snapshots are key-space-incompatible and must not resume)
@@ -311,15 +285,6 @@ def run_pipeline(
 
     def compute_scored():
         cand = cand_res.df
-        if cfg.cluster_pairs_by_a:
-            # run-length locality: consecutive pairs share conv_id_a, so
-            # the payload probe's entry stays cache-hot. Opt-in: it pays
-            # on bandwidth-starved 1-core executors (measured in
-            # bench/scaling_worker.py) but A/B measured a net LOSS on
-            # local[32] at 261k AND 5.0M pairs (the in-partition sort's
-            # fixed cost exceeds the probe-locality win when many cores
-            # share one cache hierarchy).
-            cand = cand.sortWithinPartitions("conv_id_a")
         if cfg.scorer in ("logistic", "gbt", "random_forest"):
             # trained matcher (reference M1): featurize once, train on the
             # label-attached candidates (negatives implied by absence),
@@ -338,34 +303,16 @@ def run_pipeline(
             if labeled_pairs is None:
                 raise ValueError(
                     f"scorer={cfg.scorer!r} needs labeled_pairs")
-            feats = featurize_pairs(
-                cand, sig_res.df,
-                broadcast_signatures=cfg.broadcast_signatures,
-                lev_band=cfg.feat_lev_band,
-                hashed_tokens=cfg.feat_hashed_tokens,
-            ).persist()
+            feats = featurize_pairs(cand, sig_res.df).persist()
             feat_handle.append(feats)  # fit + transform share one pass
             labeled = attach_labels(feats, labeled_pairs)
             if is_single_class(labeled):
                 return degenerate_scorer(feats)
             model = train_scorer(labeled, model=cfg.scorer, seed=cfg.ml_seed)
             return score_with_model(model, feats, threshold=cfg.threshold)
-        if cfg.exact_scores:
-            return threshold_scorer(
-                featurize_pairs(cand, sig_res.df,
-                                broadcast_signatures=cfg.broadcast_signatures,
-                                lev_band=cfg.feat_lev_band,
-                                hashed_tokens=cfg.feat_hashed_tokens),
-                threshold=cfg.threshold, w_lev=cfg.w_lev, w_jacc=cfg.w_jacc,
-            )
         return fast_threshold_score(
             cand, sig_res.df, threshold=cfg.threshold,
             w_lev=cfg.w_lev, w_jacc=cfg.w_jacc,
-            broadcast_signatures=cfg.broadcast_signatures,
-            split_broadcast=cfg.split_broadcast,
-            # the split path's internal jaccard-stage persist is released
-            # with the featurize handle after the scored snapshot lands
-            persist_handles=feat_handle,
         )
 
     # fold the label-set identity into the scored fingerprint for trained

@@ -2,6 +2,7 @@
 featurize+threshold path, with exact scores on every matched pair."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from neural_entity_matching_spark.functions.normalize import build_signatures
 from neural_entity_matching_spark.operators.blocking import lsh_block
@@ -14,14 +15,17 @@ from neural_entity_matching_spark.operators.scoring import (
 LSH = dict(num_hashes=128, bands=64, char_ngram=8, seed=42)
 
 
-def test_fast_scorer_decision_equivalence(fixture_small):
+@pytest.mark.parametrize("broadcast_signatures", [False, True])
+def test_fast_scorer_decision_equivalence(fixture_small, broadcast_signatures):
     transcripts, _, _ = fixture_small
     sigs = build_signatures(transcripts).cache()
     cands, _ = lsh_block(sigs, block_cap=35, **LSH)
     cands = cands.cache()
 
     exact = threshold_scorer(featurize_pairs(cands, sigs), threshold=0.55).cache()
-    fast = fast_threshold_score(cands, sigs, threshold=0.55).cache()
+    fast = fast_threshold_score(
+        cands, sigs, threshold=0.55,
+        broadcast_signatures=broadcast_signatures).cache()
 
     key = ["conv_id_a", "conv_id_b"]
     e = {tuple(r[k] for k in key): (r["is_match"], r["score"]) for r in exact.collect()}
@@ -37,51 +41,6 @@ def test_fast_scorer_decision_equivalence(fixture_small):
         else:
             assert fs < 0.55  # non-match upper bound stays sub-threshold
     assert n_match > 0
-
-
-def test_split_broadcast_bitexact(fixture_small):
-    """split_broadcast=True (toks-only probe map + string map probed only
-    by jaccard survivors) must return bit-identical rows to the fused
-    single-broadcast path: same pairs, same decisions, same score AND
-    lev_ratio floats (the expressions are copied verbatim, so even the
-    sub-threshold upper bounds must agree exactly)."""
-    transcripts, _, _ = fixture_small
-    sigs = build_signatures(transcripts).cache()
-    cands, _ = lsh_block(sigs, block_cap=35, **LSH)
-    cands = cands.cache()
-
-    fused = fast_threshold_score(
-        cands, sigs, threshold=0.55, broadcast_signatures=True).cache()
-    handles = []
-    split = fast_threshold_score(
-        cands, sigs, threshold=0.55, broadcast_signatures=True,
-        split_broadcast=True, persist_handles=handles).cache()
-    # the split path's internal jaccard-stage persist is handed back for
-    # caller cleanup — exactly one handle, cached until released
-    assert len(handles) == 1 and handles[0].storageLevel.useMemory
-
-    assert sorted(fused.columns) == sorted(split.columns)
-    key = ["conv_id_a", "conv_id_b"]
-    cols = ["is_match", "score", "lev_ratio", "token_jaccard", "len_ratio"]
-    fu = {tuple(r[k] for k in key): tuple(r[c] for c in cols)
-          for r in fused.collect()}
-    sp = {tuple(r[k] for k in key): tuple(r[c] for c in cols)
-          for r in split.collect()}
-    assert fu == sp
-    assert sum(v[0] for v in fu.values()) > 0  # non-vacuous: has matches
-    assert any(v[0] == 0 for v in fu.values())  # and non-matches
-    for h in handles:
-        h.unpersist()
-
-
-def test_split_broadcast_requires_broadcast(fixture_small):
-    import pytest
-
-    transcripts, _, _ = fixture_small
-    sigs = build_signatures(transcripts)
-    cands, _ = lsh_block(sigs, block_cap=35, **LSH)
-    with pytest.raises(ValueError, match="split_broadcast"):
-        fast_threshold_score(cands, sigs, split_broadcast=True)
 
 
 def test_fast_scorer_threshold_boundary_bitexact(spark):
@@ -112,58 +71,6 @@ def test_fast_scorer_threshold_boundary_bitexact(spark):
         e = {tuple(r[k] for k in key): r["is_match"] for r in exact.collect()}
         f = {tuple(r[k] for k in key): r["is_match"] for r in fast.collect()}
         assert e == f, (t, {p: (e[p], f[p]) for p in e if e[p] != f[p]})
-
-
-def test_split_broadcast_survivor_join_no_hot_key_exchange(spark):
-    """Round-5 verdict stretch item: split-broadcast survivors concentrate
-    on near-duplicate-heavy keys (one entity with many near-dups puts ~all
-    string fetches on ONE conv_id_a). The string-map probe must stay a
-    BroadcastHashJoin — no shuffle keyed on the survivor ids exists in the
-    plan, so key skew cannot create a hot-partition exchange at 100x."""
-    import io
-    from contextlib import redirect_stdout
-
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    vocab = [f"tok{i}" for i in range(300)]
-    base = " ".join(rng.choice(vocab, 30))
-    rows = [("hot", base)]
-    # 300 near-duplicates of ONE entity: every (hot, dup_i) pair survives
-    # the jaccard gate and fetches strings, all sharing conv_id_a='hot'
-    for i in range(300):
-        toks = base.split()
-        toks[rng.randint(len(toks))] = rng.choice(vocab)
-        rows.append((f"dup{i:03d}", " ".join(toks)))
-    # plus dissimilar entities whose pairs all skip
-    for i in range(300):
-        rows.append((f"neg{i:03d}", " ".join(rng.choice(vocab, 30))))
-    sigs = spark.createDataFrame(rows, ["conv_id", "sig_text"]).cache()
-    pairs = spark.createDataFrame(
-        [("hot", f"dup{i:03d}") for i in range(300)]
-        + [("hot", f"neg{i:03d}") for i in range(300)],
-        ["conv_id_a", "conv_id_b"],
-    ).cache()
-
-    handles = []
-    scored = fast_threshold_score(
-        pairs, sigs, threshold=0.55, broadcast_signatures=True,
-        split_broadcast=True, persist_handles=handles).cache()
-    agg = scored.agg(F.count("*").alias("n"),
-                     F.sum("is_match").alias("m")).collect()[0]
-    assert agg["n"] == 600 and agg["m"] >= 290  # skew fixture is real
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        scored.explain("formatted")
-    plan = buf.getvalue()
-    # every join below the scorer is a broadcast probe: a SortMergeJoin /
-    # ShuffledHashJoin here would mean survivor rows shuffle on their
-    # (skewed) ids
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2  # the two string probes
-    for h in handles + [scored, sigs, pairs]:
-        h.unpersist()
 
 
 def test_featurize_fused_udf_bitexact_vs_jvm_expressions(fixture_small):

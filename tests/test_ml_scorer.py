@@ -51,31 +51,6 @@ def test_trained_scorer_hits_f1_gate(featurized_labeled, model):
     assert res.f1 >= 0.99, res
 
 
-def test_banded_featurize_hits_same_gates(featurized_labeled, fixture_small):
-    """The fast ML feature table (lev_band + hashed_tokens — exact
-    lev_ratio within the band, deterministic upper bound beyond, hashed
-    once-per-signature tokenization) must train a matcher that clears the
-    SAME F1 and AP gates as the exact table: the band only collapses
-    pairs on the far (all-negative) side of the decision surface."""
-    from neural_entity_matching_spark.operators.evaluation import (
-        average_precision,
-    )
-
-    transcripts, labeled, _ = fixture_small
-    sigs = build_signatures(transcripts).cache()
-    candidates, _ = lsh_block(sigs, block_cap=35, **LSH)
-    feats = attach_labels(
-        featurize_pairs(candidates, sigs, lev_band=0.20, hashed_tokens=True),
-        labeled,
-    ).cache()
-    m = train_scorer(feats, model="logistic")
-    scored = score_with_model(m, feats).cache()
-    res = pairwise_f1(scored, labeled, universe=candidates)
-    assert res.f1 >= 0.99, res
-    ap = average_precision(scored)
-    assert ap >= 0.99, ap
-
-
 def test_embedding_feature_e2e(featurized_labeled):
     """Flag-on e2e: the matcher trains and hits the gate with the optional
     sentence-embedding (hash stand-in) cosine as a sixth feature."""

@@ -126,31 +126,3 @@ def test_fingerprint_folds_minhash_family(monkeypatch):
     after = {s: cfg.fingerprint(s, "up") for s in before}
     for stage in before:
         assert before[stage] != after[stage], stage
-
-
-def test_split_broadcast_config_same_clusters(spark, fixture_small, tmp_path):
-    """split_broadcast is a physical knob: same clusters as the fused
-    plan, and — because it is excluded from stage fingerprints like the
-    other broadcast/sort toggles — flipping it on a warm checkpoint dir
-    RESUMES the scored snapshot instead of recomputing it."""
-    transcripts, _, _ = fixture_small
-
-    fused, _ = run_pipeline(
-        spark, transcripts, str(tmp_path / "f"),
-        PipelineConfig(broadcast_signatures=True),
-        input_fingerprint="fx-small", run_id="f1",
-    )
-    split, _ = run_pipeline(
-        spark, transcripts, str(tmp_path / "s"),
-        PipelineConfig(broadcast_signatures=True, split_broadcast=True),
-        input_fingerprint="fx-small", run_id="s1",
-    )
-    assert _clusters_dict(fused) == _clusters_dict(split)
-
-    # warm resume across the flag flip: nothing recomputes
-    _, rep = run_pipeline(
-        spark, transcripts, str(tmp_path / "f"),
-        PipelineConfig(broadcast_signatures=True, split_broadcast=True),
-        input_fingerprint="fx-small", run_id="f2",
-    )
-    assert rep.stages["scored"]["resumed"]

@@ -174,6 +174,58 @@ def test_myers_lev_word_boundaries():
         assert d[i] == _lev_dp_oracle(x, y), (i, d[i])
 
 
+def test_myers_peq_guard_splits_small_wide_alphabet_chunks(monkeypatch):
+    """A chunk of few rows over a wide alphabet must still split until its
+    (W, A, B) Peq table fits PEQ_BUDGET_BYTES: every leaf kernel call with
+    more than one row stays within the budget, and distances stay exact."""
+    import random
+
+    from neural_entity_matching_spark.functions import similarity as sim
+
+    budget = 64 << 10
+    monkeypatch.setattr(sim, "PEQ_BUDGET_BYTES", budget)
+    orig = sim._myers_lev_chunk
+    calls = []  # (rows, peq bytes, nested calls) per kernel call
+    stack = []
+
+    def spy(a_strs, b_strs, tile=32):
+        stack.append(0)
+        try:
+            return orig(a_strs, b_strs, tile)
+        finally:
+            nested = stack.pop()
+            if stack:
+                stack[-1] += 1
+            a_mat, a_len = sim._encode_batch(a_strs)
+            b_mat, _ = sim._encode_batch(b_strs)
+            _, _, A = sim._lev_codes(a_mat, b_mat)
+            W = (int(a_len.max()) + 63) // 64
+            calls.append((len(a_strs), A * W * len(a_strs) * 8, nested))
+
+    monkeypatch.setattr(sim, "_myers_lev_chunk", spy)
+
+    # 32 pairs (fewer than 64 rows), each pattern 70 distinct astral code
+    # points of its own: ~2,300 symbols in one chunk, Peq ~1.2 MB
+    rng = random.Random(3)
+    pairs = []
+    for i in range(32):
+        a = [chr(0x20000 + 80 * i + j) for j in range(70)]
+        b = list(a)
+        for _ in range(rng.randint(0, 12)):
+            b[rng.randrange(len(b))] = chr(0x30000 + rng.randrange(500))
+        pairs.append(("".join(a), "".join(b[: rng.randint(60, 70)])))
+    a = np.array([p[0] for p in pairs], dtype=object)
+    b = np.array([p[1] for p in pairs], dtype=object)
+    d = sim._lev_distance_batch(a, b)
+
+    assert any(nested for _, _, nested in calls)  # the guard split
+    for rows, peq_bytes, nested in calls:
+        if not nested and rows > 1:
+            assert peq_bytes <= budget, (rows, peq_bytes)
+    for i, (x, y) in enumerate(pairs):
+        assert d[i] == _lev_dp_oracle(x, y), (i, d[i])
+
+
 ws_texts = st.text(alphabet="ab \t\n\x0b\x0c\r\xa0 ", max_size=30)
 
 
