@@ -7,7 +7,7 @@ plus the flagship ER pipeline (signature -> LSH block -> featurize ->
 score -> cluster) over a deterministic synthetic transcript corpus sized
 to the scale factor.
 
-Measurement protocol (the same discipline as bench/scaling.py): the
+Measurement protocol (interleaved rounds, median and min): the
 WHOLE query set runs ``SPARK_GRAFT_BENCH_ROUNDS`` (default 3) full
 interleaved rounds and the reported per-query number is the MEDIAN
 across rounds; the raw per-round values are published under
@@ -70,15 +70,13 @@ def run_er_pipeline(spark, transcripts) -> dict:
 
     t0 = time.monotonic()
     sigs = build_signatures(transcripts).cache()
-    # plan choice is per operating point, both measured: the GROUPED
-    # xxhash64-id plan wins here (er_pipeline 7.7s vs 13.9s median at
-    # sf0.1/local[32] — the packed plan's dense-rank mapping build is
-    # fixed-cost job latency that dominates a 5.7k-doc corpus), while the
-    # PACKED single-long plan wins the executor-scaling harness at 176k
-    # docs / 30M pair rows (bench/scaling_worker.py, BENCH/BASELINE.md).
-    # No locality sort of the pairs either: sortWithinPartitions before
-    # scoring A/B measured a net LOSS on local[32] at 261k AND 5.0M pairs
-    # — it only pays on bandwidth-starved 1-core executors.
+    # lsh_block's grouped xxhash64-id plan: it beat a dense-rank packed
+    # plan here (er_pipeline 7.7s vs 13.9s median at sf0.1/local[32] — the
+    # dense-rank mapping build is fixed-cost job latency that dominates a
+    # 5.7k-doc corpus). No locality sort of the pairs either:
+    # sortWithinPartitions before scoring A/B measured a net LOSS on
+    # local[32] at 261k AND 5.0M pairs — it only pays on
+    # bandwidth-starved 1-core executors.
     candidates, stats = lsh_block(
         sigs, num_hashes=128, bands=64, char_ngram=8, seed=42, block_cap=35,
         decode_ids=False,
@@ -217,12 +215,12 @@ def main() -> None:
         for name in raw[0]
     }
     total = round(sum(queries.values()), 3)
-    # capability line (declared protocol, mirrors bench/scaling.py's
-    # min-wall estimator): per-query min across rounds. Outputs are
-    # byte-identical across rounds, so the minimum is the host-noise-
-    # robust location estimate — the number the plan delivers when the
-    # host delivers its nominal resources. Median stays the headline
-    # 'value' for cross-round comparability; both are published.
+    # capability line (declared protocol, min-wall estimator): per-query
+    # min across rounds. Outputs are byte-identical across rounds, so the
+    # minimum is the host-noise-robust location estimate — the number the
+    # plan delivers when the host delivers its nominal resources. Median
+    # stays the headline 'value' for cross-round comparability; both are
+    # published.
     queries_min = {
         name: round(min(r[name] for r in raw), 3) for name in raw[0]
     }

@@ -21,11 +21,15 @@ Shuffle discipline (this is the stage that binds at cluster scale):
   before any exchange — pair rows shuffle as 16 bytes instead of two
   strings, and the final decode back to real ids is a broadcast map join;
 * block keys are int64 where the producer allows (LSH band keys);
-* oversized blocks are truncated to cap+1 members inside the first
-  exchange (row_number), so a mega block never materializes a list nor
-  fans out pairs that a later filter would drop;
-* intermediates are persisted only while pair generation runs and are
-  unpersisted once the pair set is materialized (``materialize=True``).
+* the grouped path (every one-table caller) builds each block's member
+  array in one exchange and applies the cap to the array sizes; a block
+  above ``physical_block_cap`` members makes it rebuild through a size
+  pass and an eligibility join, so that block's array is buffered once.
+  The salted and two-table joins run the size pass first and join only
+  blocks within the cap;
+* every pair set is returned persisted and counted
+  (``stats.extra['n_pairs']``); intermediates are unpersisted before
+  the blocker returns.
 """
 
 from __future__ import annotations
@@ -134,20 +138,14 @@ def _decode_pairs(iid_pairs: DataFrame, mapping: DataFrame) -> DataFrame:
 def _finalize(
     pairs: DataFrame,
     stats: BlockingStats,
-    materialize: bool,
     release: list[DataFrame],
 ) -> tuple[DataFrame, BlockingStats]:
     """Materialize the pair set (persist + count -> stats.extra['n_pairs'])
-    and release every intermediate persist. With ``materialize=False`` the
-    caller owns materialization and the intermediates stay cached (callers
-    must unpersist via the returned stats.extra['_persisted'])."""
-    if materialize:
-        pairs = pairs.persist()
-        stats.extra["n_pairs"] = pairs.count()
-        for df in release:
-            df.unpersist()
-    else:
-        stats.extra["_persisted"] = release
+    and release every intermediate persist."""
+    pairs = pairs.persist()
+    stats.extra["n_pairs"] = pairs.count()
+    for df in release:
+        df.unpersist()
     return pairs, stats
 
 
@@ -237,255 +235,29 @@ def dense_id_mapping(
     return mapping
 
 
-_PACK = 1 << 32
-
-
-def packed_pairs_from_block_keys(
-    keys: DataFrame,
-    block_cap: int = 200,
-    id_col: str = "conv_id",
-    materialize: bool = True,
-    ids: DataFrame | None = None,
-    physical_block_cap: int = 1 << 20,
-) -> tuple[DataFrame, BlockingStats]:
-    """Grouped pair generation over DENSE ids with pairs packed into ONE
-    int64 (``iid_a * 2^32 + iid_b``) until after dedup.
-
-    Same semantics as ``grouped_pairs_from_block_keys(decode_ids=False)``
-    except the candidate ids are dense ranks (``dense_id_mapping``), not
-    xxhash64 codes. Why: the pair-dedup exchange is the largest exchange
-    of the blocking stage (measured 21.9s of a 71s blocking stage at 4x1
-    executors, n=176k sigs / 30.0M pre-dedup pair rows), and packing
-    halves its row payload and reduces the hash-aggregate to a
-    single-long key (measured 21.9s -> 15.1s). The persisted candidate
-    cache stays PACKED (half the bytes); the returned DataFrame projects
-    ``conv_id_a`` / ``conv_id_b`` from it lazily, so the unpack fuses
-    into whatever stage consumes the pairs (no extra materialization).
-
-    Requires < 2^31 distinct ids (packing headroom); raises otherwise —
-    callers beyond that operate on the xxhash64 path. Downstream payload
-    joins must map real ids through ``stats.extra['id_mapping']`` (dense
-    codes are not a hash of the id), and decoded pair orientation must be
-    canonicalized with least/greatest on the REAL ids (iid order is a
-    bijection, not the id sort order).
-
-    ``stats.extra['packed_pairs']`` holds the persisted packed handle in
-    both materialize branches; ``n_pairs`` exists only when
-    ``materialize=True`` (counting is materialization).
-
-    ``ids``: optional pre-distinct entity-id set (one row per entity,
-    e.g. the signature table's id column). Supplying it removes a
-    dropDuplicates exchange over the ~bands-per-doc membership set AND
-    lets ``keys`` stream straight into the grouping (no persist — it is
-    consumed exactly once), cutting the blocking stage's fixed job count
-    — the costs that do NOT shrink with executors and therefore tax the
-    N->4N scaling ratio hardest.
-
-    ``physical_block_cap``: automatic degenerate-distribution fallback.
-    The single-pass group buffers each block's member array BEFORE the
-    ``block_cap`` filter (8 bytes/member in one task); if the size stats
-    show any physical block above this threshold (default 2^20 members =
-    8 MB buffered), pair generation REBUILDS through the
-    prune-before-collect shape (sizes partial-agg -> eligibility join ->
-    collect over surviving memberships only) instead of relying on the
-    caller to know to switch to strategy='grouped'. The oversized arrays
-    are buffered once — in the stats job that detects them — and never
-    again; ``stats.extra['fallback']`` records the trigger.
-    """
-    if ids is not None:
-        raw = keys
-        id_src = ids.select(F.col(id_col).alias("_id"))
-        release_raw: list[DataFrame] = []
-    else:
-        raw = keys.persist()
-        id_src = raw.select(F.col(id_col).alias("_id")).dropDuplicates()
-        release_raw = [raw]
-    # dense_id_mapping returns the mapping already persisted + materialized
-    mapping = dense_id_mapping(id_src)
-    n_ids = getattr(mapping, "nem_n", None) or mapping.count()
-    if n_ids >= (1 << 31):
-        mapping.unpersist()
-        for df in release_raw:
-            df.unpersist()
-        raise ValueError(
-            f"{n_ids} distinct ids exceed the int32 packing range; "
-            "use grouped_pairs_from_block_keys instead"
-        )
-    narrow = (
-        raw.join(F.broadcast(mapping), raw[id_col] == mapping["_id"])
-        .select("iid", "block_key")
-    )
-    # SINGLE-PASS group: one exchange of the (iid, block_key) membership
-    # set builds both the member arrays and the size stats. The earlier
-    # two-pass shape (sizes agg -> eligibility join -> collect_list)
-    # exchanged the same ~64-bands-per-doc membership set TWICE (partial
-    # count-agg barely reduces it at ~1.3 members/block) plus a join —
-    # the blocking stage's dedup/expand exchanges are its scaling
-    # residual, so one full exchange is removed here. Trade-off: member
-    # lists buffer BEFORE the cap filter, bounded by the largest
-    # physical block at 8 bytes/member (a degenerate 10M-member block
-    # buffers 80 MB in one task); for adversarial distributions use
-    # strategy='grouped', whose eligibility join prunes before any list
-    # materializes.
-    grouped = (
-        narrow.groupBy("block_key")
-        .agg(F.sort_array(F.collect_list("iid")).alias("ids"))
-        .select("ids", F.size("ids").alias("bs"))
-        .persist()
-    )
-    release = release_raw + [grouped]
-    stats_row = grouped.agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(F.col("bs") > block_cap, 1).otherwise(0)).alias("over"),
-        F.sum(
-            F.when(F.col("bs") > block_cap, F.col("bs")).otherwise(0)
-        ).alias("dropped"),
-        F.max("bs").alias("max_bs"),
-    ).collect()[0]
-    stats = BlockingStats(
-        total_blocks=stats_row["total"] or 0,
-        oversized_blocks=stats_row["over"] or 0,
-        dropped_memberships=stats_row["dropped"] or 0,
-        capped_at=block_cap,
-        extra={"strategy": "packed", "id_mapping": mapping},
-    )
-    if (stats_row["max_bs"] or 0) > physical_block_cap:
-        # degenerate distribution: some physical block's member array is
-        # past the single-task buffering budget. It was buffered ONCE (in
-        # the stats job above); rebuild pair-gen through the
-        # prune-before-collect shape so it never materializes again.
-        grouped.unpersist()
-        narrow_p = narrow.persist()
-        sizes = narrow_p.groupBy("block_key").agg(F.count("*").alias("bs"))
-        eligible = sizes.filter(
-            (F.col("bs") >= 2) & (F.col("bs") <= block_cap)
-        ).select("block_key")
-        grouped = (
-            narrow_p.join(eligible, "block_key")
-            .groupBy("block_key")
-            .agg(F.sort_array(F.collect_list("iid")).alias("ids"))
-            .select("ids", F.size("ids").alias("bs"))
-            .persist()
-        )
-        release = release_raw + [narrow_p, grouped]
-        stats.extra["fallback"] = (
-            f"prune-before-collect (max physical block "
-            f"{stats_row['max_bs']} > {physical_block_cap})"
-        )
-    blocks = grouped.filter((F.col("bs") >= 2) & (F.col("bs") <= block_cap))
-    # ids sorted ascending -> iid_a < iid_b holds inside the packed long
-    pair_expr = (
-        "flatten(transform(sequence(1, size(ids) - 1), i -> "
-        "transform(slice(ids, i + 1, size(ids) - i), "
-        "y -> element_at(ids, i) * 4294967296L + y)))"
-    )
-    packed = (
-        blocks.select(F.explode(F.expr(pair_expr)).alias("pk"))
-        .dropDuplicates(["pk"])
-    )
-    packed = packed.persist()
-    stats.extra["packed_pairs"] = packed
-    if materialize:
-        stats.extra["n_pairs"] = packed.count()
-        for df in release:
-            df.unpersist()
-    else:
-        # n_pairs intentionally absent: counting IS materialization.
-        # packed is persisted (lazily) in both branches so the handle in
-        # extra['packed_pairs'] is always safe to reuse / unpersist.
-        stats.extra["_persisted"] = release + [packed]
-    pairs = packed.select(
-        F.floor(F.col("pk") / F.lit(_PACK)).cast("long").alias("conv_id_a"),
-        F.pmod("pk", F.lit(_PACK)).alias("conv_id_b"),
-    )
-    return pairs, stats
-
-
-def pairs_from_block_keys(
-    keys: DataFrame,
-    block_cap: int = 200,
-    id_col: str = "conv_id",
-    encode_ids: bool = True,
-    materialize: bool = True,
-) -> tuple[DataFrame, BlockingStats]:
-    """Self-join (block_key, id) on block_key with ``id_a < id_b``.
-
-    Replaces the reference's per-bucket ``itertools.combinations``
-    (blocking_algorithms.py:135-140) with the distributed equivalent:
-    equi-join on block key + range predicate, deduped across bands.
-
-    ``block_cap`` bounds per-block membership: blocks larger than the cap
-    are dropped entirely and counted in stats (the reference has no guard;
-    the north rule requires bounded caps). Pair volume per surviving block
-    is <= cap*(cap-1)/2.
-    """
-    keyed, mapping, release = _prepare_keys(keys, id_col, encode_ids)
-    sizes = keyed.groupBy("block_key").agg(F.count("*").alias("block_size")).persist()
-    release.append(sizes)
-    stats_row = sizes.agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(F.col("block_size") > block_cap, 1).otherwise(0)).alias("over"),
-        F.sum(
-            F.when(F.col("block_size") > block_cap, F.col("block_size")).otherwise(0)
-        ).alias("dropped"),
-    ).collect()[0]
-    stats = BlockingStats(
-        total_blocks=stats_row["total"] or 0,
-        oversized_blocks=stats_row["over"] or 0,
-        dropped_memberships=stats_row["dropped"] or 0,
-        capped_at=block_cap,
-        extra={"strategy": "join"},
-    )
-
-    eligible = sizes.filter(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= block_cap)
-    ).select("block_key")
-    # AQE coalesces / splits this join at runtime; eligible is usually the
-    # small side but can be large — leave the strategy to the optimizer.
-    pruned = keyed.join(eligible, "block_key")
-
-    a = pruned.select(F.col("block_key"), F.col("iid").alias("iid_a"))
-    b = pruned.select(F.col("block_key"), F.col("iid").alias("iid_b"))
-    pairs = (
-        a.join(b, "block_key")
-        .filter(F.col("iid_a") < F.col("iid_b"))
-        .select("iid_a", "iid_b")
-        .dropDuplicates(["iid_a", "iid_b"])
-    )
-    if mapping is not None:
-        pairs = _decode_pairs(pairs, mapping)
-    else:
-        pairs = pairs.select(F.col("iid_a").alias("conv_id_a"),
-                             F.col("iid_b").alias("conv_id_b"))
-    return _finalize(pairs, stats, materialize, release)
-
-
 def grouped_pairs_from_block_keys(
     keys: DataFrame,
     block_cap: int = 200,
     id_col: str = "conv_id",
     encode_ids: bool = True,
-    materialize: bool = True,
     decode_ids: bool = True,
     ids: DataFrame | None = None,
     physical_block_cap: int = 1 << 20,
 ) -> tuple[DataFrame, BlockingStats]:
     """Grouped pair generation, SINGLE-PASS (r7, guide §2.4): one exchange
     of the (iid, block_key) membership set builds the member arrays AND
-    the size stats — the same shape ``packed_pairs_from_block_keys`` uses.
-    The earlier two-pass form (sizes agg -> eligibility join ->
-    collect_list) exchanged the ~bands-per-doc membership set TWICE plus
-    a join; at 66k sigs / 4.2M membership rows the removed exchange+join
-    measured ~2s of a 15.5s blocking stage on local[32].
+    the size stats. The earlier two-pass form (sizes agg -> eligibility
+    join -> collect_list) exchanged the ~bands-per-doc membership set
+    TWICE plus a join; at 66k sigs / 4.2M membership rows the removed
+    exchange+join measured ~2s of a 15.5s blocking stage on local[32].
 
-    Memory trade (same as packed): member arrays buffer BEFORE the cap
-    filter, bounded by the largest physical block at 8 bytes/member. If
-    the size stats show any block above ``physical_block_cap`` the pair
-    generation REBUILDS through the prune-before-collect shape (sizes ->
-    eligibility join -> collect over survivors only), so a degenerate
-    distribution buffers the oversized arrays exactly once, in the stats
-    job that detects them. ``stats.extra['fallback']`` records the
-    trigger.
+    Memory trade: member arrays buffer BEFORE the cap filter, bounded by
+    the largest physical block at 8 bytes/member. If the size stats show
+    any block above ``physical_block_cap`` the pair generation REBUILDS
+    through the prune-before-collect shape (sizes -> eligibility join ->
+    collect over survivors only), so a degenerate distribution buffers
+    the oversized arrays exactly once, in the stats job that detects
+    them. ``stats.extra['fallback']`` records the trigger.
 
     ``ids``: optional pre-distinct entity-id set (one row per entity,
     e.g. the signature table's id column). Supplying it replaces the
@@ -493,7 +265,13 @@ def grouped_pairs_from_block_keys(
     of the entity table AND lets ``keys`` stream straight into the group
     exchange with no persist (the expensive key producer — the minhash
     band UDF — runs exactly once either way, but the cache write/read
-    and its materialization job disappear).
+    and its materialization job disappear). Precondition: ``ids`` covers
+    every id in ``keys``: an id missing from it has no mapping row, so
+    its pairs vanish in the decode join (or cannot be decoded through
+    ``stats.extra['id_mapping']`` with ``decode_ids=False``). Duplicate
+    ids in ``ids`` raise ValueError("duplicate input ids ..."); an
+    xxhash64 collision between distinct ids raises
+    ValueError("xxhash64 id collision ...").
     """
     release: list[DataFrame] = []
     if not encode_ids:
@@ -510,12 +288,18 @@ def grouped_pairs_from_block_keys(
             F.count("*").alias("n"), F.countDistinct("iid").alias("d")
         ).collect()[0]
         if chk["n"] != chk["d"]:
-            for df in release:
-                df.unpersist()
+            # failure path only: tell duplicate ids from a hash collision
+            n_distinct = mapping.agg(F.countDistinct("_id")).collect()[0][0]
+            mapping.unpersist()
+            if n_distinct != chk["n"]:
+                raise ValueError(
+                    f"duplicate input ids ({chk['n']} id rows, "
+                    f"{n_distinct} distinct); ids must be one row per entity"
+                )
             raise ValueError(
-                f"xxhash64 id collision or duplicate input ids "
-                f"({chk['n']} ids -> {chk['d']} hashes); pre-assign dense "
-                "int ids and call with encode_ids=False"
+                f"xxhash64 id collision ({chk['n']} ids -> {chk['d']} "
+                "hashes); pre-assign dense int ids and call with "
+                "encode_ids=False"
             )
         narrow = keys.select(F.xxhash64(F.col(id_col)).alias("iid"),
                              "block_key")
@@ -593,7 +377,7 @@ def grouped_pairs_from_block_keys(
     else:
         pairs = pairs.select(F.col("iid_a").alias("conv_id_a"),
                              F.col("iid_b").alias("conv_id_b"))
-    return _finalize(pairs, stats, materialize, release)
+    return _finalize(pairs, stats, release)
 
 
 def salted_pairs_from_block_keys(
@@ -602,18 +386,21 @@ def salted_pairs_from_block_keys(
     salt: int = 8,
     id_col: str = "conv_id",
     encode_ids: bool = True,
-    materialize: bool = True,
 ) -> tuple[DataFrame, BlockingStats]:
-    """Skew-spread variant of ``pairs_from_block_keys`` (north rule:
-    explicit salting). The left side of the self-join gets a deterministic
+    """Self-join pair generation with explicit salting (north rule).
+    Replaces the reference's per-bucket ``itertools.combinations``
+    (blocking_algorithms.py:135-140) with an equi-join on block key plus
+    an ``iid_a < iid_b`` range predicate, deduped across blocks; blocks
+    above ``block_cap`` members are dropped and counted in stats before
+    the join. The left side of the self-join gets a deterministic
     salt ``hash(id) % salt`` appended to the join key; the right side is
     replicated ``salt`` times, once per salt value. Every pair still meets
     exactly once, but a hot block's work fans out over ``salt`` reducers
     instead of one straggler task.
 
-    Caps still apply above the salted path: salting bounds per-task skew,
-    the cap bounds total quadratic work per block. Use this when block_cap
-    must be large (e.g. dedup with legitimate big near-dup families)."""
+    Salting bounds per-task skew, the cap bounds total quadratic work per
+    block. ``salt=1`` is the plain self-join. Use this when block_cap must
+    be large (e.g. dedup with legitimate big near-dup families)."""
     keyed, mapping, release = _prepare_keys(keys, id_col, encode_ids)
     sizes = keyed.groupBy("block_key").agg(F.count("*").alias("block_size")).persist()
     release.append(sizes)
@@ -657,7 +444,7 @@ def salted_pairs_from_block_keys(
     else:
         pairs = pairs.select(F.col("iid_a").alias("conv_id_a"),
                              F.col("iid_b").alias("conv_id_b"))
-    return _finalize(pairs, stats, materialize, release)
+    return _finalize(pairs, stats, release)
 
 
 def two_table_pairs_from_block_keys(
@@ -666,7 +453,6 @@ def two_table_pairs_from_block_keys(
     block_cap: int = 200,
     id_col: str = "conv_id",
     encode_ids: bool = True,
-    materialize: bool = True,
 ) -> tuple[DataFrame, BlockingStats]:
     """Two-table blocking: cross-side candidate pairs only.
 
@@ -729,7 +515,10 @@ def two_table_pairs_from_block_keys(
     else:
         pairs = pairs.select(F.col("iid_a").alias("conv_id_a"),
                              F.col("iid_b").alias("conv_id_b"))
-    return _finalize(pairs, stats, materialize, release)
+    return _finalize(pairs, stats, release)
+
+
+_PACK = 1 << 32
 
 
 def packed_two_table_pairs_from_block_keys(
@@ -737,30 +526,29 @@ def packed_two_table_pairs_from_block_keys(
     keys_rhs: DataFrame,
     block_cap: int = 200,
     id_col: str = "conv_id",
-    materialize: bool = True,
     ids_lhs: DataFrame | None = None,
     ids_rhs: DataFrame | None = None,
 ) -> tuple[DataFrame, BlockingStats]:
     """Two-table pair generation with cross-side pairs PACKED into one
-    int64 (``iid_lhs * 2^32 + iid_rhs``, each side's OWN dense rank)
-    through the dedup exchange — the two-table analogue of
-    ``packed_pairs_from_block_keys``.
+    int64 (``iid_lhs * 2^32 + iid_rhs``, each side's OWN dense rank,
+    ``dense_id_mapping``) through the dedup exchange.
 
     Why: ``two_table_pairs_from_block_keys`` shuffles two int64 columns
     through its pair dedup — the stage's largest exchange at
     decontamination scale (cross-corpus dedup blocks a training corpus
     against a benchmark corpus; the candidate volume is bands x corpus).
     Packing halves the dedup exchange's row payload and reduces the hash
-    aggregate to a single-long key, exactly the measured win of the
-    one-table packed path (21.9s -> 15.1s on 30.0M pre-dedup rows).
+    aggregate to a single-long key (r7 measured 21.9s -> 15.1s for a
+    30.0M-row one-table pair dedup packed the same way).
 
     Orientation is structural: the lhs rank ALWAYS occupies the high 32
     bits, so unpacking preserves the reference's ltable/rtable
-    convention with no least/greatest canonicalization. Same single-pass
-    per-side grouping as the one-table path: one exchange per side
-    builds member arrays AND sizes; blocks present on only one side drop
-    out in the inner join (inert, uncounted — same stats semantics as
-    the unpacked two-table path). Requires < 2^31 distinct ids PER SIDE.
+    convention with no least/greatest canonicalization. Each side gets the
+    single-pass grouping of ``grouped_pairs_from_block_keys``: one
+    exchange builds member arrays AND sizes; blocks present on only one
+    side drop out in the inner join (inert, uncounted — same stats
+    semantics as the unpacked two-table path). Requires < 2^31 distinct
+    ids PER SIDE.
 
     ``ids_lhs`` / ``ids_rhs``: optional pre-distinct id sets (e.g. each
     signature table's id column) — skips a dropDuplicates exchange per
@@ -833,12 +621,9 @@ def packed_two_table_pairs_from_block_keys(
         .persist()
     )
     stats.extra["packed_pairs"] = packed
-    if materialize:
-        stats.extra["n_pairs"] = packed.count()
-        for df in release:
-            df.unpersist()
-    else:
-        stats.extra["_persisted"] = release + [packed]
+    stats.extra["n_pairs"] = packed.count()
+    for df in release:
+        df.unpersist()
     pairs = packed.select(
         F.floor(F.col("pk") / F.lit(_PACK)).cast("long").alias("iid_a"),
         F.pmod("pk", F.lit(_PACK)).alias("iid_b"),
@@ -865,77 +650,34 @@ def lsh_block(
     char_ngram: int = 8,
     seed: int = 42,
     block_cap: int = 200,
-    strategy: str = "grouped",
-    materialize: bool = True,
     signatures_rhs: DataFrame | None = None,
     decode_ids: bool = True,
 ) -> tuple[DataFrame, BlockingStats]:
-    """Full MinHash-LSH blocker: signatures -> unique candidate pairs.
-
-    ``strategy``: 'grouped' (single exchange, default), 'join' (self-join
-    form), 'salted' (skew-spread join for very large caps), or 'packed'
-    (dense-rank ids packed into one int64 through the dedup exchange —
-    the cheapest exchange shape; see packed_pairs_from_block_keys).
+    """Full MinHash-LSH blocker: signatures -> unique candidate pairs,
+    through ``grouped_pairs_from_block_keys`` (single exchange).
 
     ``signatures_rhs``: two-table mode (reference ltable/rtable) — band
     keys are computed for both sides with the SAME seeded hash family and
-    only cross-side pairs are emitted. strategy='packed' routes to
-    ``packed_two_table_pairs_from_block_keys`` (per-side dense ranks,
-    single-int64 dedup exchange); every other strategy uses the standard
-    two-table join plan.
+    only cross-side pairs are emitted, through
+    ``two_table_pairs_from_block_keys``.
 
-    ``decode_ids=False`` (grouped/packed strategies): candidate pairs
-    keep the compact codes (xxhash64 for grouped, dense ranks for
-    packed); downstream payload joins key on the code and decode only
-    final matches via stats.extra['id_mapping'] — the right shape at
+    ``decode_ids=False`` (one-table mode): candidate pairs keep the
+    xxhash64 codes; downstream payload joins key on the code and decode
+    only final matches via stats.extra['id_mapping'] — the right shape at
     full scale, where decoding every candidate pair is pure wasted
-    shuffle width. With ``decode_ids=True`` (default) packed pairs are
-    decoded lazily through the mapping, canonicalized least/greatest."""
+    shuffle width."""
     keys = lsh_band_keys(signatures, num_hashes, bands, char_ngram, seed)
     if signatures_rhs is not None:
         keys_rhs = lsh_band_keys(signatures_rhs, num_hashes, bands,
                                  char_ngram, seed)
-        if strategy == "packed":
-            return packed_two_table_pairs_from_block_keys(
-                keys, keys_rhs, block_cap=block_cap,
-                materialize=materialize,
-                ids_lhs=signatures.select(F.col("conv_id")),
-                ids_rhs=signatures_rhs.select(F.col("conv_id")))
         return two_table_pairs_from_block_keys(
-            keys, keys_rhs, block_cap=block_cap, materialize=materialize)
-    if strategy == "grouped":
-        # signatures are one-row-per-entity: their id column is the
-        # pre-distinct id set (skips the raw-keys persist and the
-        # dropDuplicates exchange over the 64-bands-per-doc memberships)
-        return grouped_pairs_from_block_keys(
-            keys, block_cap=block_cap, materialize=materialize,
-            decode_ids=decode_ids,
-            ids=signatures.select(F.col("conv_id")))
-    if strategy == "packed":
-        # signatures are one-row-per-entity: pass their id column as the
-        # pre-distinct id set (skips a dropDuplicates exchange over the
-        # 64-bands-per-doc membership rows and the keys persist)
-        pairs, stats = packed_pairs_from_block_keys(
-            keys, block_cap=block_cap, materialize=materialize,
-            ids=signatures.select(F.col("conv_id")))
-        if decode_ids:
-            # lazy decode at the boundary: real ids, canonical order
-            m = F.broadcast(stats.extra["id_mapping"])
-            pairs = (
-                pairs
-                .join(m.select(F.col("iid").alias("conv_id_a"),
-                               F.col("_id").alias("_ida")), "conv_id_a")
-                .join(m.select(F.col("iid").alias("conv_id_b"),
-                               F.col("_id").alias("_idb")), "conv_id_b")
-                .select(F.least("_ida", "_idb").alias("conv_id_a"),
-                        F.greatest("_ida", "_idb").alias("conv_id_b"))
-            )
-        return pairs, stats
-    if strategy == "salted":
-        return salted_pairs_from_block_keys(
-            keys, block_cap=block_cap, materialize=materialize)
-    return pairs_from_block_keys(
-        keys, block_cap=block_cap, materialize=materialize)
+            keys, keys_rhs, block_cap=block_cap)
+    # signatures are one-row-per-entity: their id column is the
+    # pre-distinct id set (skips the raw-keys persist and the
+    # dropDuplicates exchange over the 64-bands-per-doc memberships)
+    return grouped_pairs_from_block_keys(
+        keys, block_cap=block_cap, decode_ids=decode_ids,
+        ids=signatures.select(F.col("conv_id")))
 
 
 def token_overlap_block(

@@ -80,7 +80,7 @@ def minhash_lsh_dedup(
         .select("conv_id", F.explode(udf("t")).alias("block_key"))
     )
     # single-pass grouped pair-gen with the doc table as the pre-distinct
-    # id set (r7): same candidate set as the join form, two fewer
+    # id set (r7): same candidate set as the salted self-join, two fewer
     # membership exchanges and no raw-keys persist
     cand, stats = grouped_pairs_from_block_keys(
         keys, block_cap=block_cap,
@@ -138,9 +138,8 @@ def cross_corpus_dedup(
     Pair generation runs the PACKED two-table path (per-side dense
     ranks, candidates dedup'd as one int64): at decontamination scale
     the candidate volume is bands x corpus and the pair-dedup exchange
-    is the stage's largest — packing halves its row payload, the same
-    measured win as the one-table packed path. Orientation is structural
-    (lhs rank in the high 32 bits).
+    is the stage's largest — packing halves its row payload.
+    Orientation is structural (lhs rank in the high 32 bits).
     """
     from neural_entity_matching_spark.operators.blocking import (
         packed_two_table_pairs_from_block_keys,

@@ -43,31 +43,16 @@ def train_scorer(
     model: str = "logistic",
     feature_cols: list[str] | None = None,
     seed: int = 0,
-    reg_param: float | None = None,
 ) -> PipelineModel:
     """Fit a matcher on featurized labeled pairs (columns FEATURE_COLS + y).
 
     The post-blocking training set is small (blocking pruned the n^2 space),
     so the fit is cheap; the returned model is broadcast by Spark ML's
     transform for distributed scoring.
-
-    ``reg_param`` (logistic only): L2 strength. spark.ml's default is 0 —
-    on linearly-separable match features an UNREGULARIZED logistic never
-    converges (coefficients diverge), so LBFGS always burns all 100
-    iterations; each iteration is a cluster-wide treeAggregate barrier,
-    which is pure anti-scaling overhead at high executor counts. The
-    reference's sklearn LogisticRegression regularizes BY DEFAULT (C=1.0
-    ~ regParam 1/n), so a small positive value is the faithful setting;
-    the committed parity/gate runs keep None (bit-compatibility with the
-    recorded bands).
     """
     cols = feature_cols or FEATURE_COLS
     assembler = VectorAssembler(inputCols=cols, outputCol="features")
     est = _MODELS[model](seed)
-    if reg_param is not None:
-        if model != "logistic":
-            raise ValueError("reg_param only applies to model='logistic'")
-        est = est.setRegParam(float(reg_param)).setElasticNetParam(0.0)
     return Pipeline(stages=[assembler, est]).fit(labeled_features)
 
 

@@ -150,7 +150,7 @@ def _event_rows(run_id: str, stage: str, snapshot_id: str,
                 stats) -> list[tuple]:
     """Cap/fallback events as queryable ``run_metrics`` rows (north rule:
     caps must be 'semantically visible', not just in-memory stats): one
-    row per event with a numeric value; the packed strategy's
+    row per event with a numeric value; the grouped blocker's
     prune-before-collect fallback trigger is folded into the event name
     (``fallback:<trigger>``, value 1). Same schema as the per-partition
     lineage rows with partition_id/rows_out/wall_ms null."""

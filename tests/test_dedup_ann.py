@@ -38,6 +38,18 @@ def test_minhash_lsh_dedup_matches_bruteforce(spark, docs):
     assert len(got_pairs) == 25  # frozen dataset structure
 
 
+
+def test_minhash_dedup_duplicate_doc_ids_fail_loudly(spark):
+    """Duplicate ids are a caller error, not a hash collision: the raise
+    names the real cause and does not send the caller to encode_ids."""
+    rows = [(1, "the same words here"), (2, "other text entirely"),
+            (1, "the same words again")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    with pytest.raises(ValueError, match="duplicate input ids") as err:
+        dedup.minhash_lsh_dedup(df, threshold=0.4)
+    assert "collision" not in str(err.value)
+
+
 def test_simhash_blocking_recall_for_small_hamming(spark, docs):
     """Pigeonhole guarantee: every pair with hamming <= 3 must be found."""
     pairs, _ = dedup.simhash_dedup(docs, max_hamming=3)

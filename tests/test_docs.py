@@ -28,3 +28,45 @@ def test_dist_zip_matches_package():
     assert sorted(zipped) == sorted(files)
     for name, data in files.items():
         assert zipped[name] == data, f"{name} is stale in dist/nem.zip"
+
+
+def _readme_section(title):
+    text = README.read_text()
+    start = text.index(f"## {title}\n")
+    end = text.find("\n## ", start + 1)
+    return text[start:end if end != -1 else None]
+
+
+_PATH = re.compile(r"^[\w.-]+(?:/[\w.-]*)*$")
+
+
+def _is_path(token):
+    return bool(_PATH.match(token)) and (
+        token.endswith("/") or re.search(r"\.\w+$", token) is not None)
+
+
+def test_readme_paths_exist():
+    """Every repo path named in README's Layout block and Verification
+    list exists. Layout entries nest by indentation under the directory
+    line above them; description continuation lines are not paths."""
+    layout = _readme_section("Layout").split("```")[1]
+    named = []
+    stack: list[tuple[int, Path]] = []
+    for line in layout.splitlines():
+        if not line.strip():
+            continue
+        indent = len(line) - len(line.lstrip())
+        token = line.split()[0]
+        if not _is_path(token):
+            continue
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        path = (stack[-1][1] if stack else ROOT) / token
+        named.append(path)
+        if token.endswith("/"):
+            stack.append((indent, path))
+    for span in re.findall(r"`([^`]+)`", _readme_section("Verification")):
+        named += [ROOT / t for t in span.split() if _is_path(t)]
+    assert len(named) > 20, "README path parse found too few entries"
+    missing = [p.relative_to(ROOT).as_posix() for p in named if not p.exists()]
+    assert not missing, f"README names missing paths: {missing}"

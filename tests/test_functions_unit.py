@@ -19,13 +19,12 @@ from neural_entity_matching_spark.functions.normalize import (
     normalize_text,
 )
 from neural_entity_matching_spark.functions.similarity import (
-    _indel_distance,
-    _jaro_winkler,
     fuzz_ratio_udf,
     jaro_winkler_udf,
     lev_ratio,
     token_jaccard,
 )
+from oracles import indel_distance, jaro_winkler
 
 
 # --- normalization (F9) ---
@@ -155,9 +154,9 @@ def test_lev_ratio_matches_python(spark):
 def test_fuzz_ratio_indel_parity(spark):
     """fuzz.ratio = 100*(1 - indel/(la+lb)) — indel distance via LCS
     (SURVEY.md §7 risk 1: distinct from plain Levenshtein)."""
-    assert _indel_distance("kitten", "sitting") == 5  # lev=3 but indel=5
-    assert _indel_distance("abc", "abc") == 0
-    assert _indel_distance("", "ab") == 2
+    assert indel_distance("kitten", "sitting") == 5  # lev=3 but indel=5
+    assert indel_distance("abc", "abc") == 0
+    assert indel_distance("", "ab") == 2
     df = spark.createDataFrame([("kitten", "sitting")], ["a", "b"]).select(
         fuzz_ratio_udf(F.col("a"), F.col("b")).alias("r")
     )
@@ -192,10 +191,10 @@ def test_edit_distance_filter_indel_metric(spark):
 
 def test_jaro_winkler_known_values(spark):
     # classic textbook values
-    assert abs(_jaro_winkler("MARTHA", "MARHTA") - 0.9611) < 1e-3
-    assert abs(_jaro_winkler("DWAYNE", "DUANE") - 0.84) < 1e-2
-    assert _jaro_winkler("", "") == 1.0
-    assert _jaro_winkler("a", "") == 0.0
+    assert abs(jaro_winkler("MARTHA", "MARHTA") - 0.9611) < 1e-3
+    assert abs(jaro_winkler("DWAYNE", "DUANE") - 0.84) < 1e-2
+    assert jaro_winkler("", "") == 1.0
+    assert jaro_winkler("a", "") == 0.0
     df = spark.createDataFrame([("MARTHA", "MARHTA")], ["a", "b"]).select(
         jaro_winkler_udf(F.col("a"), F.col("b")).alias("j")
     )

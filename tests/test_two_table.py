@@ -117,17 +117,29 @@ def test_packed_two_table_equals_unpacked(spark):
 
 
 def test_two_table_lsh_packed_strategy(fixture_small):
-    """lsh_block(strategy='packed', signatures_rhs=...) routes through the
-    packed two-table path and matches the default two-table plan."""
+    """The packed two-table path on LSH band keys of both sides (the
+    decontamination shape) matches the default two-table plan of
+    lsh_block(signatures_rhs=...) at the LSH operating point."""
+    from neural_entity_matching_spark.operators.blocking import (
+        lsh_band_keys,
+        packed_two_table_pairs_from_block_keys,
+    )
+
     transcripts, _, _ = fixture_small
     sigs = build_signatures(transcripts).cache()
     lhs = sigs.filter(~F.col("conv_id").rlike("-d[0-9]$")).cache()
     rhs = sigs.filter(F.col("conv_id").rlike("-d[0-9]$")).cache()
     p_def, s_def = lsh_block(lhs, block_cap=35, signatures_rhs=rhs, **LSH)
-    p_pkd, s_pkd = lsh_block(lhs, block_cap=35, signatures_rhs=rhs,
-                             strategy="packed", **LSH)
+    p_pkd, s_pkd = packed_two_table_pairs_from_block_keys(
+        lsh_band_keys(lhs, **LSH), lsh_band_keys(rhs, **LSH), block_cap=35,
+        ids_lhs=lhs.select("conv_id"), ids_rhs=rhs.select("conv_id"))
     got_def = {(r["conv_id_a"], r["conv_id_b"]) for r in p_def.collect()}
     got_pkd = {(r["conv_id_a"], r["conv_id_b"]) for r in p_pkd.collect()}
-    assert got_pkd == got_def
+    assert got_def and got_pkd == got_def
     assert s_pkd.extra["n_pairs"] == s_def.extra["n_pairs"]
-    assert s_pkd.extra["strategy"] == "two_table_packed"
+    assert (s_pkd.total_blocks, s_pkd.oversized_blocks,
+            s_pkd.dropped_memberships) == (
+        s_def.total_blocks, s_def.oversized_blocks, s_def.dropped_memberships)
+    p_def.unpersist()
+    for h in ("packed_pairs", "id_mapping_lhs", "id_mapping_rhs"):
+        s_pkd.extra[h].unpersist()
