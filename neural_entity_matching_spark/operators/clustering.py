@@ -14,7 +14,8 @@ they differ only in where the work runs:
   Arrow-backed local relation broadcast-joined to the vertices. A handful
   of Spark jobs whatever the graph's shape, but the edges must fit the
   driver: ``run_pipeline`` picks it when the scored stage's row count,
-  which bounds the match-edge count, is at most ``LOCAL_MAX_EDGES``.
+  which bounds the match-edge count, is at most
+  ``driver_limits.LOCAL_MAX_EDGES``.
 * ``'label_propagation'`` (the distributed default, and the pipeline's
   choice above ``LOCAL_MAX_EDGES``) iterates
 
@@ -39,15 +40,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-
-# largest edge count the 'local' algorithm is asked to hold on the driver:
-# the largest size measured to fit and to beat 'label_propagation' (clusters
-# stage as run_pipeline runs it, local[4] on a 4-core host, 3g and 4g driver
-# heaps). At 1M string-id edges and a 3g heap the driver JVM peaked at
-# 2.0-2.2 GB RSS and Python at 0.5-0.6 GB (label propagation: 3.8 GB JVM;
-# 4.9 GB at 4g). The stage took 12-16 s against 37-48 s on 5-id chains
-# and 15-18 s against 16-26 s on disjoint pairs (2M ids)
-LOCAL_MAX_EDGES = 1_000_000
 
 
 def connected_components(

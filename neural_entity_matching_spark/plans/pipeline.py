@@ -31,10 +31,8 @@ from pyspark.sql import functions as F
 from neural_entity_matching_spark.functions.minhash import HASH_FAMILY
 from neural_entity_matching_spark.functions.normalize import build_signatures
 from neural_entity_matching_spark.operators.blocking import lsh_block
-from neural_entity_matching_spark.operators.clustering import (
-    LOCAL_MAX_EDGES,
-    connected_components,
-)
+from neural_entity_matching_spark.operators.clustering import connected_components
+from neural_entity_matching_spark.operators.driver_limits import LOCAL_MAX_EDGES
 from neural_entity_matching_spark.operators.scoring import (
     fast_threshold_score,
     featurize_pairs,
@@ -288,8 +286,9 @@ def run_pipeline(
         if cfg.scorer in ("logistic", "gbt", "random_forest"):
             # trained matcher (reference M1): featurize once, train on the
             # label-attached candidates (negatives implied by absence),
-            # score every candidate with the broadcast model — with the
-            # reference's degenerate single-class bypass
+            # score every candidate with the fitted model (logistic: one
+            # JVM expression) — with the reference's degenerate
+            # single-class bypass
             from neural_entity_matching_spark.operators.ml_scorer import (
                 score_with_model,
                 train_scorer,

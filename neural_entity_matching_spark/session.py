@@ -14,6 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory`` unless ``extra_conf`` sets it:
+    ``SPARK_DRIVER_MEM`` if set, else half the host's physical memory in
+    whole GiB, at least 1g and at most 48g.
+
+    Local mode runs every task in the driver JVM, so the heap grows with
+    the thread count (32 concurrent tasks GC-thrash an 8g heap), but a
+    heap near the host's RAM gets the JVM killed by the kernel.
+    """
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "nem-spark",
     master: str | None = None,
@@ -47,9 +63,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # local mode runs everything in the driver JVM: size the heap for
-        # the thread count or 32 concurrent tasks GC-thrash an 8g heap
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -4,8 +4,8 @@ from neural_entity_matching_spark.session import get_spark
 
 
 # The suite's data fits a few GB of heap (perfbench runs the full pipeline in
-# 3g). get_spark's 48g default lets G1 grow the driver heap past the RAM of
-# a 16 GB host over a full run, and the kernel then kills the JVM mid-suite.
+# 3g). Pinned so the suite's heap does not follow get_spark's default, which
+# is half the host's physical memory.
 TEST_DRIVER_MEMORY = "4g"
 
 

@@ -1,10 +1,14 @@
 """Trained matcher path: LR/GBT on the synthetic fixture must reach the
-same F1 >= 0.99 gate as the threshold scorer, plus the degenerate bypass."""
+same F1 >= 0.99 gate as the threshold scorer, plus the degenerate bypass.
+The logistic fit on the driver and the spark.ml fit above the row bound
+agree, and handle single-class labels and null features alike."""
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from neural_entity_matching_spark.functions.normalize import build_signatures
+from neural_entity_matching_spark.operators import ml_scorer
 from neural_entity_matching_spark.operators.blocking import lsh_block
 from neural_entity_matching_spark.operators.evaluation import pairwise_f1
 from neural_entity_matching_spark.operators.ml_scorer import (
@@ -13,6 +17,7 @@ from neural_entity_matching_spark.operators.ml_scorer import (
     train_scorer,
 )
 from neural_entity_matching_spark.operators.scoring import (
+    FEATURE_COLS,
     FULL_FEATURE_COLS,
     attach_labels,
     featurize_pairs,
@@ -77,3 +82,74 @@ def test_degenerate_single_class_bypass(featurized_labeled):
     a, b, c = fit_predict_with_refit(only_pos, only_pos, only_pos)
     assert c.filter(F.col("is_match") != 1).count() == 0
     assert c.filter(F.col("score") != 1.0).count() == 0
+
+
+def _fit_both(monkeypatch, labeled):
+    """The logistic fit on the driver, then through spark.ml (the path
+    above the row bound)."""
+    local = train_scorer(labeled)
+    with monkeypatch.context() as m:
+        m.setattr(ml_scorer, "LOCAL_MAX_FIT_ROWS", 0)
+        spark_ml = train_scorer(labeled)
+    return local, spark_ml
+
+
+def _decisions(model, feats):
+    return {(r["conv_id_a"], r["conv_id_b"]): (r["is_match"], r["y"])
+            for r in score_with_model(model, feats)
+            .select("conv_id_a", "conv_id_b", "is_match", "y").collect()}
+
+
+def test_driver_fit_agrees_with_spark_ml(featurized_labeled, monkeypatch):
+    """Non-separable labels (the fixture's with every 23rd pair flipped)
+    have one maximum-likelihood fit: both solvers reach it. Separable
+    labels (the fixture's own) are classified by their label by both."""
+    feats, _, _ = featurized_labeled
+    flip = F.xxhash64("conv_id_a", "conv_id_b") % 23 == 0
+    noisy = feats.withColumn(
+        "y", F.when(flip, 1 - F.col("y")).otherwise(F.col("y")))
+    assert noisy.filter(flip).count() > 0
+    local, spark_ml = _fit_both(monkeypatch, noisy)
+    assert local.feature_cols == spark_ml.feature_cols == tuple(FEATURE_COLS)
+    np.testing.assert_allclose(local.coefficients, spark_ml.coefficients,
+                               rtol=1e-4)
+    np.testing.assert_allclose(local.intercept, spark_ml.intercept,
+                               rtol=1e-4)
+    noisy_local = _decisions(local, noisy)
+    assert noisy_local == _decisions(spark_ml, noisy)
+    assert any(m != y for m, y in noisy_local.values())
+
+    for model in _fit_both(monkeypatch, feats):
+        assert all(m == y for m, y in _decisions(model, feats).values())
+
+
+@pytest.mark.parametrize("cap", [1_000_000, 0], ids=["driver", "spark_ml"])
+@pytest.mark.parametrize("label", [0, 1])
+def test_logistic_single_class_labels(spark, monkeypatch, cap, label):
+    """spark.ml's constant-label answer on both sides of the row bound:
+    zero coefficients, an infinite intercept, every score 0.0 or 1.0."""
+    monkeypatch.setattr(ml_scorer, "LOCAL_MAX_FIT_ROWS", cap)
+    feats = spark.createDataFrame(
+        [(i / 20, (7 * i % 20) / 20, 1 - i / 40, label) for i in range(20)],
+        "lev_ratio double, token_jaccard double, len_ratio double, y int")
+    model = train_scorer(feats)
+    assert model.coefficients == (0.0, 0.0, 0.0)
+    assert model.intercept == (np.inf if label else -np.inf)
+    scores = [(r["score"], r["is_match"])
+              for r in score_with_model(model, feats).collect()]
+    assert scores == [(float(label), label)] * 20
+
+
+@pytest.mark.parametrize("cap", [1_000_000, 0], ids=["driver", "spark_ml"])
+def test_logistic_null_feature_raises(spark, monkeypatch, cap):
+    """A null feature fails the fit, as VectorAssembler's
+    handleInvalid='error' does, and fails scoring too."""
+    monkeypatch.setattr(ml_scorer, "LOCAL_MAX_FIT_ROWS", cap)
+    feats = spark.createDataFrame(
+        [(0.1, None, 0.3, 1), (0.2, 0.5, 0.3, 0), (0.9, 0.9, 0.9, 1)],
+        "lev_ratio double, token_jaccard double, len_ratio double, y int")
+    with pytest.raises(Exception, match="null"):
+        train_scorer(feats)
+    model = ml_scorer.LogisticModel(tuple(FEATURE_COLS), (1.0, 1.0, 1.0), 0.0)
+    with pytest.raises(Exception, match="null"):
+        score_with_model(model, feats).collect()

@@ -2,13 +2,15 @@
 computed stage's rows equal its snapshot's partitions, a resumed stage's
 rows come from its _SNAPSHOT.json, a snapshot written before the
 partition_rows key still resumes, and run_pipeline releases every
-persisted handle it creates."""
+persisted handle it creates, with the threshold scorer and with the
+logistic matcher."""
 
 import json
 import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from neural_entity_matching_spark.plans.pipeline import (
     PipelineConfig,
@@ -92,11 +94,16 @@ def test_lineage_rows_match_snapshots_and_resume(spark, fixture_small,
             == _partitions(rep2.outputs["candidates"]))
 
 
+@pytest.mark.parametrize("scorer", ["threshold", "logistic"])
 def test_run_pipeline_releases_persisted_handles(spark, fixture_small,
-                                                 tmp_path):
-    transcripts, _, _ = fixture_small
-    transcripts.count()  # the fixture's own cache registers on first use
+                                                 tmp_path, scorer):
+    transcripts, labeled, _ = fixture_small
+    # the fixture's own caches register on first use
+    transcripts.count()
+    labeled.count()
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     before = rdds.size()
-    _run(spark, transcripts, str(tmp_path / "ckpt"), "leak")
+    run_pipeline(spark, transcripts, str(tmp_path / "ckpt"),
+                 PipelineConfig(scorer=scorer), input_fingerprint="fx-small",
+                 run_id="leak", labeled_pairs=labeled)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
