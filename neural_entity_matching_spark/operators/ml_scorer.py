@@ -101,6 +101,11 @@ def _train_logistic(labeled: DataFrame, cols: list[str]) -> LogisticModel:
         raise ValueError(f"null or non-finite feature value in {cols}")
     if not np.isin(y, (0.0, 1.0)).all():
         raise ValueError("labels y must be 0 or 1")
+    # toPandas returns rows in partition order, and the fit's float sums
+    # depend on row order: sort by (y, features) so any partitioning of
+    # the same rows gives bit-identical coefficients
+    order = np.lexsort(np.column_stack([x, y]).T)
+    x, y = x[order], y[order]
     coef, intercept = _newton_logistic(x, y)
     return LogisticModel(tuple(cols), tuple(coef.tolist()), float(intercept))
 

@@ -17,6 +17,19 @@ costs no job beyond that write. Clustering runs on the driver
 (``algorithm='local'``) when the scored stage's row count, which bounds
 the match count, is at most ``LOCAL_MAX_EDGES``; above it, distributed
 label propagation.
+
+The scored stage reads its two inputs spread over every core. At small
+scale each snapshot is one parquet file and reads back as one partition;
+both payload joins then broadcast the candidate table and stream the
+one-partition signature table, so the whole per-pair kernel (the
+Levenshtein cascade, or the featurize Arrow UDF) would run in one task.
+When a snapshot has fewer non-empty partitions than
+``defaultParallelism``, the read is round-robin repartitioned to that
+count first. The rule is conditional because a snapshot at scale already
+has at least that many partitions, and an unconditional repartition would
+shuffle the signature table, the pipeline's largest, for nothing. The
+partition count comes from ``_SNAPSHOT.json``, so deciding costs no job.
+Blocking and clustering read the snapshots as written.
 """
 
 from __future__ import annotations
@@ -37,7 +50,11 @@ from neural_entity_matching_spark.operators.scoring import (
     fast_threshold_score,
     featurize_pairs,
 )
-from neural_entity_matching_spark.sources.io import CheckpointManager, fingerprint
+from neural_entity_matching_spark.sources.io import (
+    CheckpointManager,
+    StageResult,
+    fingerprint,
+)
 
 
 # which config fields a stage's output actually depends on — the grid
@@ -111,6 +128,16 @@ class PipelineReport:
     stages: dict = field(default_factory=dict)
     # stage-name -> output DataFrame (in-process handles for grid/eval)
     outputs: dict = field(default_factory=dict)
+
+
+def _spread(res: StageResult) -> DataFrame:
+    """``res.df`` round-robin repartitioned to ``defaultParallelism`` when
+    its snapshot has fewer non-empty partitions than that, else ``res.df``
+    itself. The count comes from ``res.partition_rows``: no job."""
+    n = res.df.sparkSession.sparkContext.defaultParallelism
+    if len(res.partition_rows) >= n:
+        return res.df
+    return res.df.repartition(n)
 
 
 def _labels_digest(labeled_pairs: DataFrame) -> str:
@@ -282,7 +309,11 @@ def run_pipeline(
     feat_handle: list[DataFrame] = []
 
     def compute_scored():
-        cand = cand_res.df
+        # the per-pair kernel runs in the tasks that stream the signature
+        # side of the payload joins: spread one-file snapshot reads over
+        # every core first (see the module docstring for why it is
+        # conditional)
+        cand, sigs = _spread(cand_res), _spread(sig_res)
         if cfg.scorer in ("logistic", "gbt", "random_forest"):
             # trained matcher (reference M1): featurize once, train on the
             # label-attached candidates (negatives implied by absence),
@@ -302,7 +333,7 @@ def run_pipeline(
             if labeled_pairs is None:
                 raise ValueError(
                     f"scorer={cfg.scorer!r} needs labeled_pairs")
-            feats = featurize_pairs(cand, sig_res.df).persist()
+            feats = featurize_pairs(cand, sigs).persist()
             feat_handle.append(feats)  # fit + transform share one pass
             labeled = attach_labels(feats, labeled_pairs)
             if is_single_class(labeled):
@@ -310,7 +341,7 @@ def run_pipeline(
             model = train_scorer(labeled, model=cfg.scorer, seed=cfg.ml_seed)
             return score_with_model(model, feats, threshold=cfg.threshold)
         return fast_threshold_score(
-            cand, sig_res.df, threshold=cfg.threshold,
+            cand, sigs, threshold=cfg.threshold,
             w_lev=cfg.w_lev, w_jacc=cfg.w_jacc,
         )
 

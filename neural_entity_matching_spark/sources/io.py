@@ -133,7 +133,11 @@ class CheckpointManager:
         before the write, so each written file holds whole keys. It is not
         bucketing: the read-back does not know the layout, and under AQE
         the repartition is coalesced by size — at small scale every
-        snapshot is a single file.
+        snapshot is a single file, and ``df`` reads it back as one
+        partition. ``run_pipeline`` spreads such a read over
+        ``defaultParallelism`` partitions before its scored stage runs the
+        per-pair kernels on it (``partition_rows`` gives the count without
+        a job); other readers take ``df`` as it is.
         """
         data, meta = self._paths(stage, snapshot_id)
         snap = self.load_snapshot(stage, snapshot_id)

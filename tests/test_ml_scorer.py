@@ -153,3 +153,11 @@ def test_logistic_null_feature_raises(spark, monkeypatch, cap):
     model = ml_scorer.LogisticModel(tuple(FEATURE_COLS), (1.0, 1.0, 1.0), 0.0)
     with pytest.raises(Exception, match="null"):
         score_with_model(model, feats).collect()
+
+
+def test_logistic_fit_is_partition_invariant(featurized_labeled):
+    """The driver fit sorts the collected rows, so the same rows in
+    another partition layout give a bit-identical model."""
+    feats, _, _ = featurized_labeled
+    assert train_scorer(feats, model="logistic") == train_scorer(
+        feats.repartition(7), model="logistic")
