@@ -12,11 +12,11 @@ killed run resumes from the last committed stage (north rule).
 
 Per-partition lineage and the blocker's cap/fallback events go to the
 append-only ``run_metrics`` table in one write per run. Their rows are
-built on the driver from the counts each snapshot records, so lineage
-costs no job beyond that write. Clustering runs on the driver
-(``algorithm='local'``) when the scored stage's row count, which bounds
-the match count, is at most ``LOCAL_MAX_EDGES``; above it, distributed
-label propagation.
+built on the driver from the counts each snapshot records, which come
+from the written files' parquet footers, so lineage costs no job beyond
+that write. Clustering runs on the driver (``algorithm='local'``) when
+the scored stage's row count, which bounds the match count, is at most
+``LOCAL_MAX_EDGES``; above it, distributed label propagation.
 
 The scored stage reads its two inputs spread over every core. At small
 scale each snapshot is one parquet file and reads back as one partition;
@@ -28,7 +28,9 @@ When a snapshot has fewer non-empty partitions than
 count first. The rule is conditional because a snapshot at scale already
 has at least that many partitions, and an unconditional repartition would
 shuffle the signature table, the pipeline's largest, for nothing. The
-partition count comes from ``_SNAPSHOT.json``, so deciding costs no job.
+partition count comes from ``_SNAPSHOT.json``, where the commit counted
+the read's partitions from the data files' footers, so neither the
+commit nor the decision costs a job.
 Blocking and clustering read the snapshots as written.
 """
 
@@ -132,8 +134,10 @@ class PipelineReport:
 
 def _spread(res: StageResult) -> DataFrame:
     """``res.df`` round-robin repartitioned to ``defaultParallelism`` when
-    its snapshot has fewer non-empty partitions than that, else ``res.df``
-    itself. The count comes from ``res.partition_rows``: no job."""
+    its snapshot read has fewer non-empty partitions than that, else
+    ``res.df`` itself. The count is ``len(res.partition_rows)``, which the
+    commit took from the planned read and the data files' footers: no
+    job."""
     n = res.df.sparkSession.sparkContext.defaultParallelism
     if len(res.partition_rows) >= n:
         return res.df
@@ -330,9 +334,6 @@ def run_pipeline(
                 is_single_class,
             )
 
-            if labeled_pairs is None:
-                raise ValueError(
-                    f"scorer={cfg.scorer!r} needs labeled_pairs")
             feats = featurize_pairs(cand, sigs).persist()
             feat_handle.append(feats)  # fit + transform share one pass
             labeled = attach_labels(feats, labeled_pairs)

@@ -13,19 +13,35 @@ with ``_SNAPSHOT.json`` keys
 
     stage           the stage name
     snapshot_id     fingerprint of inputs + params + engine version
-    rows            row count of the written data
-    wall_ms         compute + write + read-back time of the stage
+    rows            row count of the written data (the sum of the data
+                    files' parquet footer row counts)
+    wall_ms         compute + write + commit time of the stage
     partition_rows  [[partition_id, rows], ...] of the data as read back,
                     ascending partition_id, empty partitions absent —
                     the per-partition lineage ``run_pipeline`` records
+    schema          the data's schema as Spark reads it back (every field
+                    nullable), as ``StructType.jsonValue()``
+
+Committing a snapshot runs no Spark job beyond the stage's own write.
+The counts come from the written files' parquet footers, read on the
+driver with pyarrow (the per-file ``record_count`` an Iceberg manifest
+keeps). ``partition_rows`` maps them onto the partitions of the read:
+Spark plans which file ranges each read partition scans (on the driver,
+largest file first), and a range holds the row groups whose byte
+midpoint falls in it, as in parquet-mr. The schema comes from the Spark
+schema the writer stores in each footer, and every read passes it to
+``spark.read.schema``, so no read runs the schema-inference job.
 
 ``run_or_resume`` recomputes a stage only when its snapshot fingerprint
 doesn't match — a rerun after a crash skips every completed stage and
 produces byte-identical output (the resume test kills the pipeline between
-stages and asserts cluster equality). A resumed stage counts nothing:
-its ``rows`` and ``partition_rows`` come from the snapshot file (a
-snapshot written before ``partition_rows`` existed computes it once on
-resume and gains the key).
+stages and asserts cluster equality). A resumed stage counts nothing
+with Spark: its ``rows`` and ``partition_rows`` come from the snapshot
+file, and its data files' footer row counts must sum to ``rows`` (a
+lost or extra file, or one replaced by a file of another row count,
+fails that check, and the stage is recomputed like a fingerprint
+miss). A snapshot written before ``partition_rows`` or ``schema``
+existed gains the missing key on resume, from the footers, with no job.
 
 The reference has nothing comparable: it pickles only final result objects
 (reference script/model_magellan_ml.py:428-430).
@@ -39,8 +55,15 @@ import os
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 
 def have_iceberg(spark: SparkSession) -> bool:
@@ -66,14 +89,16 @@ def fingerprint(*parts: object) -> str:
 class StageResult:
     """One stage's output, as read back from its snapshot.
 
-    ``df``: the snapshot data (a parquet read, never the compute plan).
+    ``df``: the snapshot data (a parquet read with the recorded schema,
+    never the compute plan).
     ``snapshot_id``: the fingerprint the stage ran or resumed under.
     ``resumed``: True when the snapshot existed and nothing was computed.
     ``rows``: row count of ``df``.
-    ``wall_ms``: compute + write + read-back time of the run that wrote
-    the snapshot (a resumed stage reports that run's time, not its own).
+    ``wall_ms``: compute + write + commit time of the run that wrote the
+    snapshot (a resumed stage reports that run's time, not its own).
     ``partition_rows``: ``(partition_id, rows)`` per non-empty partition
-    of ``df``, ascending; the rows sum to ``rows``.
+    of ``df`` as Spark planned the read when the snapshot was committed,
+    ascending; the rows sum to ``rows``.
     """
 
     df: DataFrame
@@ -84,11 +109,75 @@ class StageResult:
     partition_rows: list[tuple[int, int]]
 
 
-def _partition_rows(df: DataFrame) -> list[tuple[int, int]]:
-    """``(partition_id, rows)`` per non-empty partition, in one job."""
-    counts = (df.groupBy(F.spark_partition_id().alias("partition_id"))
-              .count().collect())
-    return sorted((r["partition_id"], r["count"]) for r in counts)
+# where Spark's parquet writer stores the row schema in each footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footers(data: str) -> dict[str, pq.FileMetaData] | None:
+    """Parquet footer of each data file under ``data`` by file name, read
+    on the driver; None when the directory is gone. Names starting with
+    ``_`` or ``.`` (``_SUCCESS``, checksums) are not data, as in Spark's
+    file listing."""
+    try:
+        names = sorted(os.listdir(data))
+    except FileNotFoundError:
+        return None
+    return {n: pq.read_metadata(os.path.join(data, n))
+            for n in names if not n.startswith(("_", "."))}
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable, as
+    Spark makes the schema of a parquet read."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True,
+                                       f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _read_schema(footers: dict[str, pq.FileMetaData]) -> StructType:
+    """The schema Spark infers for a read of these files: the Spark schema
+    its writer stored in the first footer, made nullable."""
+    stored = footers[min(footers)].metadata[_SPARK_SCHEMA_KEY]
+    return _nullable(StructType.fromJson(json.loads(stored)))
+
+
+def _range_rows(md: pq.FileMetaData, start: int, length: int) -> int:
+    """Rows a parquet reader takes from bytes ``[start, start + length)``
+    of a file: those of the row groups whose byte midpoint falls in the
+    range (parquet-mr's split rule, which Spark's reader applies)."""
+    n = 0
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        first = rg.column(0)
+        offset = first.data_page_offset
+        if first.has_dictionary_page:
+            offset = min(offset, first.dictionary_page_offset)
+        size = sum(rg.column(j).total_compressed_size
+                   for j in range(rg.num_columns))
+        if start <= offset + size // 2 < start + length:
+            n += rg.num_rows
+    return n
+
+
+def _partition_rows(df: DataFrame, footers: dict[str, pq.FileMetaData]
+                    ) -> list[tuple[int, int]]:
+    """``(partition_id, rows)`` per non-empty partition of the snapshot
+    read ``df``, with no job: Spark plans each read partition's file
+    ranges on the driver (the physical plan of a bare read is its file
+    scan), and the footers count their rows."""
+    parts = []
+    scan = df._jdf.queryExecution().sparkPlan()
+    for p in scan.inputRDD().partitions():
+        n = sum(_range_rows(footers[f.filePath().toPath().getName()],
+                            f.start(), f.length()) for f in p.files())
+        if n:
+            parts.append((p.index(), n))
+    return parts
 
 
 class CheckpointManager:
@@ -129,6 +218,12 @@ class CheckpointManager:
     ) -> StageResult:
         """Return the stage output, recomputing only on fingerprint miss.
 
+        A computed stage's write is its last Spark job: the commit reads
+        the counts and the schema from the written files' footers, and
+        ``df`` reads the data back with that schema. A resumed stage runs
+        no job; it is recomputed instead when its data files' footer row
+        counts no longer sum to the committed ``rows``.
+
         ``repartition_by``: hash-repartition the output by these columns
         before the write, so each written file holds whole keys. It is not
         bucketing: the read-back does not know the layout, and under AQE
@@ -142,14 +237,25 @@ class CheckpointManager:
         data, meta = self._paths(stage, snapshot_id)
         snap = self.load_snapshot(stage, snapshot_id)
         if snap is not None and snap.get("snapshot_id") == snapshot_id:
-            df = self.spark.read.parquet(data)
-            if "partition_rows" not in snap:
-                # written before the key existed: compute it once
-                snap = {**snap, "partition_rows": _partition_rows(df)}
-                self._commit(meta, snap)
-            return StageResult(df, snapshot_id, True, snap.get("rows", -1),
-                               snap.get("wall_ms", 0),
-                               [tuple(p) for p in snap["partition_rows"]])
+            footers = _footers(data)
+            if (footers is not None and snap.get("rows")
+                    == sum(md.num_rows for md in footers.values())):
+                # a snapshot written before a key existed gains it once
+                legacy = not {"schema", "partition_rows"} <= snap.keys()
+                if "schema" not in snap:
+                    snap["schema"] = _read_schema(footers).jsonValue()
+                df = (self.spark.read
+                      .schema(StructType.fromJson(snap["schema"]))
+                      .parquet(data))
+                if "partition_rows" not in snap:
+                    snap["partition_rows"] = _partition_rows(df, footers)
+                if legacy:
+                    self._commit(meta, snap)
+                return StageResult(df, snapshot_id, True, snap["rows"],
+                                   snap.get("wall_ms", 0),
+                                   [tuple(p) for p in snap["partition_rows"]])
+            # the data files no longer add up to the committed rows (one
+            # was lost, added or replaced): recompute, as on a miss
 
         t0 = time.monotonic()
         # invalidate the STALE snapshot before touching its data: a crash
@@ -161,13 +267,16 @@ class CheckpointManager:
         if repartition_by:
             out = out.repartition(*repartition_by)
         out.write.mode("overwrite").parquet(data)
-        df = self.spark.read.parquet(data)
-        parts = _partition_rows(df)
-        rows = sum(n for _, n in parts)
+        footers = _footers(data)
+        schema = _read_schema(footers)
+        df = self.spark.read.schema(schema).parquet(data)
+        parts = _partition_rows(df, footers)
+        rows = sum(md.num_rows for md in footers.values())
         wall_ms = int((time.monotonic() - t0) * 1000)
         self._commit(meta, {"stage": stage, "snapshot_id": snapshot_id,
                             "rows": rows, "wall_ms": wall_ms,
-                            "partition_rows": parts})
+                            "partition_rows": parts,
+                            "schema": schema.jsonValue()})
         return StageResult(df, snapshot_id, False, rows, wall_ms, parts)
 
     def invalidate(self, stage: str, snapshot_id: str = "") -> None:
