@@ -70,32 +70,27 @@ def run_er_pipeline(spark, transcripts) -> dict:
 
     t0 = time.monotonic()
     sigs = build_signatures(transcripts).cache()
-    # lsh_block's grouped xxhash64-id plan: it beat a dense-rank packed
-    # plan here (er_pipeline 7.7s vs 13.9s median at sf0.1/local[32] — the
-    # dense-rank mapping build is fixed-cost job latency that dominates a
-    # 5.7k-doc corpus). No locality sort of the pairs either:
-    # sortWithinPartitions before scoring A/B measured a net LOSS on
-    # local[32] at 261k AND 5.0M pairs — it only pays on
+    # blocks and scores on string ids, as run_pipeline does. No locality
+    # sort of the pairs: sortWithinPartitions before scoring A/B measured
+    # a net LOSS on local[32] at 261k AND 5.0M pairs — it only pays on
     # bandwidth-starved 1-core executors.
     candidates, stats = lsh_block(
         sigs, num_hashes=128, bands=64, char_ngram=8, seed=42, block_cap=35,
-        decode_ids=False,
     )
     t1 = time.monotonic()
-    sigs_iid = sigs.select(F.xxhash64("conv_id").alias("conv_id"), "sig_text")
     scored = fast_threshold_score(
-        candidates, sigs_iid, threshold=0.55, broadcast_signatures=True,
+        candidates, sigs, threshold=0.55, broadcast_signatures=True,
     ).cache()
     n_pairs = scored.count()  # materialize BEFORE filtering is_match
     t2 = time.monotonic()
     clusters = connected_components(
         scored.filter(F.col("is_match") == 1).select("conv_id_a", "conv_id_b"),
-        vertices=sigs_iid,
+        vertices=sigs,
     )
     n_clusters = clusters.select("cluster_id").distinct().count()
-    stats.extra["id_mapping"].unpersist()
     t3 = time.monotonic()
     scored.unpersist()
+    candidates.unpersist()
     sigs.unpersist()
     return {
         "wall": t3 - t0,
@@ -128,7 +123,7 @@ def run_ml_scorer(spark, transcripts, labeled) -> dict:
     )
 
     sigs = build_signatures(transcripts).cache()
-    candidates, stats = lsh_block(
+    candidates, _ = lsh_block(
         sigs, num_hashes=128, bands=64, char_ngram=8, seed=42, block_cap=35,
     )
     candidates = candidates.persist()
@@ -148,8 +143,6 @@ def run_ml_scorer(spark, transcripts, labeled) -> dict:
 
     for h in (scored, feats, candidates, sigs):
         h.unpersist()
-    if "id_mapping" in stats.extra:
-        stats.extra["id_mapping"].unpersist()
     return {
         "wall": t3 - t0,
         "featurize_wall": t1 - t0,

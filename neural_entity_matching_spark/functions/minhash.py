@@ -1,4 +1,5 @@
-"""MinHash fingerprints + LSH band keys as one vectorized pandas UDF.
+"""MinHash fingerprints + LSH band keys: one numpy kernel, run per Arrow
+batch by the pandas UDFs and on the driver by ``lsh_block`` below its bound.
 
 Semantics follow the reference (mattilyra/lsh used at
 reference script/blocking_algorithms.py:83-140): character n-gram shingles
@@ -12,11 +13,16 @@ F1 metric is "at fixed blocking keys" that we define); what IS required is
 determinism and partition-invariance: all hashing is seeded numpy uint64
 arithmetic, no Python ``hash()``, no wall clock, no row order dependence.
 
-Implementation is batch-vectorized: per Arrow batch we build one flat
-uint64 array of rolling-polynomial shingle hashes for every doc, expand to
-(n_shingles, k) with a splitmix64-style mix per seed, and take per-doc
-minima with ``np.minimum.reduceat`` — no per-row Python in the hot loop
-beyond the unavoidable per-string byte encode.
+Implementation is batch-vectorized: a slice of a batch's texts (about
+1 MiB of UTF-8, so the per-byte temporaries stay bounded for long texts)
+becomes one concatenated buffer (Arrow pads the short texts), every byte
+position gets a rolling-polynomial shingle hash, and the windows that
+cross a text boundary are dropped, leaving one flat uint64 array for the
+slice. Texts of 2,048+ shingles keep only their distinct shingles (a
+sort per long text; short texts are left as they are). Each of the k
+seeded permutations is one multiply over the slice, and per-doc minima
+come from ``np.minimum.reduceat``. No step loops over short texts in
+Python; the UDFs build their output Series from one row view per text.
 
 Candidate probability oracle for tests: p = 1 - (1 - s^r)^b
 (reference script/utilities.py:525).
@@ -26,6 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -42,6 +50,17 @@ _POLY_BASE = np.uint64(1111111111111111111)  # odd 64-bit multiplier
 # (round 4, kernel 6.3x).
 HASH_FAMILY = "minhash-oddmul-v2"
 
+# UTF-8 bytes (padding included) the kernel shingles at once: its uint64
+# temporaries take ~40 bytes per text byte, so a slice peaks near 40 MiB
+# however long a batch's texts are
+_SLICE_BYTES = 1 << 20
+
+# shortest text (in shingles) whose repeated shingles are dropped before
+# the minhash pass. Short texts rarely repeat one (1.02 shingles per
+# distinct one at ~500 B), so their sort is pure cost: deduping from 256
+# shingles up took band_keys on 32,996 such texts from 1.9 s to 2.6 s
+_DEDUP_MIN_SHINGLES = 2048
+
 
 def _splitmix_mix(x: np.ndarray) -> np.ndarray:
     """Deterministic 64-bit mixer (splitmix64 finalizer), vectorized."""
@@ -54,20 +73,93 @@ def _splitmix_mix(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """uint64 rolling polynomial hashes of all char k-grams of ``text``.
+def shingle_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Splitmix-finalized rolling polynomial hashes of every char k-gram
+    (k UTF-8 bytes) of every text, as one flat uint64 array plus each
+    text's start offset into it.
 
-    Short strings are right-padded with spaces to width k (reference rule,
-    blocking_algorithms.py:117-119) so every doc has >=1 shingle.
+    Nulls read as empty. Texts shorter than k code points are right-padded
+    with spaces to k (reference rule, blocking_algorithms.py:117-119), so
+    every text has >=1 shingle. The whole batch is one concatenated UTF-8
+    buffer: one hash per byte position, then only the windows that end
+    inside their own text are kept. A text's repeated shingles stay
+    repeated; its minima are those of its shingle set either way.
     """
-    if len(text) < k:
-        text = text + " " * (k - len(text))
-    b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-    if len(b) < k:  # multibyte chars shrink? no — utf-8 only grows; keep guard
-        b = np.pad(b, (0, k - len(b)), constant_values=32)
-    win = np.lib.stride_tricks.sliding_window_view(b, k)
+    arr = _as_arrow(texts)
+    n = len(arr)
+    if n == 0:
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    arr = pc.utf8_rpad(pc.fill_null(arr, ""), width=k, padding=" ")
+    bufs = arr.buffers()
+    ends = np.frombuffer(bufs[1], dtype=np.int64)[arr.offset:arr.offset + n + 1]
+    data = np.frombuffer(bufs[2], dtype=np.uint8)[: ends[-1]]
+    n_pos = len(data) - k + 1
     powers = _POLY_BASE ** np.arange(k, dtype=np.uint64)  # wraps mod 2^64
-    return np.unique(_splitmix_mix(win @ powers))
+    h = data[:n_pos].astype(np.uint64)
+    tmp = np.empty(n_pos, dtype=np.uint64)
+    for j in range(1, k):
+        np.multiply(data[j:j + n_pos], powers[j], out=tmp)
+        h += tmp
+    del tmp
+    counts = np.diff(ends) - (k - 1)  # >= 1: padding gives >= k bytes
+    offsets = np.zeros(n, dtype=np.int64)
+    np.cumsum(counts[:-1], out=offsets[1:])
+    pos = np.arange(offsets[-1] + counts[-1]) + np.repeat(ends[:-1] - offsets, counts)
+    return _splitmix_mix(h[pos]), offsets
+
+
+def _as_arrow(texts) -> pa.Array:
+    if isinstance(texts, pa.ChunkedArray):
+        texts = texts.combine_chunks()
+    if isinstance(texts, pa.Array):
+        return texts.cast(pa.large_string())
+    return pa.array(texts, type=pa.large_string(), from_pandas=True)
+
+
+def _minhash_slices(texts: pa.Array, k: int, seeds: np.ndarray):
+    """Yields (first text, (n_slice_texts, len(seeds)) minima) over
+    consecutive slices of at most ``_SLICE_BYTES`` padded UTF-8 bytes (one
+    text when a single text is longer), so the shingling temporaries are
+    bounded by bytes, not by the batch's row count."""
+    n = len(texts)
+    if n == 0:
+        return
+    ends = np.frombuffer(texts.buffers()[1], dtype=np.int64)[
+        texts.offset:texts.offset + n + 1]
+    # padding adds at most k bytes per text
+    cum = ends - ends[0] + k * np.arange(n + 1)
+    lo = 0
+    while lo < n:
+        hi = int(np.searchsorted(cum, cum[lo] + _SLICE_BYTES, side="right")) - 1
+        hi = max(hi, lo + 1)
+        flat, offsets = shingle_hashes(texts.slice(lo, hi - lo), k)
+        yield lo, _minhash_matrix(*_dedup_long_texts(flat, offsets), seeds)
+        lo = hi
+
+
+def _dedup_long_texts(flat: np.ndarray, offsets: np.ndarray):
+    """Each text of at least ``_DEDUP_MIN_SHINGLES`` shingles keeps only
+    its distinct shingles; shorter texts are left as they are. Minima, so
+    fingerprints and band keys, are the same either way. Long texts repeat
+    shingles (a transcript's recurring lines), and each repeat would cost
+    the minhash pass a multiply per seed: 2,472 texts of ~20 KB repeat
+    each shingle 2.26 times on average, and deduping them took
+    ``band_keys`` on one thread from 5.9-6.7 s to 5.1-5.3 s."""
+    ends = np.append(offsets[1:], len(flat))
+    long_texts = np.flatnonzero(ends - offsets >= _DEDUP_MIN_SHINGLES)
+    if len(long_texts) == 0:
+        return flat, offsets
+    parts, lens, prev = [], ends - offsets, 0
+    for t in long_texts:
+        parts.append(flat[prev:offsets[t]])
+        distinct = np.unique(flat[offsets[t]:ends[t]])
+        parts.append(distinct)
+        lens[t] = len(distinct)
+        prev = ends[t]
+    parts.append(flat[prev:])
+    offsets = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=offsets[1:])
+    return np.concatenate(parts), offsets
 
 
 def _minhash_matrix(flat: np.ndarray, offsets: np.ndarray,
@@ -123,40 +215,48 @@ def _minhash_matrix(flat: np.ndarray, offsets: np.ndarray,
     return mins
 
 
-def band_keys_udf(num_hashes: int = 128, bands: int = 32, char_ngram: int = 8,
-                  seed: int = 42):
-    """Returns a pandas UDF: text -> array<long> of ``bands`` band-bucket keys.
+def _seeds(num_hashes: int, seed: int) -> np.ndarray:
+    rng = np.random.RandomState(seed)
+    return rng.randint(1, 2**63 - 1, size=num_hashes).astype(np.uint64)
 
-    k % bands == 0 enforced, as the reference enforces seeds % bands == 0
-    (blocking_algorithms.py:97-98).
-    """
+
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """k % bands == 0, as the reference enforces seeds % bands == 0
+    (blocking_algorithms.py:97-98)."""
     if num_hashes % bands != 0:
         raise ValueError(f"num_hashes must be a multiple of bands: {num_hashes} % {bands} != 0")
-    rows_per_band = num_hashes // bands
-    rng = np.random.RandomState(seed)
-    seeds = rng.randint(1, 2**63 - 1, size=num_hashes).astype(np.uint64)
+
+
+def band_keys(texts, num_hashes: int = 128, bands: int = 32, char_ngram: int = 8,
+              seed: int = 42) -> np.ndarray:
+    """(n_texts, bands) int64 band-bucket keys of a batch of texts (nulls
+    read as empty). The one MinHash kernel: ``band_keys_udf`` runs it per
+    Arrow batch, and ``lsh_block`` on the driver below its bound."""
+    _check_bands(num_hashes, bands)
+    texts = _as_arrow(texts)
+    seeds = _seeds(num_hashes, seed)
+    salt = _splitmix_mix(np.arange(bands, dtype=np.uint64))[None, :]
+    out = np.empty((len(texts), bands), dtype=np.uint64)
+    for lo, mins in _minhash_slices(texts, char_ngram, seeds):
+        # FNV-fold each band's slice into one bucket key, salt by band index
+        mins = mins.reshape(len(mins), bands, num_hashes // bands)
+        keys = np.full((len(mins), bands), np.uint64(0xCBF29CE484222325))
+        for r in range(mins.shape[2]):
+            keys = (keys * _FNV) ^ mins[:, :, r]
+        out[lo:lo + len(keys)] = keys ^ salt
+    return out.view(np.int64)
+
+
+def band_keys_udf(num_hashes: int = 128, bands: int = 32, char_ngram: int = 8,
+                  seed: int = 42):
+    """Returns a pandas UDF: text -> array<long> of ``bands`` band-bucket
+    keys (``band_keys`` per batch)."""
+    _check_bands(num_hashes, bands)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _band_keys(texts: pd.Series) -> pd.Series:
-        out = []
-        vals = texts.fillna("").to_numpy()
-        if len(vals) == 0:
-            return pd.Series(out, dtype=object)
-        shingle_arrays = [_shingle_hashes(t, char_ngram) for t in vals]
-        offsets = np.zeros(len(shingle_arrays), dtype=np.int64)
-        np.cumsum([len(a) for a in shingle_arrays[:-1]], out=offsets[1:])
-        flat = np.concatenate(shingle_arrays)
-        mins = _minhash_matrix(flat, offsets, seeds)  # (n_docs, k)
-        # FNV-fold each band's slice into one bucket key, salt by band index
-        mins = mins.reshape(len(vals), bands, rows_per_band)
-        keys = np.full((len(vals), bands), np.uint64(0xCBF29CE484222325))
-        for r in range(rows_per_band):
-            keys = (keys * _FNV) ^ mins[:, :, r]
-        keys ^= _splitmix_mix(np.arange(bands, dtype=np.uint64))[None, :]
-        signed = keys.view(np.int64)
-        for i in range(len(vals)):
-            out.append(signed[i].tolist())
-        return pd.Series(out, dtype=object)
+        keys = band_keys(texts, num_hashes, bands, char_ngram, seed)
+        return pd.Series(list(keys), dtype=object)
 
     return _band_keys
 
@@ -165,23 +265,15 @@ def minhash_signature_udf(num_hashes: int = 128, char_ngram: int = 8,
                           seed: int = 42):
     """Raw k-minhash fingerprint (array<long>) — used by dedup operators that
     estimate Jaccard from fingerprint agreement rather than banding."""
-    rng = np.random.RandomState(seed)
-    seeds = rng.randint(1, 2**63 - 1, size=num_hashes).astype(np.uint64)
+    seeds = _seeds(num_hashes, seed)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _fingerprint(texts: pd.Series) -> pd.Series:
-        out = []
-        vals = texts.fillna("").to_numpy()
-        if len(vals) == 0:
-            return pd.Series(out, dtype=object)
-        shingle_arrays = [_shingle_hashes(t, char_ngram) for t in vals]
-        offsets = np.zeros(len(shingle_arrays), dtype=np.int64)
-        np.cumsum([len(a) for a in shingle_arrays[:-1]], out=offsets[1:])
-        flat = np.concatenate(shingle_arrays)
-        mins = _minhash_matrix(flat, offsets, seeds).view(np.int64)
-        for i in range(len(vals)):
-            out.append(mins[i].tolist())
-        return pd.Series(out, dtype=object)
+        texts = _as_arrow(texts)
+        mins = np.empty((len(texts), num_hashes), dtype=np.uint64)
+        for lo, m in _minhash_slices(texts, char_ngram, seeds):
+            mins[lo:lo + len(m)] = m
+        return pd.Series(list(mins.view(np.int64)), dtype=object)
 
     return _fingerprint
 

@@ -1,7 +1,10 @@
-"""Scalar pure-Python references for the batch similarity kernels in
-``functions/similarity.py``: the tests assert batch == scalar."""
+"""Scalar pure-Python references for the batch kernels in
+``functions/similarity.py`` and ``functions/minhash.py``: the tests assert
+batch == scalar."""
 
 import numpy as np
+
+from neural_entity_matching_spark.functions.minhash import _POLY_BASE, _splitmix_mix
 
 
 def jaro(s1: str, s2: str) -> float:
@@ -71,3 +74,18 @@ def indel_distance(s1: str, s2: str) -> int:
         prev, cur = cur, prev
     lcs = int(prev[l2])
     return l1 + l2 - 2 * lcs
+
+
+def _shingle_hashes(text: str, k: int) -> np.ndarray:
+    """Sorted distinct shingle hashes of one text, one document at a time:
+    the reference for ``minhash.shingle_hashes``' batch form.
+
+    Short strings are right-padded with spaces to width k (reference rule,
+    blocking_algorithms.py:117-119) so every doc has >=1 shingle.
+    """
+    if len(text) < k:
+        text = text + " " * (k - len(text))
+    b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
+    win = np.lib.stride_tricks.sliding_window_view(b, k)
+    powers = _POLY_BASE ** np.arange(k, dtype=np.uint64)  # wraps mod 2^64
+    return np.unique(_splitmix_mix(win @ powers))

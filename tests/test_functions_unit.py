@@ -8,8 +8,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+from neural_entity_matching_spark.functions import minhash
 from neural_entity_matching_spark.functions.minhash import (
-    _shingle_hashes,
     band_keys_udf,
     candidate_probability,
     minhash_signature_udf,
@@ -24,7 +24,7 @@ from neural_entity_matching_spark.functions.similarity import (
     lev_ratio,
     token_jaccard,
 )
-from oracles import indel_distance, jaro_winkler
+from oracles import _shingle_hashes, indel_distance, jaro_winkler
 
 
 # --- normalization (F9) ---
@@ -46,12 +46,72 @@ def test_shingle_padding_short_string():
     h2 = _shingle_hashes("hi      ", 8)
     assert np.array_equal(h, h2)
     assert len(_shingle_hashes("", 8)) == 1  # empty -> 8 spaces, no crash
+    # the shipped batch kernel pads the same way
+    flat, offsets = minhash.shingle_hashes(["hi", "hi      ", ""], 8)
+    assert offsets.tolist() == [0, 1, 2] and len(flat) == 3
+    assert flat[0] == flat[1] == h[0]
+    assert flat[2] == _shingle_hashes("", 8)[0]
 
 
 def test_shingle_hashes_deterministic():
     a = _shingle_hashes("the quick brown fox", 8)
     b = _shingle_hashes("the quick brown fox", 8)
     assert np.array_equal(a, b)
+    c, _ = minhash.shingle_hashes(["the quick brown fox"], 8)
+    d, _ = minhash.shingle_hashes(["the quick brown fox"], 8)
+    assert np.array_equal(c, d)
+    assert np.array_equal(np.unique(c), a)
+
+
+def test_batch_kernel_matches_per_doc_oracle():
+    """The batch shingling (one UTF-8 buffer, boundary-crossing windows
+    dropped, repeats kept) gives each text the oracle's shingle set, so
+    fingerprints and band keys equal the per-document path."""
+    texts = ["", None, "hi", "hé", "exactly8", "  ", "aaaaaaaaaaaa",
+             "héllo wörld çafé ünïcode", "😀", "ab😀cd", "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 😀 text",
+             "the quick brown fox jumps over the lazy dog"]
+    flat, offsets = minhash.shingle_hashes(texts, 8)
+    ends = np.append(offsets[1:], len(flat))
+    oracle = [_shingle_hashes(t or "", 8) for t in texts]
+    for t, lo, hi, want in zip(texts, offsets, ends, oracle):
+        assert np.array_equal(np.unique(flat[lo:hi]), want), t
+    seeds = minhash._seeds(128, 42)
+    oracle_offsets = np.cumsum([0] + [len(a) for a in oracle[:-1]])
+    assert np.array_equal(
+        minhash._minhash_matrix(flat, offsets, seeds),
+        minhash._minhash_matrix(np.concatenate(oracle), oracle_offsets, seeds))
+    keys = minhash.band_keys(texts, 128, 64, 8, 42)
+    one_by_one = np.concatenate(
+        [minhash.band_keys([t], 128, 64, 8, 42) for t in texts])
+    assert keys.shape == (len(texts), 64)
+    assert np.array_equal(keys, one_by_one)
+    assert minhash.band_keys([], 128, 64, 8, 42).shape == (0, 64)
+
+
+def test_kernel_slices_by_bytes(monkeypatch):
+    """Slicing a batch by UTF-8 bytes (one text per slice when a text is
+    longer than a slice), and dropping a long text's repeated shingles,
+    leave fingerprints and band keys unchanged."""
+    texts = ["", None, "hi", "😀" * 40, "a longer text " * 30, "short one",
+             "héllo wörld çafé", "x" * 9] * 3
+    keys = minhash.band_keys(texts, 128, 64, 8, 42)
+    seeds = minhash._seeds(128, 42)
+    whole = minhash._minhash_matrix(*minhash.shingle_hashes(texts, 8), seeds)
+    monkeypatch.setattr(minhash, "_SLICE_BYTES", 24)
+    arrow_texts = minhash._as_arrow(texts)
+    slices = list(minhash._minhash_slices(arrow_texts, 8, seeds))
+    assert len(slices) > len(texts) // 2
+    assert np.array_equal(np.concatenate([m for _, m in slices]), whole)
+    assert [lo for lo, _ in slices] == sorted({lo for lo, _ in slices})
+    assert np.array_equal(minhash.band_keys(texts, 128, 64, 8, 42), keys)
+    monkeypatch.setattr(minhash, "_DEDUP_MIN_SHINGLES", 1)
+    flat, offsets = minhash.shingle_hashes(texts, 8)
+    distinct, distinct_offsets = minhash._dedup_long_texts(flat, offsets)
+    assert len(distinct) < len(flat)  # "a longer text " repeats its shingles
+    assert np.array_equal(minhash._minhash_matrix(distinct, distinct_offsets, seeds),
+                          whole)
+    monkeypatch.setattr(minhash, "_SLICE_BYTES", 1 << 20)
+    assert np.array_equal(minhash.band_keys(texts, 128, 64, 8, 42), keys)
 
 
 # --- minhash determinism & partition invariance ---

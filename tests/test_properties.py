@@ -5,12 +5,12 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from neural_entity_matching_spark.functions.minhash import _shingle_hashes
+from neural_entity_matching_spark.functions.minhash import shingle_hashes
 from neural_entity_matching_spark.functions.similarity import (
     _indel_distance_batch,
     _jaro_winkler_batch,
 )
-from oracles import indel_distance, jaro_winkler
+from oracles import _shingle_hashes, indel_distance, jaro_winkler
 
 texts = st.text(alphabet="abcdefg hij", max_size=40)
 
@@ -113,6 +113,20 @@ def test_short_strings_pad_like_reference(t):
     with spaces (reference blocking_algorithms.py:117-119)."""
     padded = t + " " * (8 - len(t))
     assert np.array_equal(_shingle_hashes(t, 8), _shingle_hashes(padded, 8))
+    flat, offsets = shingle_hashes([t, padded], 8)
+    assert offsets.tolist() == [0, 1]  # one shingle each
+    assert flat[0] == flat[1] == _shingle_hashes(padded, 8)[0]
+
+
+@settings(max_examples=50, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.text(max_size=20)), max_size=12))
+def test_batch_shingles_match_per_doc_oracle(batch):
+    """One concatenated buffer gives every text the oracle's shingle set,
+    for any code points, nulls and lengths around the shingle width."""
+    flat, offsets = shingle_hashes(batch, 8)
+    ends = np.append(offsets[1:], len(flat))
+    for t, lo, hi in zip(batch, offsets, ends):
+        assert np.array_equal(np.unique(flat[lo:hi]), _shingle_hashes(t or "", 8))
 
 
 # ---------------------------------------------------------------------------

@@ -154,8 +154,7 @@ def test_cap_drops_mega_block_visibly(spark):
 
 def test_all_strategies_and_encodings_identical(spark):
     """grouped == salted == the oracle pair set, with and without id
-    encoding, and decode_ids=False maps back exactly through
-    stats.extra['id_mapping']."""
+    encoding."""
     keys = _hot_keys(spark, n_hot=60, n_normal=200)
     expect = _oracle_pairs(keys, block_cap=80)
     assert expect  # non-trivial
@@ -166,17 +165,7 @@ def test_all_strategies_and_encodings_identical(spark):
     assert _pair_set(g) == expect
     assert _pair_set(s) == expect
     assert _pair_set(raw) == expect
-
-    iid, st = grouped_pairs_from_block_keys(keys, block_cap=80,
-                                            decode_ids=False)
-    mapping = {r["iid"]: r["_id"] for r in st.extra["id_mapping"].collect()}
-    decoded = {
-        tuple(sorted((mapping[r["conv_id_a"]], mapping[r["conv_id_b"]])))
-        for r in iid.collect()
-    }
-    assert decoded == expect
-    st.extra["id_mapping"].unpersist()
-    for df in (g, s, raw, iid):
+    for df in (g, s, raw):
         df.unpersist()
 
 
