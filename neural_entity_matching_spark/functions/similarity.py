@@ -5,9 +5,11 @@ The reference's feature generation is Magellan's auto feature generator
 script/model_magellan_ml.py:84,98-100); we compute an explicit fixed list.
 The JVM column expressions here (``levenshtein`` ratio,
 array-intersection Jaccard, length ratio) are the reference semantics.
-The feature hot path computes the same integers in one fused Arrow UDF
-(``lev_tokjac_udf``: vectorized Myers Levenshtein + token sets) and
-rebuilds the ratios bit-identically in the JVM. Other Python-side measures
+The feature hot path computes the same integers with one plain numpy
+kernel (``lev_tokjac``: vectorized Myers Levenshtein + token sets), run
+per Arrow batch by the fused UDF (``lev_tokjac_udf``), whose caller
+rebuilds the ratios bit-identically in the JVM, or once on the driver by
+``scoring.featurize_pairs_local``. Other Python-side measures
 (Jaro-Winkler, indel fuzz.ratio parity with reference
 script/utilities.py:19-20) are pandas UDFs used where the JVM lacks the
 function.
@@ -456,11 +458,28 @@ def _token_sets_jaccard(av: np.ndarray, bv: np.ndarray):
     return ti, tu
 
 
+def lev_tokjac(av: np.ndarray, bv: np.ndarray, lev_prefix: int | None = 512,
+               chunk: int = 2048, cell_budget: int = 1 << 20):
+    """``(d, ti, tu)`` per pair of non-null strings: the exact Levenshtein
+    distance over the first ``lev_prefix`` code points (Python slicing and
+    Spark ``substring`` agree on code-point units), and the distinct-token
+    intersection and union sizes over the FULL strings.
+
+    The one pair kernel of the featurize path: ``lev_tokjac_udf`` calls it
+    per Arrow batch at ``_lev_distance_batch``'s default chunk sizes, which
+    suit concurrent workers; the scored stage's driver path
+    (``scoring.featurize_pairs_local``) calls it once for all pairs, with
+    chunk sizes for one process."""
+    ti, tu = _token_sets_jaccard(av, bv)
+    if lev_prefix is not None:
+        av = np.array([s[:lev_prefix] for s in av], dtype=object)
+        bv = np.array([s[:lev_prefix] for s in bv], dtype=object)
+    return _lev_distance_batch(av, bv, chunk, cell_budget), ti, tu
+
+
 def lev_tokjac_udf(lev_prefix: int | None = 512):
-    """Factory: one Arrow pass computing BOTH the exact Levenshtein
-    distance (over the first ``lev_prefix`` code points — Python slicing
-    and Spark ``substring`` agree on code-point units) and the distinct-
-    token intersection/union sizes over the FULL strings.
+    """Factory: ``lev_tokjac`` as one Arrow pass, null when either string
+    is null.
 
     Fusing the two removes the per-pair JVM split/array_distinct/
     array_intersect chain (measured ~10.9s per 2.06M pairs on local[32]
@@ -480,15 +499,8 @@ def lev_tokjac_udf(lev_prefix: int | None = 512):
     @F.pandas_udf(out_t)
     def _f(a: pd.Series, b: pd.Series) -> pd.DataFrame:
         null = (a.isna() | b.isna()).to_numpy()
-        av = a.fillna("").to_numpy()
-        bv = b.fillna("").to_numpy()
-        ti, tu = _token_sets_jaccard(av, bv)
-        if lev_prefix is not None:
-            ap = np.array([s[:lev_prefix] for s in av], dtype=object)
-            bp = np.array([s[:lev_prefix] for s in bv], dtype=object)
-        else:
-            ap, bp = av, bv
-        d = _lev_distance_batch(ap, bp)
+        d, ti, tu = lev_tokjac(a.fillna("").to_numpy(),
+                               b.fillna("").to_numpy(), lev_prefix)
         out = pd.DataFrame({
             "d": pd.Series(d, dtype="Int64"),
             "ti": pd.Series(ti, dtype="Int32"),

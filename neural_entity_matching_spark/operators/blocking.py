@@ -55,6 +55,7 @@ from neural_entity_matching_spark.operators.driver_limits import (
     LOCAL_MAX_SIGNATURE_BYTES,
     LOCAL_MAX_SIGNATURES,
 )
+from neural_entity_matching_spark.sources.io import arrow_frame
 
 
 @dataclass
@@ -249,6 +250,14 @@ def dense_id_mapping(
     return mapping
 
 
+def _null_ids_error(n_null: int, n: int) -> ValueError:
+    # without the check, xxhash64(null) codes a null id like any other and
+    # least/greatest drops the null end of its pairs, so every doc that
+    # shares a block with it comes out as a self-pair (x, x)
+    return ValueError(f"null input ids ({n_null} of {n} id rows); "
+                      "ids must be non-null")
+
+
 def grouped_pairs_from_block_keys(
     keys: DataFrame,
     block_cap: int = 200,
@@ -280,10 +289,10 @@ def grouped_pairs_from_block_keys(
     band UDF — runs exactly once either way, but the cache write/read
     and its materialization job disappear). Precondition: ``ids`` covers
     every id in ``keys``: an id missing from it has no mapping row, so
-    its pairs vanish in the decode join. Duplicate
-    ids in ``ids`` raise ValueError("duplicate input ids ..."); an
-    xxhash64 collision between distinct ids raises
-    ValueError("xxhash64 id collision ...").
+    its pairs vanish in the decode join. A null id in ``ids`` raises
+    ValueError("null input ids ..."), duplicate ids raise
+    ValueError("duplicate input ids ..."), and an xxhash64 collision
+    between distinct ids raises ValueError("xxhash64 id collision ...").
     """
     release: list[DataFrame] = []
     if not encode_ids:
@@ -297,8 +306,12 @@ def grouped_pairs_from_block_keys(
         )
         release.append(mapping)
         chk = mapping.agg(
-            F.count("*").alias("n"), F.countDistinct("iid").alias("d")
+            F.count("*").alias("n"), F.count("_id").alias("nn"),
+            F.countDistinct("iid").alias("d")
         ).collect()[0]
+        if chk["nn"] != chk["n"]:
+            mapping.unpersist()
+            raise _null_ids_error(chk["n"] - chk["nn"], chk["n"])
         if chk["n"] != chk["d"]:
             # failure path only: tell duplicate ids from a hash collision
             n_distinct = mapping.agg(F.countDistinct("_id")).collect()[0][0]
@@ -714,9 +727,8 @@ def _local_lsh_pairs(
 
     Ids are coded by ``np.unique`` (numpy's order for str/int64 ids equals
     Spark's), so a block's members sort by id and each ``i < j`` position
-    pair is already (least, greatest). A null id is one more entity, as its
-    xxhash64 code is on the Spark path, where least/greatest then drops the
-    null end of its pairs: they come out as (x, x) here too.
+    pair is already (least, greatest). Null and duplicate ids raise the
+    grouped path's errors.
     """
     lengths = (signatures.select(F.octet_length("sig_text"))
                .limit(LOCAL_MAX_SIGNATURES + 1).collect())
@@ -727,14 +739,14 @@ def _local_lsh_pairs(
     n = table.num_rows
     ids = np.empty(n, dtype=object)
     ids[:] = table.column("conv_id").to_pylist()
-    null = np.equal(ids, None)
-    uniq, codes = np.unique(ids[~null], return_inverse=True)
-    if len(uniq) < n - min(int(null.sum()), 1):
+    n_null = int(np.equal(ids, None).sum())
+    if n_null:
+        raise _null_ids_error(n_null, n)
+    uniq, doc = np.unique(ids, return_inverse=True)
+    if len(uniq) < n:
         raise ValueError(
             f"duplicate input ids ({n} id rows, {len(uniq)} distinct); "
             "ids must be one row per entity")
-    doc = np.full(n, len(uniq), dtype=np.int64)  # the null id's code
-    doc[~null] = codes
     doc_keys = band_keys(table.column("sig_text"), num_hashes, bands,
                          char_ngram, seed)
     doc = np.repeat(doc, bands)
@@ -750,7 +762,7 @@ def _local_lsh_pairs(
     spark = signatures.sparkSession
     if int((sizes[kept] * (sizes[kept] - 1) // 2).sum()) > LOCAL_MAX_BLOCK_PAIRS:
         # the keys, not the texts, go back: the band-key UDF does not rerun
-        keys_df = _arrow_frame(spark, pa.table({
+        keys_df = arrow_frame(spark, pa.table({
             "conv_id": table.column("conv_id"),
             "bands": pa.ListArray.from_arrays(
                 np.arange(0, n * bands + 1, bands, dtype=np.int32),
@@ -766,39 +778,19 @@ def _local_lsh_pairs(
         capped_at=block_cap,
         extra={"strategy": "local"},
     )
-    n_codes = len(uniq) + 1
+    n_codes = len(uniq)
     packed = [np.empty(0, dtype=np.int64)]
     for size in np.unique(sizes[kept]):
         members = doc[starts[kept & (sizes == size)][:, None] + np.arange(size)]
         i, j = np.triu_indices(size, 1)
         packed.append((members[:, i] * n_codes + members[:, j]).ravel())
     a, b = np.divmod(np.unique(np.concatenate(packed)), n_codes)
-    b = np.where(b == len(uniq), a, b)
     stats.extra["n_pairs"] = len(a)
-    vals = pa.array(np.append(uniq, None), type=table.schema.field("conv_id").type)
-    return _arrow_frame(spark, pa.table({
+    vals = pa.array(uniq, type=table.schema.field("conv_id").type)
+    return arrow_frame(spark, pa.table({
         "conv_id_a": vals.take(pa.array(a)),
         "conv_id_b": vals.take(pa.array(b)),
     })), stats
-
-
-def _arrow_frame(spark, table: pa.Table) -> DataFrame:
-    """``table`` as a DataFrame over its Arrow batches, in at most
-    ``defaultParallelism`` partitions (Spark makes one per 10k-row batch).
-
-    Never a LocalRelation: below ``spark.sql.execution.arrow.
-    localRelationThreshold`` (48 MiB) Spark turns the table into driver-side
-    rows that every scan serializes into its tasks. Measured on 1.44M pairs
-    (48.09 MB, just under it): 3.6-5.7 s per count against 0.3-0.6 s for
-    3.6M pairs above it."""
-    key = "spark.sql.execution.arrow.localRelationThreshold"
-    threshold = spark.conf.get(key)
-    spark.conf.set(key, "0")
-    try:
-        df = spark.createDataFrame(table)
-    finally:
-        spark.conf.set(key, threshold)
-    return df.coalesce(spark.sparkContext.defaultParallelism)
 
 
 def token_overlap_block(

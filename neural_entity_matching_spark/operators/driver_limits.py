@@ -60,3 +60,41 @@ LOCAL_MAX_SIGNATURE_BYTES = 32 << 20
 # one-thread kernel against four UDF tasks), and from one file (33k docs,
 # cap 35 with this bound set to 0) 13.0 s against 13.7 s
 LOCAL_MAX_BLOCK_PAIRS = 8_000_000
+
+# largest candidates snapshot, in rows, that run_pipeline's logistic scored
+# stage featurizes, fits and scores on the driver; above it the Spark path
+# (the featurize UDF, then a capped collect into the same fit) runs. The
+# stage also stays within LOCAL_MAX_SIGNATURES rows and
+# LOCAL_MAX_SIGNATURE_BYTES bytes of signatures.
+# Set by time: the driver runs the pair kernel on one thread (~6k pairs/s at
+# the margin), the Spark path pays its jobs and the per-task UDF floor but
+# runs the kernel in four tasks. Measured as the scored stage's wall
+# (compute, write, commit; median of 4 warm runs) against the Spark path,
+# local[4] on a 4-core host, 3g heap, resumed synth snapshots; peak RSS per
+# fresh process, the driver JVM's and the driver Python's (the Spark path's
+# Python workers not counted):
+#   ~470-char signatures: 3,335 pairs 1.43 s against 2.34 s (Python 265 MB,
+#   JVM 899 MB against 1,546 MB); 6,685 pairs 2.17 s against 2.74 s (362 MB;
+#   846 against 1,166 MB); 11,359 pairs 3.44 s against 3.25 s (401 MB; 936
+#   against 1,468 MB); 22,841 pairs 5.23 s against 4.05 s; 42,262 pairs 8.65 s
+#   against 5.40 s (450 MB; 950 against 1,904 MB).
+#   ~1,400-char signatures: 3,531 pairs 1.32 s against 2.39 s (295 MB);
+#   7,214 pairs 2.01 s against 2.58 s (420 MB); 12,423 pairs 3.29 s against
+#   3.06 s (462 MB); 24,024 pairs 5.22 s against 4.23 s; 46,305 pairs 8.99 s
+#   against 6.34 s (515 MB; 1,022 against 2,586 MB).
+# The walls cross near 10k pairs on both profiles (interpolated 10.2k and
+# 11k); the Python peak stays within ~0.5 GB and the JVM's is lower than the
+# Spark path's at every size
+LOCAL_MAX_SCORE_PAIRS = 10_000
+
+# largest label table that stage collects, in one collect capped at this
+# bound + 1 rows, to attach labels on the driver; above it the stage runs on
+# Spark. No other bound covers it: LOCAL_MAX_FIT_ROWS counts training rows,
+# and label rows that match no candidate are collected too. Set by driver
+# memory, not time. Measured as above on 3,335 pairs, the label table padded
+# with rows that match no candidate: 537 labels 1.56 s against 2.41 s; +100k
+# 1.66 s against 2.36 s (Python 273 MB); +1M 3.09 s against 4.42 s (Python
+# 698 MB, JVM 1,585 MB against 2,227 MB, whose broadcast join collects the
+# labels too); +3M 7.20 s against 9.17 s (Python 954 MB; JVM 1,989 against
+# 3,428 MB)
+LOCAL_MAX_LABEL_ROWS = 1_000_000

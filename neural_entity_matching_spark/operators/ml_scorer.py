@@ -14,6 +14,9 @@ Spark mapping:
   before the size check. numpy then runs Newton/IRLS on the objective
   spark.ml's ``LogisticRegression`` minimizes at its defaults:
   unregularized mean log-loss with an intercept, maxIter 100, tol 1e-6.
+  The checks, the row sort and the fit are ``fit_logistic``, which the
+  pipeline's scored stage also calls on the features it computed on the
+  driver (plans/pipeline.py), with no collect.
   Above the bound, spark.ml's ``LogisticRegression`` fits instead. Either
   way the result is a ``LogisticModel`` in raw feature units, and scoring
   is one JVM expression per row, ``1 / (1 + exp(-(b + sum_j w_j*x_j)))``:
@@ -95,15 +98,24 @@ def _train_logistic(labeled: DataFrame, cols: list[str]) -> LogisticModel:
         return LogisticModel(tuple(cols),
                              tuple(fitted.coefficients.toArray().tolist()),
                              float(fitted.intercept))
-    x = pdf[cols].to_numpy(dtype=np.float64)
-    y = pdf["y"].to_numpy(dtype=np.float64)
+    return fit_logistic(pdf[cols].to_numpy(dtype=np.float64),
+                        pdf["y"].to_numpy(dtype=np.float64), cols)
+
+
+def fit_logistic(x: np.ndarray, y: np.ndarray, cols: list[str]) -> LogisticModel:
+    """The driver fit on training rows ``x`` (one column per ``cols``, a
+    null as NaN) and labels ``y``: the row checks, the row sort, then
+    ``_newton_logistic``. The scored stage's driver path calls it on rows
+    it never collected through Spark."""
+    x = np.asarray(x, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
     if not np.isfinite(x).all():
         raise ValueError(f"null or non-finite feature value in {cols}")
     if not np.isin(y, (0.0, 1.0)).all():
         raise ValueError("labels y must be 0 or 1")
-    # toPandas returns rows in partition order, and the fit's float sums
-    # depend on row order: sort by (y, features) so any partitioning of
-    # the same rows gives bit-identical coefficients
+    # rows arrive in partition (or join) order, and the fit's float sums
+    # depend on row order: sort by (y, features) so any order of the same
+    # rows gives bit-identical coefficients
     order = np.lexsort(np.column_stack([x, y]).T)
     x, y = x[order], y[order]
     coef, intercept = _newton_logistic(x, y)

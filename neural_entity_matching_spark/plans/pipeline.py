@@ -18,8 +18,18 @@ that write. Clustering runs on the driver (``algorithm='local'``) when
 the scored stage's row count, which bounds the match count, is at most
 ``LOCAL_MAX_EDGES``; above it, distributed label propagation.
 
-The scored stage reads its two inputs spread over every core. At small
-scale each snapshot is one parquet file and reads back as one partition;
+The logistic matcher's scored stage runs on the driver within
+``LOCAL_MAX_SCORE_PAIRS`` candidates and the blocker's signature row and
+byte bounds (``_score_on_driver``): pyarrow reads both committed
+snapshots, the featurize kernel runs once in numpy, and labels, the
+single-class guard and the fit follow on the driver, with one capped
+label collect as the only job before the snapshot write, which scores.
+Above a bound, and for the ``gbt``/``random_forest`` matchers, whose
+spark.ml fits depend on partitioning, the Spark path below runs.
+
+The scored stage's Spark path reads its two inputs spread over every
+core. At small scale each snapshot is one parquet file and reads back as
+one partition;
 both payload joins then broadcast the candidate table and stream the
 one-partition signature table, so the whole per-pair kernel (the
 Levenshtein cascade, or the featurize Arrow UDF) would run in one task.
@@ -39,7 +49,9 @@ from __future__ import annotations
 import json
 from dataclasses import asdict, dataclass, field
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,14 +59,28 @@ from neural_entity_matching_spark.functions.minhash import HASH_FAMILY
 from neural_entity_matching_spark.functions.normalize import build_signatures
 from neural_entity_matching_spark.operators.blocking import lsh_block
 from neural_entity_matching_spark.operators.clustering import connected_components
-from neural_entity_matching_spark.operators.driver_limits import LOCAL_MAX_EDGES
+from neural_entity_matching_spark.operators.driver_limits import (
+    LOCAL_MAX_EDGES,
+    LOCAL_MAX_FIT_ROWS,
+    LOCAL_MAX_LABEL_ROWS,
+    LOCAL_MAX_SCORE_PAIRS,
+    LOCAL_MAX_SIGNATURE_BYTES,
+    LOCAL_MAX_SIGNATURES,
+)
 from neural_entity_matching_spark.operators.scoring import (
+    FEATURE_COLS,
+    attach_labels,
+    attach_labels_local,
+    degenerate_scorer,
     fast_threshold_score,
     featurize_pairs,
+    featurize_pairs_local,
+    is_single_class,
 )
 from neural_entity_matching_spark.sources.io import (
     CheckpointManager,
     StageResult,
+    arrow_frame,
     fingerprint,
 )
 
@@ -135,13 +161,62 @@ class PipelineReport:
 def _spread(res: StageResult) -> DataFrame:
     """``res.df`` round-robin repartitioned to ``defaultParallelism`` when
     its snapshot read has fewer non-empty partitions than that, else
-    ``res.df`` itself. The count is ``len(res.partition_rows)``, which the
+    ``res.df`` itself; the scored stage's Spark path reads its inputs
+    through it. The count is ``len(res.partition_rows)``, which the
     commit took from the planned read and the data files' footers: no
     job."""
     n = res.df.sparkSession.sparkContext.defaultParallelism
     if len(res.partition_rows) >= n:
         return res.df
     return res.df.repartition(n)
+
+
+def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
+                     labeled_pairs: DataFrame,
+                     threshold: float) -> DataFrame | None:
+    """The logistic scored stage computed on the driver, or None above a
+    bound, where the Spark path runs instead.
+
+    Within ``LOCAL_MAX_SCORE_PAIRS`` candidates, ``LOCAL_MAX_SIGNATURES``
+    signatures and ``LOCAL_MAX_SIGNATURE_BYTES`` bytes of ``sig_text``
+    (the counts from ``_SNAPSHOT.json``, the bytes from the footers), it
+    reads both snapshots with pyarrow and collects at most
+    ``LOCAL_MAX_LABEL_ROWS`` labels in one capped Arrow collect, the
+    stage's only job before its write. It then featurizes
+    (``featurize_pairs_local``), attaches the labels
+    (``attach_labels_local``, None above ``LOCAL_MAX_FIT_ROWS`` training
+    rows), applies the single-class guard and fits (``fit_logistic``).
+    The features go back as a frame over Arrow batches, and
+    ``score_with_model``'s JVM expression scores them inside the snapshot
+    write. Every feature, coefficient and decision equals the Spark
+    path's."""
+    from neural_entity_matching_spark.operators.ml_scorer import (
+        fit_logistic,
+        score_with_model,
+    )
+
+    if (cand_res.rows > LOCAL_MAX_SCORE_PAIRS
+            or sig_res.rows > LOCAL_MAX_SIGNATURES
+            or sig_res.column_bytes("sig_text") > LOCAL_MAX_SIGNATURE_BYTES):
+        return None
+    labels = (labeled_pairs.select("conv_id_a", "conv_id_b", "y")
+              .limit(LOCAL_MAX_LABEL_ROWS + 1).toArrow())
+    if labels.num_rows > LOCAL_MAX_LABEL_ROWS:
+        return None
+    feats = featurize_pairs_local(
+        cand_res.to_arrow(),
+        sig_res.to_arrow(["conv_id", "sig_text"], dictionary=("sig_text",)))
+    train = attach_labels_local(feats, labels, LOCAL_MAX_FIT_ROWS)
+    if train is None:
+        return None
+    frame = arrow_frame(cand_res.df.sparkSession, feats)
+    y = train.column("y")
+    if pc.count_distinct(y, mode="all").as_py() < 2:
+        return degenerate_scorer(frame)
+    x = np.column_stack([train.column(c).to_numpy(zero_copy_only=False)
+                         for c in FEATURE_COLS])
+    model = fit_logistic(x, y.to_numpy(), FEATURE_COLS)
+    return score_with_model(model, frame, threshold=threshold)
 
 
 def _labels_digest(labeled_pairs: DataFrame) -> str:
@@ -313,6 +388,11 @@ def run_pipeline(
     feat_handle: list[DataFrame] = []
 
     def compute_scored():
+        if cfg.scorer == "logistic":
+            local = _score_on_driver(cand_res, sig_res, labeled_pairs,
+                                     cfg.threshold)
+            if local is not None:
+                return local
         # the per-pair kernel runs in the tasks that stream the signature
         # side of the payload joins: spread one-file snapshot reads over
         # every core first (see the module docstring for why it is
@@ -327,11 +407,6 @@ def run_pipeline(
             from neural_entity_matching_spark.operators.ml_scorer import (
                 score_with_model,
                 train_scorer,
-            )
-            from neural_entity_matching_spark.operators.scoring import (
-                attach_labels,
-                degenerate_scorer,
-                is_single_class,
             )
 
             feats = featurize_pairs(cand, sigs).persist()

@@ -43,6 +43,11 @@ fails that check, and the stage is recomputed like a fingerprint
 miss). A snapshot written before ``partition_rows`` or ``schema``
 existed gains the missing key on resume, from the footers, with no job.
 
+A stage that runs on the driver reads a committed snapshot with pyarrow
+(``StageResult.to_arrow``), sized first from its committed ``rows`` and
+its footers' column bytes (``StageResult.column_bytes``), with no job;
+``arrow_frame`` hands a driver-held Arrow table back to Spark.
+
 The reference has nothing comparable: it pickles only final result objects
 (reference script/model_magellan_ml.py:428-430).
 """
@@ -53,8 +58,9 @@ import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -99,6 +105,9 @@ class StageResult:
     ``partition_rows``: ``(partition_id, rows)`` per non-empty partition
     of ``df`` as Spark planned the read when the snapshot was committed,
     ascending; the rows sum to ``rows``.
+    ``data``: the snapshot's data directory.
+    ``footers``: the parquet footer of each data file under ``data``, by
+    file name, as the commit or the resume check read them.
     """
 
     df: DataFrame
@@ -107,6 +116,35 @@ class StageResult:
     rows: int
     wall_ms: int
     partition_rows: list[tuple[int, int]]
+    data: str = ""
+    footers: dict[str, pq.FileMetaData] = field(default_factory=dict,
+                                                repr=False)
+
+    def column_bytes(self, name: str) -> int:
+        """Uncompressed bytes of column ``name`` in the data files, summed
+        over the footers' column chunks, with no read. For a string column
+        this is at least the UTF-8 bytes of its distinct values: a
+        dictionary-encoded chunk stores each distinct value once, a plain
+        one every value, each with a 4-byte length."""
+        return sum(
+            md.row_group(i).column(j).total_uncompressed_size
+            for md in self.footers.values()
+            for i in range(md.num_row_groups)
+            for j in range(md.num_columns)
+            if md.row_group(i).column(j).path_in_schema == name)
+
+    def to_arrow(self, columns: list[str] | None = None,
+                 dictionary: tuple[str, ...] = ()) -> pa.Table:
+        """The snapshot's ``columns`` (default: all) read on the driver with
+        pyarrow, from the data files the footers name, with no Spark job.
+        A column in ``dictionary`` reads as one dictionary array, which
+        holds each distinct value once, so its values take at most
+        ``column_bytes`` however often they repeat."""
+        table = pa.concat_tables([
+            pq.read_table(os.path.join(self.data, n), columns=columns,
+                          read_dictionary=list(dictionary))
+            for n in sorted(self.footers)])
+        return table.unify_dictionaries().combine_chunks()
 
 
 # where Spark's parquet writer stores the row schema in each footer
@@ -178,6 +216,25 @@ def _partition_rows(df: DataFrame, footers: dict[str, pq.FileMetaData]
         if n:
             parts.append((p.index(), n))
     return parts
+
+
+def arrow_frame(spark, table: pa.Table) -> DataFrame:
+    """``table`` as a DataFrame over its Arrow batches, in at most
+    ``defaultParallelism`` partitions (Spark makes one per 10k-row batch).
+
+    Never a LocalRelation: below ``spark.sql.execution.arrow.
+    localRelationThreshold`` (48 MiB) Spark turns the table into driver-side
+    rows that every scan serializes into its tasks. Measured on 1.44M pairs
+    (48.09 MB, just under it): 3.6-5.7 s per count against 0.3-0.6 s for
+    3.6M pairs above it."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        df = spark.createDataFrame(table)
+    finally:
+        spark.conf.set(key, threshold)
+    return df.coalesce(spark.sparkContext.defaultParallelism)
 
 
 class CheckpointManager:
@@ -253,7 +310,8 @@ class CheckpointManager:
                     self._commit(meta, snap)
                 return StageResult(df, snapshot_id, True, snap["rows"],
                                    snap.get("wall_ms", 0),
-                                   [tuple(p) for p in snap["partition_rows"]])
+                                   [tuple(p) for p in snap["partition_rows"]],
+                                   data, footers)
             # the data files no longer add up to the committed rows (one
             # was lost, added or replaced): recompute, as on a miss
 
@@ -277,7 +335,8 @@ class CheckpointManager:
                             "rows": rows, "wall_ms": wall_ms,
                             "partition_rows": parts,
                             "schema": schema.jsonValue()})
-        return StageResult(df, snapshot_id, False, rows, wall_ms, parts)
+        return StageResult(df, snapshot_id, False, rows, wall_ms, parts,
+                           data, footers)
 
     def invalidate(self, stage: str, snapshot_id: str = "") -> None:
         _, meta = self._paths(stage, snapshot_id)

@@ -114,17 +114,17 @@ def test_duplicate_ids_raise_on_both_paths(spark, monkeypatch):
 
 
 def test_null_id_same_on_both_paths(spark, monkeypatch):
-    sigs = _sigs(spark, BASE + [(None, BASE[0][1])])
-    pairs, _ = _assert_same(lsh_block(sigs, block_cap=BLOCK_CAP, **LSH),
-                            _grouped(monkeypatch, sigs))
-    # least/greatest drops the null end of a pair on the Spark path
-    assert ("a1", "a1") in pairs
-    two_nulls = _sigs(spark, BASE + [(None, "x"), (None, "y")])
-    with pytest.raises(ValueError) as local:
-        lsh_block(two_nulls, block_cap=BLOCK_CAP, **LSH)
-    with pytest.raises(ValueError) as grouped:
-        _grouped(monkeypatch, two_nulls)
-    assert str(local.value) == str(grouped.value)
+    # a null id raises, where it used to make every doc in its blocks a
+    # self-pair (x, x)
+    for nulls in ([(None, BASE[0][1])], [(None, "x"), (None, "y")]):
+        sigs = _sigs(spark, BASE + nulls)
+        with pytest.raises(ValueError) as local:
+            lsh_block(sigs, block_cap=BLOCK_CAP, **LSH)
+        with pytest.raises(ValueError) as grouped:
+            _grouped(monkeypatch, sigs)
+        assert str(local.value) == str(grouped.value)
+        assert str(local.value).startswith(
+            f"null input ids ({len(nulls)} of {len(BASE) + len(nulls)} id rows)")
 
 
 def test_pair_bound_falls_back_to_grouped(spark, monkeypatch):

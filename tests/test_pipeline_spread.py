@@ -52,6 +52,9 @@ def test_scored_stage_kernels_read_spread_inputs(spark, fixture_small, tmp_path,
                         spy(scoring.fast_threshold_score))
     monkeypatch.setattr(pipeline, "featurize_pairs",
                         spy(scoring.featurize_pairs))
+    # the logistic stage runs on the driver below this bound, with no
+    # spread; 0 keeps it on the Spark path this test checks
+    monkeypatch.setattr(pipeline, "LOCAL_MAX_SCORE_PAIRS", 0)
     _, report = run_pipeline(
         spark, transcripts, str(tmp_path / "ckpt"),
         PipelineConfig(scorer=scorer), input_fingerprint="fx-small",
