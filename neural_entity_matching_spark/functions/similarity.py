@@ -25,6 +25,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType
 
+# code points of each text that featurize's edit distance sees: the
+# default of featurize_pairs' and fast_threshold_score's ``lev_prefix``
+# and the prefix of the scored stage's driver path
+# (scoring.featurize_pairs_local), so all of them measure the same window
+LEV_PREFIX = 512
+
 
 def lev_ratio(a: Column, b: Column) -> Column:
     """Levenshtein similarity ratio in [0,100] (JVM built-in, codegen).
@@ -59,7 +65,8 @@ def token_jaccard(a: Column, b: Column) -> Column:
 
 def len_ratio(a: Column, b: Column) -> Column:
     """min(len)/max(len) — cheap length feature (abs-norm analogue of
-    Magellan's numeric features)."""
+    Magellan's numeric features). ``scoring.featurize_pairs_local``
+    computes it in numpy too: a change here must reach that copy."""
     return F.least(F.length(a), F.length(b)) / F.greatest(
         F.length(a), F.length(b), F.lit(1)
     )
@@ -458,7 +465,8 @@ def _token_sets_jaccard(av: np.ndarray, bv: np.ndarray):
     return ti, tu
 
 
-def lev_tokjac(av: np.ndarray, bv: np.ndarray, lev_prefix: int | None = 512,
+def lev_tokjac(av: np.ndarray, bv: np.ndarray,
+               lev_prefix: int | None = LEV_PREFIX,
                chunk: int = 2048, cell_budget: int = 1 << 20):
     """``(d, ti, tu)`` per pair of non-null strings: the exact Levenshtein
     distance over the first ``lev_prefix`` code points (Python slicing and
@@ -477,7 +485,7 @@ def lev_tokjac(av: np.ndarray, bv: np.ndarray, lev_prefix: int | None = 512,
     return _lev_distance_batch(av, bv, chunk, cell_budget), ti, tu
 
 
-def lev_tokjac_udf(lev_prefix: int | None = 512):
+def lev_tokjac_udf(lev_prefix: int | None = LEV_PREFIX):
     """Factory: ``lev_tokjac`` as one Arrow pass, null when either string
     is null.
 

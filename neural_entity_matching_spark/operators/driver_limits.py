@@ -78,18 +78,28 @@ LOCAL_MAX_BLOCK_PAIRS = 8_000_000
 #   846 against 1,166 MB); 11,359 pairs 3.44 s against 3.25 s (401 MB; 936
 #   against 1,468 MB); 22,841 pairs 5.23 s against 4.05 s; 42,262 pairs 8.65 s
 #   against 5.40 s (450 MB; 950 against 1,904 MB).
-#   ~1,400-char signatures: 3,531 pairs 1.32 s against 2.39 s (295 MB);
-#   7,214 pairs 2.01 s against 2.58 s (420 MB); 12,423 pairs 3.29 s against
-#   3.06 s (462 MB); 24,024 pairs 5.22 s against 4.23 s; 46,305 pairs 8.99 s
-#   against 6.34 s (515 MB; 1,022 against 2,586 MB).
-# The walls cross near 10k pairs on both profiles (interpolated 10.2k and
-# 11k); the Python peak stays within ~0.5 GB and the JVM's is lower than the
-# Spark path's at every size
+#   ~1,400-char signatures (the same texts tripled, so the same distinct
+#   tokens): 3,531 pairs 1.32 s against 2.39 s (295 MB); 7,214 pairs 2.01 s
+#   against 2.58 s (420 MB); 12,423 pairs 3.29 s against 3.06 s (462 MB);
+#   24,024 pairs 5.22 s against 4.23 s; 46,305 pairs 8.99 s against 6.34 s
+#   (515 MB; 1,022 against 2,586 MB).
+#   ~20-22 KB signatures (every word w of the texts as w0 .. w39, so 40x the
+#   length and the distinct tokens): 5,041 pairs 3.01 s against 4.73 s
+#   (371 MB; 1,028 against 2,882 MB); 8,644 pairs 4.55 s against 5.51 s
+#   (460 MB; 1,274 against 3,106 MB); 14,388 pairs 6.92 s against 8.02 s
+#   (462 MB; 810 against 3,608 MB); 28,095 pairs 11.09 s against 13.74 s
+#   (491 MB; 1,094 against 4,400 MB).
+# The walls cross near 10k pairs on the first two profiles (interpolated
+# 10.2k and 11k); on long texts the driver path is faster at every size
+# measured (where the Spark path spends the extra time was not traced).
+# The Python peak stays within ~0.5 GB and the JVM's is lower than the Spark
+# path's at every size. The bound is the short-text crossover
 LOCAL_MAX_SCORE_PAIRS = 10_000
 
-# largest label table that stage collects, in one collect capped at this
-# bound + 1 rows, to attach labels on the driver; above it the stage runs on
-# Spark. No other bound covers it: LOCAL_MAX_FIT_ROWS counts training rows,
+# largest label table that stage collects, in one collect, to attach labels
+# on the driver; above it the stage runs on Spark and collects nothing. The
+# row count is the one run_pipeline's label digest already takes for the
+# scored fingerprint, so the check costs no job. No other bound covers it: LOCAL_MAX_FIT_ROWS counts training rows,
 # and label rows that match no candidate are collected too. Set by driver
 # memory, not time. Measured as above on 3,335 pairs, the label table padded
 # with rows that match no candidate: 537 labels 1.56 s against 2.41 s; +100k

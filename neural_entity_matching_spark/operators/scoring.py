@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neural_entity_matching_spark.functions.similarity import (
+    LEV_PREFIX,
     jaro_winkler_udf,
     len_ratio,
     lev_tokjac,
@@ -117,7 +118,7 @@ def featurize_pairs(
     candidates: DataFrame,
     signatures: DataFrame,
     with_jaro_winkler: bool = False,
-    lev_prefix: int | None = 512,
+    lev_prefix: int | None = LEV_PREFIX,
     broadcast_signatures: bool = False,
     with_tfidf: bool = False,
     tfidf_max_df: int | None = None,
@@ -181,7 +182,9 @@ def featurize_pairs(
     # per signature). lev_ratio / token_jaccard are reconstructed with
     # float expressions copied term-for-term from similarity.lev_ratio /
     # token_jaccard, so every double is bit-identical to the JVM
-    # expressions (oracle-checked by pair_features).
+    # expressions (oracle-checked by pair_features). featurize_pairs_local
+    # computes the same three expressions in numpy: a change to one must
+    # reach the other (test_local_scoring compares them bit for bit).
     out = (
         candidates.join(_side("a"), "conv_id_a").join(_side("b"), "conv_id_b")
         .withColumn(
@@ -251,10 +254,11 @@ def featurize_pairs(
     return out.drop("sig_a", "sig_b")
 
 
-def featurize_pairs_local(candidates: pa.Table, signatures: pa.Table,
-                          lev_prefix: int | None = 512) -> pa.Table:
-    """``featurize_pairs`` (default features) on driver-held Arrow tables:
-    the same rows, the same column order and bit-identical doubles.
+def featurize_pairs_local(candidates: pa.Table,
+                          signatures: pa.Table) -> pa.Table:
+    """``featurize_pairs`` (default features, ``lev_prefix=LEV_PREFIX``)
+    on driver-held Arrow tables: the same rows, the same column order and
+    bit-identical doubles.
 
     ``signatures`` holds ``conv_id`` and ``sig_text``, plain or dictionary
     encoded. As in the two inner joins, a candidate whose id has no
@@ -289,15 +293,21 @@ def featurize_pairs_local(candidates: pa.Table, signatures: pa.Table,
     cb = pairs.column("_code_b").to_numpy()
     null_a, null_b = ca == n, cb == n
     ok = ~(null_a | null_b)
-    d, ti, tu = lev_tokjac(vals[ca[ok]], vals[cb[ok]], lev_prefix,
+    d, ti, tu = lev_tokjac(vals[ca[ok]], vals[cb[ok]], LEV_PREFIX,
                            chunk=8192, cell_budget=1 << 23)
     la, lb = lens[ca], lens[cb]  # 0 for a null text
-    pla, plb = ((la, lb) if lev_prefix is None
-                else (np.minimum(la, lev_prefix), np.minimum(lb, lev_prefix)))
+    # featurize_pairs' lev_ratio: 100.0 * (1.0 - _lj.d /
+    # greatest(length(substring(sig_a, 1, LEV_PREFIX)), length(...b), 1)),
+    # null where the UDF's d is null
+    pla, plb = np.minimum(la[ok], LEV_PREFIX), np.minimum(lb[ok], LEV_PREFIX)
     lev = np.zeros(len(ca))
-    lev[ok] = 100.0 * (1.0 - d / np.maximum(np.maximum(pla[ok], plb[ok]), 1))
+    lev[ok] = 100.0 * (1.0 - d / np.maximum(np.maximum(pla, plb), 1))
+    # its token_jaccard: when(_lj.tu > 0, _lj.ti / _lj.tu).otherwise(0.0),
+    # where a null tu fails the test
     jac = np.zeros(len(ca))
     jac[ok] = np.divide(ti, tu, out=np.zeros(len(ti)), where=tu > 0)
+    # similarity.len_ratio: least(length(a), length(b)) /
+    # greatest(length(a), length(b), 1), least and greatest skipping nulls
     lo = np.where(null_a, lb, np.where(null_b, la, np.minimum(la, lb)))
     lenr = lo / np.maximum(np.maximum(la, lb), 1)
     # the joins' column order: each using-key first, then the rest
@@ -317,7 +327,7 @@ def fast_threshold_score(
     threshold: float = 0.55,
     w_lev: float = 0.5,
     w_jacc: float = 0.5,
-    lev_prefix: int = 512,
+    lev_prefix: int = LEV_PREFIX,
     broadcast_signatures: bool = False,
 ) -> DataFrame:
     """Decision-exact fused featurize+score using *thresholded* levenshtein.

@@ -22,8 +22,9 @@ The logistic matcher's scored stage runs on the driver within
 ``LOCAL_MAX_SCORE_PAIRS`` candidates and the blocker's signature row and
 byte bounds (``_score_on_driver``): pyarrow reads both committed
 snapshots, the featurize kernel runs once in numpy, and labels, the
-single-class guard and the fit follow on the driver, with one capped
-label collect as the only job before the snapshot write, which scores.
+single-class guard and the fit follow on the driver, with one label
+collect as the only job before the snapshot write, which scores. The
+label count comes from the label digest's aggregate, before any collect.
 Above a bound, and for the ``gbt``/``random_forest`` matchers, whose
 spark.ml fits depend on partitioning, the Spark path below runs.
 
@@ -172,17 +173,18 @@ def _spread(res: StageResult) -> DataFrame:
 
 
 def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
-                     labeled_pairs: DataFrame,
+                     labeled_pairs: DataFrame, n_labels: int,
                      threshold: float) -> DataFrame | None:
     """The logistic scored stage computed on the driver, or None above a
     bound, where the Spark path runs instead.
 
     Within ``LOCAL_MAX_SCORE_PAIRS`` candidates, ``LOCAL_MAX_SIGNATURES``
     signatures and ``LOCAL_MAX_SIGNATURE_BYTES`` bytes of ``sig_text``
-    (the counts from ``_SNAPSHOT.json``, the bytes from the footers), it
-    reads both snapshots with pyarrow and collects at most
-    ``LOCAL_MAX_LABEL_ROWS`` labels in one capped Arrow collect, the
-    stage's only job before its write. It then featurizes
+    (the counts from ``_SNAPSHOT.json``, the bytes from the footers) and
+    ``LOCAL_MAX_LABEL_ROWS`` labels (``n_labels``, the count
+    ``_labels_digest`` took), it reads both snapshots with pyarrow and
+    collects the labels as one Arrow table, the stage's only job before
+    its write. It then featurizes
     (``featurize_pairs_local``), attaches the labels
     (``attach_labels_local``, None above ``LOCAL_MAX_FIT_ROWS`` training
     rows), applies the single-class guard and fits (``fit_logistic``).
@@ -197,12 +199,10 @@ def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
 
     if (cand_res.rows > LOCAL_MAX_SCORE_PAIRS
             or sig_res.rows > LOCAL_MAX_SIGNATURES
-            or sig_res.column_bytes("sig_text") > LOCAL_MAX_SIGNATURE_BYTES):
+            or sig_res.column_bytes("sig_text") > LOCAL_MAX_SIGNATURE_BYTES
+            or n_labels > LOCAL_MAX_LABEL_ROWS):
         return None
-    labels = (labeled_pairs.select("conv_id_a", "conv_id_b", "y")
-              .limit(LOCAL_MAX_LABEL_ROWS + 1).toArrow())
-    if labels.num_rows > LOCAL_MAX_LABEL_ROWS:
-        return None
+    labels = labeled_pairs.select("conv_id_a", "conv_id_b", "y").toArrow()
     feats = featurize_pairs_local(
         cand_res.to_arrow(),
         sig_res.to_arrow(["conv_id", "sig_text"], dictionary=("sig_text",)))
@@ -219,16 +219,17 @@ def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
     return score_with_model(model, frame, threshold=threshold)
 
 
-def _labels_digest(labeled_pairs: DataFrame) -> str:
+def _labels_digest(labeled_pairs: DataFrame) -> tuple[str, int]:
     """Order-independent content digest of the label table (bit_xor of
-    row hashes + count). One aggregate job over the o(corpus) label set —
-    cheap insurance that a trained scorer never resumes a snapshot built
-    from different labels."""
+    row hashes + count), and the count. One aggregate job over the
+    o(corpus) label set — cheap insurance that a trained scorer never
+    resumes a snapshot built from different labels; the count is what the
+    scored stage's driver path checks against ``LOCAL_MAX_LABEL_ROWS``."""
     row = labeled_pairs.agg(
         F.bit_xor(F.xxhash64("conv_id_a", "conv_id_b", "y")).alias("h"),
         F.count("*").alias("n"),
     ).collect()[0]
-    return f"+labels:{row['n']}:{row['h']}"
+    return f"+labels:{row['n']}:{row['h']}", row["n"]
 
 
 # the run_metrics row: per-partition lineage rows carry partition_id,
@@ -390,7 +391,7 @@ def run_pipeline(
     def compute_scored():
         if cfg.scorer == "logistic":
             local = _score_on_driver(cand_res, sig_res, labeled_pairs,
-                                     cfg.threshold)
+                                     n_labels, cfg.threshold)
             if local is not None:
                 return local
         # the per-pair kernel runs in the tasks that stream the signature
@@ -424,11 +425,11 @@ def run_pipeline(
     # fold the label-set identity into the scored fingerprint for trained
     # scorers: same config + same candidates + DIFFERENT labels must
     # retrain, never resume the stale snapshot
-    labels_fp = ""
+    labels_fp, n_labels = "", 0
     if cfg.scorer in ("logistic", "gbt", "random_forest"):
         if labeled_pairs is None:
             raise ValueError(f"scorer={cfg.scorer!r} needs labeled_pairs")
-        labels_fp = _labels_digest(labeled_pairs)
+        labels_fp, n_labels = _labels_digest(labeled_pairs)
 
     scored_res = stage(
         "scored", cand_res.snapshot_id + labels_fp, compute_scored,
