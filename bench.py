@@ -3,12 +3,26 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Headline set = the scale-path operators (LSH dedup, TF-IDF cosine, ANN
 top-k, windowed agg, sessionization, joins/aggs) over the driver tables,
-plus the flagship ER pipeline (signature -> LSH block -> featurize ->
-score -> cluster) over a deterministic synthetic transcript corpus sized
-to the scale factor.
+plus the flagship ER pipeline over a deterministic synthetic transcript
+corpus sized to the scale factor.
+
+The ER pipeline is ``run_pipeline`` itself, called twice per round into
+one fresh temporary checkpoint dir that the round removes afterwards:
+
+* the ER leg, ``PipelineConfig()`` (the threshold scorer): every stage
+  computes and commits its snapshot. ``er_pipeline`` is the call's wall,
+  so snapshot writes, commits and the ``run_metrics`` append count;
+  ``er_info``'s block / score / cluster walls are the report's stage
+  walls (block = signatures + candidates);
+* the ML leg, ``PipelineConfig(scorer="logistic", threshold=0.5)``: the
+  signatures and candidates snapshots resume, so it times the trained
+  matcher only. Its wall is the scored stage's; featurize and train are
+  the part walls that stage records, and score is the rest.
+
+Cluster and match counts are taken outside every wall.
 
 Measurement protocol (interleaved rounds, median and min): the
-WHOLE query set runs ``SPARK_GRAFT_BENCH_ROUNDS`` (default 3) full
+WHOLE query set runs ``SPARK_GRAFT_BENCH_ROUNDS`` (default 4) full
 interleaved rounds and the reported per-query number is the MEDIAN
 across rounds; the raw per-round values are published under
 ``queries_raw``. This kills two artifacts that polluted earlier
@@ -32,8 +46,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -57,152 +73,89 @@ BENCH_QUERIES = [
 ER_N_BASE = {0.001: 100, 0.01: 600, 0.1: 3000}
 
 
-def run_er_pipeline(spark, transcripts) -> dict:
-    """Full ER chain on the (pre-cached) synthetic corpus; returns
-    per-stage wall times + outputs. ``transcripts`` is cached by the
-    caller so synthesis/upload stay outside the timed section."""
-    from pyspark.sql import functions as F
+def run_er_leg(spark, transcripts, checkpoint_dir: str) -> dict:
+    """``run_pipeline(PipelineConfig())`` (the threshold scorer) into an
+    empty ``checkpoint_dir``; returns its walls and outputs.
 
-    from neural_entity_matching_spark.functions.normalize import build_signatures
-    from neural_entity_matching_spark.operators.blocking import lsh_block
-    from neural_entity_matching_spark.operators.clustering import connected_components
-    from neural_entity_matching_spark.operators.scoring import fast_threshold_score
+    ``wall`` is the call's wall. The stage walls are the report's:
+    ``block_wall`` is signatures plus candidates, ``score_wall`` and
+    ``cluster_wall`` the scored and clusters stages. The cluster count
+    is taken after the call, outside every wall."""
+    from neural_entity_matching_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
 
     t0 = time.monotonic()
-    sigs = build_signatures(transcripts).cache()
-    # blocks and scores on string ids, as run_pipeline does. No locality
-    # sort of the pairs: sortWithinPartitions before scoring A/B measured
-    # a net LOSS on local[32] at 261k AND 5.0M pairs — it only pays on
-    # bandwidth-starved 1-core executors.
-    candidates, stats = lsh_block(
-        sigs, num_hashes=128, bands=64, char_ngram=8, seed=42, block_cap=35,
-    )
-    t1 = time.monotonic()
-    scored = fast_threshold_score(
-        candidates, sigs, threshold=0.55, broadcast_signatures=True,
-    ).cache()
-    n_pairs = scored.count()  # materialize BEFORE filtering is_match
-    t2 = time.monotonic()
-    clusters = connected_components(
-        scored.filter(F.col("is_match") == 1).select("conv_id_a", "conv_id_b"),
-        vertices=sigs,
-    )
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    t3 = time.monotonic()
-    scored.unpersist()
-    candidates.unpersist()
-    sigs.unpersist()
+    clusters, report = run_pipeline(spark, transcripts, checkpoint_dir,
+                                    PipelineConfig(), run_id="bench-er")
+    wall = time.monotonic() - t0
+    st = report.stages
     return {
-        "wall": t3 - t0,
-        "block_wall": t1 - t0,
-        "score_wall": t2 - t1,
-        "cluster_wall": t3 - t2,
-        "pairs": n_pairs,
-        "clusters": n_clusters,
-        "oversized_blocks": stats.oversized_blocks,
+        "wall": wall,
+        "block_wall": (st["signatures"]["wall_ms"]
+                       + st["candidates"]["wall_ms"]) / 1000,
+        "score_wall": st["scored"]["wall_ms"] / 1000,
+        "cluster_wall": st["clusters"]["wall_ms"] / 1000,
+        "pairs": st["candidates"]["rows"],
+        "clusters": clusters.select("cluster_id").distinct().count(),
+        "oversized_blocks": st["_blocking_stats"]["oversized_blocks"],
     }
 
 
-def run_ml_scorer(spark, transcripts, labeled) -> dict:
-    """Trained-matcher cost at bench scale (round-3 verdict item #6):
-    featurize the LSH candidates, fit the logistic matcher (M1, seed 0)
-    on the label-attached pairs, score every candidate (M2). Reported
-    under its own key (not in the headline total) so M1/M2 wall is
-    tracked round-over-round without shifting the comparable total."""
+def run_ml_leg(spark, transcripts, labeled, checkpoint_dir: str) -> dict:
+    """``run_pipeline`` with the logistic matcher (seed 0, threshold 0.5)
+    on the ``checkpoint_dir`` the ER leg wrote: signatures and
+    candidates resume, so the leg times the trained matcher only.
+
+    ``wall`` is the scored stage's wall; ``featurize_wall`` and
+    ``train_wall`` are the part walls it records, and ``score_wall`` is
+    the rest (scoring, the snapshot write and its commit). The match
+    count is taken after the call, outside every wall."""
     from pyspark.sql import functions as F
 
-    from neural_entity_matching_spark.functions.normalize import build_signatures
-    from neural_entity_matching_spark.operators.blocking import lsh_block
-    from neural_entity_matching_spark.operators.ml_scorer import (
-        score_with_model,
-        train_scorer,
-    )
-    from neural_entity_matching_spark.operators.scoring import (
-        attach_labels,
-        featurize_pairs,
+    from neural_entity_matching_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
     )
 
-    sigs = build_signatures(transcripts).cache()
-    candidates, _ = lsh_block(
-        sigs, num_hashes=128, bands=64, char_ngram=8, seed=42, block_cap=35,
-    )
-    candidates = candidates.persist()
-    n_cand = candidates.count()  # blocking outside the timed section
-
-    t0 = time.monotonic()
-    feats = featurize_pairs(candidates, sigs).persist()
-    feats.count()
-    t1 = time.monotonic()
-    model = train_scorer(attach_labels(feats, labeled), model="logistic",
-                         seed=0)
-    t2 = time.monotonic()
-    scored = score_with_model(model, feats, threshold=0.5).persist()
-    n_scored = scored.count()
-    n_matches = scored.agg(F.sum("is_match")).collect()[0][0]
-    t3 = time.monotonic()
-
-    for h in (scored, feats, candidates, sigs):
-        h.unpersist()
+    _, report = run_pipeline(
+        spark, transcripts, checkpoint_dir,
+        PipelineConfig(scorer="logistic", threshold=0.5), run_id="bench-ml",
+        labeled_pairs=labeled)
+    st = report.stages
+    if not (st["signatures"]["resumed"] and st["candidates"]["resumed"]):
+        raise RuntimeError("the ML leg did not resume blocking")
+    scored = st["scored"]
+    wall = scored["wall_ms"] / 1000
+    featurize = scored["featurize_ms"] / 1000
+    train = scored["train_ms"] / 1000
+    n_matches = (report.outputs["scored"].agg(F.sum("is_match"))
+                 .collect()[0][0])
     return {
-        "wall": t3 - t0,
-        "featurize_wall": t1 - t0,
-        "train_wall": t2 - t1,
-        "score_wall": t3 - t2,
-        "pairs": n_scored,
+        "wall": wall,
+        "featurize_wall": featurize,
+        "train_wall": train,
+        "score_wall": wall - featurize - train,
+        "pairs": scored["rows"],
         "matches": int(n_matches or 0),
-        "candidates": n_cand,
     }
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "4"))
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+def run_legs(spark, transcripts, labeled) -> tuple[dict, dict]:
+    """The ER leg, then the ML leg, in one fresh checkpoint dir that is
+    removed afterwards."""
+    ckpt = tempfile.mkdtemp(prefix="nem-bench-")
+    try:
+        return (run_er_leg(spark, transcripts, ckpt),
+                run_ml_leg(spark, transcripts, labeled, ckpt))
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
-    from neural_entity_matching_spark.plans import contract
-    from neural_entity_matching_spark.session import get_spark
-    from neural_entity_matching_spark.sources.synth import to_spark
 
-    spark = get_spark(
-        app_name="nem-bench", master=f"local[{cpus}]", shuffle_partitions=cpus,
-        tmpfs_shuffle=True)
-
-    n_base = ER_N_BASE.get(sf, max(100, int(30000 * sf)))
-    transcripts, labeled, _ = to_spark(spark, n_base=n_base, seed=42)
-    transcripts = transcripts.cache()
-    transcripts.count()
-    labeled = labeled.cache()
-    labeled.count()
-
-    # declared warm-up (outside every measured round): one ER chain on a
-    # small slice JITs the whole-stage-codegen paths and forks the
-    # Python/Arrow UDF workers. First-ROUND walls previously carried
-    # 2-4x of exactly this fixed cost (r6 raw: er 33.3/14.5/9.2s across
-    # rounds for byte-identical output); measuring steady-state is the
-    # point of the multi-round protocol, so the JIT pass is explicit
-    # rather than silently polluting round 1.
-    warm = transcripts.limit(1500).cache()
-    warm.count()
-    run_er_pipeline(spark, warm)
-    warm.unpersist()
-
-    raw: list[dict[str, float]] = []
-    er_runs: list[dict] = []
-    ml_runs: list[dict] = []
-    for _ in range(rounds):
-        q: dict[str, float] = {}
-        for name in BENCH_QUERIES:
-            fn = contract.QUERIES[name]
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            q[name] = round(time.monotonic() - t0, 3)
-        er = run_er_pipeline(spark, transcripts)
-        q["er_pipeline"] = round(er["wall"], 3)
-        raw.append(q)
-        er_runs.append(er)
-        ml_runs.append(run_ml_scorer(spark, transcripts, labeled))
-
+def summarize(raw: list[dict], er_runs: list[dict], ml_runs: list[dict],
+              sf: float, cpus: int) -> dict:
+    """The JSON line from the per-round query walls and leg results."""
     queries = {
         name: round(statistics.median(r[name] for r in raw), 3)
         for name in raw[0]
@@ -221,14 +174,14 @@ def main() -> None:
     er_wall = statistics.median(e["wall"] for e in er_runs)
     score_wall = statistics.median(e["score_wall"] for e in er_runs)
     n_pairs = er_runs[0]["pairs"]
-    out = {
+    return {
         "metric": "total_headline_seconds",
         "value": total,
         "unit": "sec",
         "queries": queries,
         "sf": sf,
         "cpus": cpus,
-        "rounds": rounds,
+        "rounds": len(raw),
         "protocol": ("median over interleaved full rounds (headline) + "
                      "min-of-rounds capability line; raw in queries_raw"),
         "queries_min": queries_min,
@@ -263,6 +216,58 @@ def main() -> None:
             "matches": ml_runs[0]["matches"],
         },
     }
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "4"))
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+
+    from neural_entity_matching_spark.plans import contract
+    from neural_entity_matching_spark.session import get_spark
+    from neural_entity_matching_spark.sources.synth import to_spark
+
+    spark = get_spark(
+        app_name="nem-bench", master=f"local[{cpus}]", shuffle_partitions=cpus,
+        tmpfs_shuffle=True)
+
+    n_base = ER_N_BASE.get(sf, max(100, int(30000 * sf)))
+    transcripts, labeled, _ = to_spark(spark, n_base=n_base, seed=42)
+    transcripts = transcripts.cache()
+    transcripts.count()
+    labeled = labeled.cache()
+    labeled.count()
+
+    # declared warm-up (outside every measured round): both legs on a
+    # small slice JIT the whole-stage-codegen paths and fork the
+    # Python/Arrow UDF workers. First-ROUND walls previously carried
+    # 2-4x of exactly this fixed cost (r6 raw: er 33.3/14.5/9.2s across
+    # rounds for byte-identical output); measuring steady-state is the
+    # point of the multi-round protocol, so the JIT pass is explicit
+    # rather than silently polluting round 1.
+    warm = transcripts.limit(1500).cache()
+    warm.count()
+    run_legs(spark, warm, labeled)
+    warm.unpersist()
+
+    raw: list[dict[str, float]] = []
+    er_runs: list[dict] = []
+    ml_runs: list[dict] = []
+    for _ in range(rounds):
+        q: dict[str, float] = {}
+        for name in BENCH_QUERIES:
+            fn = contract.QUERIES[name]
+            t0 = time.monotonic()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            q[name] = round(time.monotonic() - t0, 3)
+        er, ml = run_legs(spark, transcripts, labeled)
+        q["er_pipeline"] = round(er["wall"], 3)
+        raw.append(q)
+        er_runs.append(er)
+        ml_runs.append(ml)
+
+    out = summarize(raw, er_runs, ml_runs, sf, cpus)
     spark.stop()
     print(json.dumps(out))
 

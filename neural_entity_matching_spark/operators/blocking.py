@@ -32,8 +32,8 @@ cluster scale):
   applies the cap to the array sizes; a block above
   ``physical_block_cap`` members makes it rebuild through a size pass
   and an eligibility join, so that block's array is buffered once.
-  The salted and two-table joins run the size pass first and join only
-  blocks within the cap;
+  The two-table join runs the size pass first and joins only blocks
+  within the cap;
 * every distributed pair set is returned persisted and counted
   (``stats.extra['n_pairs']``); intermediates are unpersisted before
   the blocker returns.
@@ -110,7 +110,8 @@ def _prepare_keys(
     ~n_docs rows, not n_docs * bands) and collision-checked: a 64-bit
     collision would merge two entities, so it fails loudly (callers can
     pre-assign dense int ids and pass ``encode_ids=False`` if their id
-    space ever trips this)."""
+    space ever trips this). A null id raises ValueError("null input ids
+    ..."), counted in the same aggregate."""
     if not encode_ids:
         narrow = keys.select(F.col(id_col).alias("iid"), "block_key").persist()
         return narrow, None, [narrow]
@@ -121,12 +122,15 @@ def _prepare_keys(
         .persist()
     )
     chk = mapping.agg(
-        F.count("*").alias("n"), F.countDistinct("iid").alias("d")
+        F.count("*").alias("n"), F.count("_id").alias("nn"),
+        F.countDistinct("iid").alias("d")
     ).collect()[0]
     n_ids, n_iids = chk["n"], chk["d"]
-    if n_ids != n_iids:
+    if chk["nn"] != n_ids or n_ids != n_iids:
         mapping.unpersist()
         raw.unpersist()
+        if chk["nn"] != n_ids:
+            raise _null_ids_error(n_ids - chk["nn"], n_ids)
         raise ValueError(
             f"xxhash64 id collision ({n_ids} ids -> {n_iids} hashes); "
             "pre-assign dense int ids and call with encode_ids=False"
@@ -192,6 +196,8 @@ def dense_id_mapping(
     one side and a caller passing a non-deduplicated id column on the
     other; callers relying on "signatures are one row per entity" get
     that assumption enforced here rather than as silent join fan-out).
+    The same aggregate counts null ids, which raise
+    ValueError("null input ids ...").
 
     Returns a PERSISTED, materialized DataFrame; the caller owns the
     unpersist.
@@ -226,10 +232,15 @@ def dense_id_mapping(
     )
     chk = mapping.agg(
         F.count("*").alias("n"),
+        F.count("_id").alias("nn"),
         F.countDistinct("iid").alias("d"),
         F.countDistinct("_id").alias("du"),
         F.max("iid").alias("hi"),
     ).collect()[0]
+    if chk["nn"] != chk["n"]:
+        mapping.unpersist()
+        base.unpersist()
+        raise _null_ids_error(chk["n"] - chk["nn"], chk["n"])
     if not (chk["n"] == chk["d"] == chk["du"]
             == (chk["hi"] + 1 if chk["n"] else 0)):
         mapping.unpersist()
@@ -396,73 +407,6 @@ def grouped_pairs_from_block_keys(
     return _finalize(pairs, stats, release)
 
 
-def salted_pairs_from_block_keys(
-    keys: DataFrame,
-    block_cap: int = 200,
-    salt: int = 8,
-    id_col: str = "conv_id",
-    encode_ids: bool = True,
-) -> tuple[DataFrame, BlockingStats]:
-    """Self-join pair generation with explicit salting (north rule).
-    Replaces the reference's per-bucket ``itertools.combinations``
-    (blocking_algorithms.py:135-140) with an equi-join on block key plus
-    an ``iid_a < iid_b`` range predicate, deduped across blocks; blocks
-    above ``block_cap`` members are dropped and counted in stats before
-    the join. The left side of the self-join gets a deterministic
-    salt ``hash(id) % salt`` appended to the join key; the right side is
-    replicated ``salt`` times, once per salt value. Every pair still meets
-    exactly once, but a hot block's work fans out over ``salt`` reducers
-    instead of one straggler task.
-
-    Salting bounds per-task skew, the cap bounds total quadratic work per
-    block. ``salt=1`` is the plain self-join. Use this when block_cap must
-    be large (e.g. dedup with legitimate big near-dup families)."""
-    keyed, mapping, release = _prepare_keys(keys, id_col, encode_ids)
-    sizes = keyed.groupBy("block_key").agg(F.count("*").alias("block_size")).persist()
-    release.append(sizes)
-    stats_row = sizes.agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(F.col("block_size") > block_cap, 1).otherwise(0)).alias("over"),
-        F.sum(
-            F.when(F.col("block_size") > block_cap, F.col("block_size")).otherwise(0)
-        ).alias("dropped"),
-    ).collect()[0]
-    stats = BlockingStats(
-        total_blocks=stats_row["total"] or 0,
-        oversized_blocks=stats_row["over"] or 0,
-        dropped_memberships=stats_row["dropped"] or 0,
-        capped_at=block_cap,
-        extra={"strategy": "salted", "salt": salt},
-    )
-    eligible = sizes.filter(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= block_cap)
-    ).select("block_key")
-    pruned = keyed.join(eligible, "block_key")
-
-    a = pruned.select(
-        "block_key",
-        F.col("iid").alias("iid_a"),
-        F.pmod(F.xxhash64("iid"), F.lit(salt)).alias("salt"),
-    )
-    b = pruned.select(
-        "block_key",
-        F.col("iid").alias("iid_b"),
-        F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("salt"),
-    )
-    pairs = (
-        a.join(b, ["block_key", "salt"])
-        .filter(F.col("iid_a") < F.col("iid_b"))
-        .select("iid_a", "iid_b")
-        .dropDuplicates(["iid_a", "iid_b"])
-    )
-    if mapping is not None:
-        pairs = _decode_pairs(pairs, mapping)
-    else:
-        pairs = pairs.select(F.col("iid_a").alias("conv_id_a"),
-                             F.col("iid_b").alias("conv_id_b"))
-    return _finalize(pairs, stats, release)
-
-
 def two_table_pairs_from_block_keys(
     keys_lhs: DataFrame,
     keys_rhs: DataFrame,
@@ -486,10 +430,16 @@ def two_table_pairs_from_block_keys(
     ``block_cap`` applies per side: a block whose lhs OR rhs membership
     exceeds the cap is dropped and counted (pair volume per surviving
     block <= cap^2). Blocks present on only one side are inert and are
-    not counted.
+    not counted. A null id on either side raises
+    ValueError("null input ids ...").
     """
     la, ma, rel_a = _prepare_keys(keys_lhs, id_col, encode_ids)
-    lb, mb, rel_b = _prepare_keys(keys_rhs, id_col, encode_ids)
+    try:
+        lb, mb, rel_b = _prepare_keys(keys_rhs, id_col, encode_ids)
+    except ValueError:
+        for df in rel_a:
+            df.unpersist()
+        raise
     release = rel_a + rel_b
     sizes = (
         la.groupBy("block_key").agg(F.count("*").alias("ca"))
@@ -568,11 +518,21 @@ def packed_two_table_pairs_from_block_keys(
 
     ``ids_lhs`` / ``ids_rhs``: optional pre-distinct id sets (e.g. each
     signature table's id column) — skips a dropDuplicates exchange per
-    side. ``stats.extra``: ``packed_pairs`` (persisted packed handle),
+    side. A null id on either side raises ValueError("null input ids
+    ...") from ``dense_id_mapping``. ``stats.extra``: ``packed_pairs`` (persisted packed handle),
     ``id_mapping_lhs`` / ``id_mapping_rhs``.
     """
     sides = {}
     release: list[DataFrame] = []
+
+    def release_all():
+        for df in release:
+            df.unpersist()
+        for _, prior_mapping in sides.values():
+            # a side already built (lhs when rhs fails) persisted its
+            # dense-id mapping too
+            prior_mapping.unpersist()
+
     for tag, keys, ids in (("lhs", keys_lhs, ids_lhs),
                            ("rhs", keys_rhs, ids_rhs)):
         if ids is not None:
@@ -582,16 +542,15 @@ def packed_two_table_pairs_from_block_keys(
             raw = keys.persist()
             release.append(raw)
             id_src = raw.select(F.col(id_col).alias("_id")).dropDuplicates()
-        mapping = dense_id_mapping(id_src)
+        try:
+            mapping = dense_id_mapping(id_src)
+        except (ValueError, AssertionError):
+            release_all()
+            raise
         n_ids = getattr(mapping, "nem_n", None) or mapping.count()
         if n_ids >= (1 << 31):
             mapping.unpersist()
-            for df in release:
-                df.unpersist()
-            for _, prior_mapping in sides.values():
-                # a side already built (lhs when rhs trips the guard)
-                # persisted its dense-id mapping too — release it
-                prior_mapping.unpersist()
+            release_all()
             raise ValueError(
                 f"{n_ids} distinct {tag} ids exceed the int32 packing "
                 "range; use two_table_pairs_from_block_keys instead")

@@ -80,7 +80,7 @@ def minhash_lsh_dedup(
         .select("conv_id", F.explode(udf("t")).alias("block_key"))
     )
     # single-pass grouped pair-gen with the doc table as the pre-distinct
-    # id set (r7): same candidate set as the salted self-join, two fewer
+    # id set (r7): same candidate set as a block-key self-join, two fewer
     # membership exchanges and no raw-keys persist
     cand, stats = grouped_pairs_from_block_keys(
         keys, block_cap=block_cap,

@@ -48,6 +48,7 @@ Blocking and clustering read the snapshots as written.
 from __future__ import annotations
 
 import json
+import time
 from dataclasses import asdict, dataclass, field
 
 import numpy as np
@@ -154,6 +155,9 @@ class PipelineConfig:
 @dataclass
 class PipelineReport:
     run_id: str
+    # stage-name -> {rows, wall_ms, resumed, snapshot_id}; a trained
+    # matcher's scored stage adds featurize_ms and train_ms, the parts of
+    # its wall_ms before scoring, when it computes (not when resumed)
     stages: dict = field(default_factory=dict)
     # stage-name -> output DataFrame (in-process handles for grid/eval)
     outputs: dict = field(default_factory=dict)
@@ -172,9 +176,13 @@ def _spread(res: StageResult) -> DataFrame:
     return res.df.repartition(n)
 
 
+def _ms_since(t0: float) -> int:
+    return int((time.monotonic() - t0) * 1000)
+
+
 def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
                      labeled_pairs: DataFrame, n_labels: int,
-                     threshold: float) -> DataFrame | None:
+                     threshold: float, parts: dict) -> DataFrame | None:
     """The logistic scored stage computed on the driver, or None above a
     bound, where the Spark path runs instead.
 
@@ -191,7 +199,9 @@ def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
     The features go back as a frame over Arrow batches, and
     ``score_with_model``'s JVM expression scores them inside the snapshot
     write. Every feature, coefficient and decision equals the Spark
-    path's."""
+    path's. ``parts`` gets the stage's part walls when it returns a
+    frame: ``featurize_ms`` (reads, label collect, featurize, attach) and
+    ``train_ms`` (the fit)."""
     from neural_entity_matching_spark.operators.ml_scorer import (
         fit_logistic,
         score_with_model,
@@ -202,6 +212,7 @@ def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
             or sig_res.column_bytes("sig_text") > LOCAL_MAX_SIGNATURE_BYTES
             or n_labels > LOCAL_MAX_LABEL_ROWS):
         return None
+    t0 = time.monotonic()
     labels = labeled_pairs.select("conv_id_a", "conv_id_b", "y").toArrow()
     feats = featurize_pairs_local(
         cand_res.to_arrow(),
@@ -211,11 +222,14 @@ def _score_on_driver(cand_res: StageResult, sig_res: StageResult,
         return None
     frame = arrow_frame(cand_res.df.sparkSession, feats)
     y = train.column("y")
+    parts.update(featurize_ms=_ms_since(t0), train_ms=0)
+    t1 = time.monotonic()
     if pc.count_distinct(y, mode="all").as_py() < 2:
         return degenerate_scorer(frame)
     x = np.column_stack([train.column(c).to_numpy(zero_copy_only=False)
                          for c in FEATURE_COLS])
     model = fit_logistic(x, y.to_numpy(), FEATURE_COLS)
+    parts["train_ms"] = _ms_since(t1)
     return score_with_model(model, frame, threshold=threshold)
 
 
@@ -387,11 +401,13 @@ def run_pipeline(
                                    cand_res.snapshot_id, bstats_holder[0]))
 
     feat_handle: list[DataFrame] = []
+    # a trained matcher's part walls, filled only when the stage computes
+    parts: dict[str, int] = {}
 
     def compute_scored():
         if cfg.scorer == "logistic":
             local = _score_on_driver(cand_res, sig_res, labeled_pairs,
-                                     n_labels, cfg.threshold)
+                                     n_labels, cfg.threshold, parts)
             if local is not None:
                 return local
         # the per-pair kernel runs in the tasks that stream the signature
@@ -410,12 +426,19 @@ def run_pipeline(
                 train_scorer,
             )
 
+            t0 = time.monotonic()
             feats = featurize_pairs(cand, sigs).persist()
             feat_handle.append(feats)  # fit + transform share one pass
             labeled = attach_labels(feats, labeled_pairs)
-            if is_single_class(labeled):
+            # the guard's job reads every partition of feats, so it fills
+            # the cache: featurize ends here
+            single = is_single_class(labeled)
+            parts.update(featurize_ms=_ms_since(t0), train_ms=0)
+            t1 = time.monotonic()
+            if single:
                 return degenerate_scorer(feats)
             model = train_scorer(labeled, model=cfg.scorer, seed=cfg.ml_seed)
+            parts["train_ms"] = _ms_since(t1)
             return score_with_model(model, feats, threshold=cfg.threshold)
         return fast_threshold_score(
             cand, sigs, threshold=cfg.threshold,
@@ -435,6 +458,7 @@ def run_pipeline(
         "scored", cand_res.snapshot_id + labels_fp, compute_scored,
         repartition_by=["conv_id_a"],
     )
+    report.stages["scored"].update(parts)
     for h in feat_handle:
         h.unpersist()
 

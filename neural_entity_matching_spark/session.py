@@ -93,29 +93,6 @@ def get_spark(
     return spark
 
 
-def wait_for_executors(spark: SparkSession, min_cores: int,
-                       timeout_s: float = 60.0) -> int:
-    """Block until the cluster reports >= ``min_cores`` total task slots.
-
-    Executors register asynchronously after session start. Any job (and
-    especially a .cache()) submitted before registration completes lands
-    entirely on the first executor — and cached partitions then PIN all
-    downstream work there via locality preference, silently serializing a
-    'multi-executor' run onto one JVM. Every benchmark and spark-submit
-    entry point must call this before the first action (measured: a
-    4-executor local-cluster run that skips this performs identically to
-    1 executor on the cache-consuming stages)."""
-    import time
-
-    sc = spark.sparkContext
-    deadline = time.monotonic() + timeout_s
-    while time.monotonic() < deadline:
-        if sc.defaultParallelism >= min_cores:
-            return sc.defaultParallelism
-        time.sleep(0.2)
-    return sc.defaultParallelism
-
-
 def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -6,7 +6,7 @@ each base conversation gets 0-3 duplicate variants produced by seeded
 perturbations that keep signature similarity high; hard negatives share
 boilerplate prefixes (analogue of the reference's "difficult" examples,
 reference script/utilities.py:163-268); one deliberately hot block of
-near-identical greeting-only transcripts exercises salting/caps.
+near-identical greeting-only transcripts exercises the block caps.
 
 Everything is seeded numpy — no wall clock, no external data. The same
 (seed, n_base) always produces byte-identical tables, so frozen labels are

@@ -1,7 +1,7 @@
-"""Skew machinery (SURVEY.md §7 risk 3, north rule): salted and grouped
-pair generation equal a per-block ``itertools.combinations`` oracle, with
-per-task work actually spread; caps drop mega blocks visibly; adversarial
-hot-block fixture."""
+"""Skew machinery (SURVEY.md §7 risk 3, north rule): grouped pair
+generation equals a per-block ``itertools.combinations`` oracle, a hot
+block within the cap keeps all its pairs, caps drop mega blocks visibly;
+adversarial hot-block fixture."""
 
 from collections import defaultdict
 from itertools import combinations
@@ -10,7 +10,6 @@ import pyspark.sql.functions as F
 
 from neural_entity_matching_spark.operators.blocking import (
     grouped_pairs_from_block_keys,
-    salted_pairs_from_block_keys,
 )
 
 
@@ -45,17 +44,16 @@ def _pair_set(pairs):
     return {(r["conv_id_a"], r["conv_id_b"]) for r in pairs.collect()}
 
 
-def test_salted_equals_unsalted(spark):
+def test_grouped_keeps_hot_block_under_cap(spark):
     keys = _hot_keys(spark)
     expect = _oracle_pairs(keys, block_cap=1000)
     # hot pairs + C(3,2) per normal block
     assert len(expect) == 120 * 119 // 2 + 100 * 3
-    for salt in (1, 8):
-        pairs, stats = salted_pairs_from_block_keys(keys, block_cap=1000,
-                                                    salt=salt)
-        assert _pair_set(pairs) == expect
-        assert stats.extra["n_pairs"] == len(expect)
-        pairs.unpersist()
+    pairs, stats = grouped_pairs_from_block_keys(keys, block_cap=1000)
+    assert _pair_set(pairs) == expect
+    assert stats.extra["n_pairs"] == len(expect)
+    assert stats.oversized_blocks == 0
+    pairs.unpersist()
 
 
 def test_dense_id_mapping_bijection_multi_partition(spark):
@@ -91,81 +89,28 @@ def test_dense_id_mapping_bijection_multi_partition(spark):
     m.unpersist()
 
 
-def test_salting_spreads_join_work(spark):
-    """The pre-dedup salted join must not funnel the hot block through a
-    single partition: max per-partition row share drops materially."""
-    keys = _hot_keys(spark, n_hot=200, n_normal=100)
-
-    def max_partition_share(df):
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("p"))
-            .count()
-            .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
-            .collect()[0]
-        )
-        return rows["mx"] / rows["tot"]
-
-    def joined(salt):
-        eligible = keys  # no cap here; isolate the join shape
-        if salt is None:
-            a = eligible.select("block_key", F.col("conv_id").alias("conv_id_a"))
-            b = eligible.select("block_key", F.col("conv_id").alias("conv_id_b"))
-            j = a.join(b, "block_key").filter(F.col("conv_id_a") < F.col("conv_id_b"))
-        else:
-            a = eligible.select(
-                "block_key", F.col("conv_id").alias("conv_id_a"),
-                F.pmod(F.xxhash64("conv_id"), F.lit(salt)).alias("salt"),
-            )
-            b = eligible.select(
-                "block_key", F.col("conv_id").alias("conv_id_b"),
-                F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("salt"),
-            )
-            j = a.join(b, ["block_key", "salt"]).filter(
-                F.col("conv_id_a") < F.col("conv_id_b")
-            )
-        return j.select("conv_id_a", "conv_id_b")
-
-    # observe the raw hash layout: no AQE rebalancing, no broadcast join
-    # (at cluster scale both sides are far beyond broadcast range)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        share_plain = max_partition_share(joined(None))
-        share_salted = max_partition_share(joined(8))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-    assert share_salted < share_plain * 0.5, (share_plain, share_salted)
-
-
 def test_cap_drops_mega_block_visibly(spark):
     keys = _hot_keys(spark)
     expect = _oracle_pairs(keys, block_cap=50)
     assert len(expect) == 100 * 3  # only the normal blocks survive
-    for blocker in (grouped_pairs_from_block_keys,
-                    salted_pairs_from_block_keys):
-        pairs, stats = blocker(keys, block_cap=50)
-        assert stats.oversized_blocks == 1, blocker
-        assert stats.dropped_memberships == 120, blocker
-        assert _pair_set(pairs) == expect, blocker
-        pairs.unpersist()
+    pairs, stats = grouped_pairs_from_block_keys(keys, block_cap=50)
+    assert stats.oversized_blocks == 1
+    assert stats.dropped_memberships == 120
+    assert _pair_set(pairs) == expect
+    pairs.unpersist()
 
 
 def test_all_strategies_and_encodings_identical(spark):
-    """grouped == salted == the oracle pair set, with and without id
-    encoding."""
+    """grouped == the oracle pair set, with and without id encoding."""
     keys = _hot_keys(spark, n_hot=60, n_normal=200)
     expect = _oracle_pairs(keys, block_cap=80)
     assert expect  # non-trivial
 
     g, _ = grouped_pairs_from_block_keys(keys, block_cap=80)
-    s, _ = salted_pairs_from_block_keys(keys, block_cap=80, salt=4)
     raw, _ = grouped_pairs_from_block_keys(keys, block_cap=80, encode_ids=False)
     assert _pair_set(g) == expect
-    assert _pair_set(s) == expect
     assert _pair_set(raw) == expect
-    for df in (g, s, raw):
+    for df in (g, raw):
         df.unpersist()
 
 

@@ -3,10 +3,12 @@
 model_magellan_ml.py:183-193 always blocks Amazon x Google)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from neural_entity_matching_spark.functions.normalize import build_signatures
 from neural_entity_matching_spark.operators.blocking import (
     lsh_block,
+    packed_two_table_pairs_from_block_keys,
     token_overlap_block,
     two_table_pairs_from_block_keys,
 )
@@ -83,10 +85,6 @@ def test_packed_two_table_equals_unpacked(spark):
     oriented pair set and identical cap/stats semantics as the unpacked
     two-table join, including blocks oversized on exactly one side and
     ids appearing under many block keys (dedup load)."""
-    from neural_entity_matching_spark.operators.blocking import (
-        packed_two_table_pairs_from_block_keys,
-    )
-
     rows_l = (
         [(f"l{i}", "hot") for i in range(6)]
         + [("l9", "cold"), ("l10", "cold"), ("l9", "warm"), ("l10", "warm")]
@@ -120,10 +118,7 @@ def test_two_table_lsh_packed_strategy(fixture_small):
     """The packed two-table path on LSH band keys of both sides (the
     decontamination shape) matches the default two-table plan of
     lsh_block(signatures_rhs=...) at the LSH operating point."""
-    from neural_entity_matching_spark.operators.blocking import (
-        lsh_band_keys,
-        packed_two_table_pairs_from_block_keys,
-    )
+    from neural_entity_matching_spark.operators.blocking import lsh_band_keys
 
     transcripts, _, _ = fixture_small
     sigs = build_signatures(transcripts).cache()
@@ -143,3 +138,45 @@ def test_two_table_lsh_packed_strategy(fixture_small):
     p_def.unpersist()
     for h in ("packed_pairs", "id_mapping_lhs", "id_mapping_rhs"):
         s_pkd.extra[h].unpersist()
+
+
+LHS = [("a1", "hello there how can i help you today with your order"),
+       ("a2", "the parcel left the depot on monday and arrives soon")]
+RHS = [("b1", "hello there how can i help you today with your order"),
+       ("b2", "the parcel left the depot on monday and arrives soon!")]
+NULL_ID = [(None, "hello there how can i help you today with your order")]
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("side", ["lhs", "rhs"])
+def test_null_id_raises_on_two_table_lsh(spark, side):
+    # a null id used to pair as (None, b) with every rhs doc it shares a
+    # block with, next to the real pairs
+    def sigs(rows):
+        return spark.createDataFrame(rows, "conv_id string, sig_text string")
+
+    lhs = LHS + (NULL_ID if side == "lhs" else [])
+    rhs = RHS + (NULL_ID if side == "rhs" else [])
+    before = _persisted(spark)
+    with pytest.raises(ValueError, match=r"^null input ids \(1 of 3 "):
+        lsh_block(sigs(lhs), block_cap=35, signatures_rhs=sigs(rhs), **LSH)
+    assert _persisted(spark) == before
+
+
+@pytest.mark.parametrize("pass_ids", [False, True])
+def test_null_id_raises_on_packed_two_table(spark, pass_ids):
+    # it used to fail the bijection check as "input ids contain duplicates"
+    kl = spark.createDataFrame([("l1", 1), (None, 1), ("l2", 2)],
+                               "conv_id string, block_key long")
+    kr = spark.createDataFrame([("r1", 1), ("r2", 2)],
+                               "conv_id string, block_key long")
+    ids = {}
+    if pass_ids:
+        ids = dict(ids_lhs=kl.select("conv_id"), ids_rhs=kr.select("conv_id"))
+    before = _persisted(spark)
+    with pytest.raises(ValueError, match=r"^null input ids \(1 of 3 "):
+        packed_two_table_pairs_from_block_keys(kl, kr, block_cap=5, **ids)
+    assert _persisted(spark) == before
