@@ -60,21 +60,3 @@ def build_signatures(transcripts: DataFrame) -> DataFrame:
         )
     )
 
-
-def validate_turn_order(transcripts: DataFrame) -> DataFrame:
-    """Row-level validation of the stable-ordering invariant: turn_idx must
-    be dense 0..n-1 per conv_id. Returns offending conv_ids (empty = ok).
-
-    Uses a window row_number — the one window-function use in the system
-    (SURVEY.md §2.8).
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return (
-        transcripts
-        .select("conv_id", "turn_idx", F.row_number().over(w).alias("rn"))
-        .filter(F.col("turn_idx") != F.col("rn") - 1)
-        .select("conv_id")
-        .distinct()
-    )

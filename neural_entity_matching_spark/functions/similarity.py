@@ -23,12 +23,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 # code points of each text that featurize's edit distance sees: the
-# default of featurize_pairs' and fast_threshold_score's ``lev_prefix``
-# and the prefix of the scored stage's driver path
-# (scoring.featurize_pairs_local), so all of them measure the same window
+# prefix of featurize_pairs, fast_threshold_score and the scored stage's
+# driver path (scoring.featurize_pairs_local), so all of them measure the
+# same window
 LEV_PREFIX = 512
 
 
@@ -130,7 +136,7 @@ def _chunk_by_length(key_lens: np.ndarray, widths: np.ndarray | None = None,
     per Python worker regardless of outlier string length — one
     pathological row degrades to its own 1 x width chunk instead of
     inflating EVERY row's matrix to its width (2048 rows x a 1 MB string
-    would be ~8 GB under a fixed row count). At the typical lev_prefix
+    would be ~8 GB under a fixed row count). At the ``LEV_PREFIX``
     width (512) the budget still admits the full 2048-row chunk, so the
     common case is unchanged."""
     order = np.argsort(key_lens, kind="stable")
@@ -466,10 +472,9 @@ def _token_sets_jaccard(av: np.ndarray, bv: np.ndarray):
 
 
 def lev_tokjac(av: np.ndarray, bv: np.ndarray,
-               lev_prefix: int | None = LEV_PREFIX,
                chunk: int = 2048, cell_budget: int = 1 << 20):
     """``(d, ti, tu)`` per pair of non-null strings: the exact Levenshtein
-    distance over the first ``lev_prefix`` code points (Python slicing and
+    distance over the first ``LEV_PREFIX`` code points (Python slicing and
     Spark ``substring`` agree on code-point units), and the distinct-token
     intersection and union sizes over the FULL strings.
 
@@ -479,15 +484,19 @@ def lev_tokjac(av: np.ndarray, bv: np.ndarray,
     (``scoring.featurize_pairs_local``) calls it once for all pairs, with
     chunk sizes for one process."""
     ti, tu = _token_sets_jaccard(av, bv)
-    if lev_prefix is not None:
-        av = np.array([s[:lev_prefix] for s in av], dtype=object)
-        bv = np.array([s[:lev_prefix] for s in bv], dtype=object)
+    av = np.array([s[:LEV_PREFIX] for s in av], dtype=object)
+    bv = np.array([s[:LEV_PREFIX] for s in bv], dtype=object)
     return _lev_distance_batch(av, bv, chunk, cell_budget), ti, tu
 
 
-def lev_tokjac_udf(lev_prefix: int | None = LEV_PREFIX):
-    """Factory: ``lev_tokjac`` as one Arrow pass, null when either string
-    is null.
+@F.pandas_udf(StructType([
+    StructField("d", LongType()),
+    StructField("ti", IntegerType()),
+    StructField("tu", IntegerType()),
+]))
+def lev_tokjac_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+    """``lev_tokjac`` as one Arrow pass, null when either string is
+    null.
 
     Fusing the two removes the per-pair JVM split/array_distinct/
     array_intersect chain (measured ~10.9s per 2.06M pairs on local[32]
@@ -496,29 +505,16 @@ def lev_tokjac_udf(lev_prefix: int | None = LEV_PREFIX):
     for by the Levenshtein operands. The caller reconstructs lev_ratio /
     token_jaccard with the IDENTICAL float expressions the JVM path
     used, so results are bit-identical."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    out_t = StructType([
-        StructField("d", LongType()),
-        StructField("ti", IntegerType()),
-        StructField("tu", IntegerType()),
-    ])
-
-    @F.pandas_udf(out_t)
-    def _f(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        null = (a.isna() | b.isna()).to_numpy()
-        d, ti, tu = lev_tokjac(a.fillna("").to_numpy(),
-                               b.fillna("").to_numpy(), lev_prefix)
-        out = pd.DataFrame({
-            "d": pd.Series(d, dtype="Int64"),
-            "ti": pd.Series(ti, dtype="Int32"),
-            "tu": pd.Series(tu, dtype="Int32"),
-        })
-        if null.any():
-            out.loc[null, :] = None
-        return out
-
-    return _f
+    null = (a.isna() | b.isna()).to_numpy()
+    d, ti, tu = lev_tokjac(a.fillna("").to_numpy(), b.fillna("").to_numpy())
+    out = pd.DataFrame({
+        "d": pd.Series(d, dtype="Int64"),
+        "ti": pd.Series(ti, dtype="Int32"),
+        "tu": pd.Series(tu, dtype="Int32"),
+    })
+    if null.any():
+        out.loc[null, :] = None
+    return out
 
 
 @F.pandas_udf(DoubleType())

@@ -23,17 +23,21 @@ pair set is generated distributed, with joins under AQE skew handling.
 Shuffle discipline of the distributed paths (the stage that binds at
 cluster scale):
 
-* ids are dictionary-encoded to int64 (``xxhash64``, collision-checked)
-  before any exchange — pair rows shuffle as 16 bytes instead of two
-  strings, and the final decode back to real ids is a broadcast map join;
+* ids are coded to int64 by ``xxhash64`` (collision-checked, no dense
+  ranks) before any exchange — pair rows shuffle as 16 bytes instead of
+  two strings, and the final decode back to real ids is a broadcast map
+  join;
 * block keys are int64 where the producer allows (LSH band keys);
-* the grouped path (the dedup operators, and ``lsh_block`` above its
-  driver bounds) builds each block's member array in one exchange and
-  applies the cap to the array sizes; a block above
-  ``physical_block_cap`` members makes it rebuild through a size pass
-  and an eligibility join, so that block's array is buffered once.
-  The two-table join runs the size pass first and joins only blocks
-  within the cap;
+* one table has one distributed path,
+  ``grouped_pairs_from_block_keys`` (the one-table dedup operators, and
+  ``lsh_block`` above its driver bounds): it builds each block's member
+  array in one exchange and applies the cap to the array sizes; a block
+  above ``physical_block_cap`` members makes it rebuild through a size
+  pass and an eligibility join, so that block's array is buffered once;
+* two tables have one path, ``two_table_pairs_from_block_keys``
+  (``lsh_block``'s two-table mode and ``dedup.cross_corpus_dedup``): it
+  runs the per-side size pass first and joins only blocks within the
+  cap;
 * every distributed pair set is returned persisted and counted
   (``stats.extra['n_pairs']``); intermediates are unpersisted before
   the blocker returns.
@@ -45,7 +49,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neural_entity_matching_spark.functions.minhash import band_keys, band_keys_udf
@@ -75,10 +79,8 @@ def lsh_band_keys(
     bands: int = 32,
     char_ngram: int = 8,
     seed: int = 42,
-    text_col: str = "sig_text",
-    id_col: str = "conv_id",
 ) -> DataFrame:
-    """(id, block_key) rows — one per (doc, band), block_key an int64.
+    """(conv_id, block_key) rows — one per (doc, band), block_key an int64.
 
     block_key is deterministic and partition-invariant (seeded hashing only;
     SURVEY.md §7 risk 2). The band hash is already salted by band index
@@ -91,33 +93,21 @@ def lsh_band_keys(
                         char_ngram=char_ngram, seed=seed)
     return (
         signatures
-        .select(F.col(id_col).alias("conv_id"), udf(F.col(text_col)).alias("bands"))
+        .select("conv_id", udf(F.col("sig_text")).alias("bands"))
         .select("conv_id", F.explode("bands").alias("block_key"))
     )
 
 
-def _prepare_keys(
-    keys: DataFrame, id_col: str, encode_ids: bool
-) -> tuple[DataFrame, DataFrame | None, list[DataFrame]]:
-    """Dictionary-encode the id column to int64 (``encode_ids=True``).
-
-    Returns (narrow keys (iid, block_key), mapping (iid, _id) or None,
-    persisted intermediates to release). The raw key table is persisted
-    FIRST so the (typically expensive) upstream key producer — e.g. the
-    minhash band UDF — runs exactly once across the mapping build, the
-    stats pass and pair generation. The mapping dedup is partial-aggregated
-    (ids repeat once per band within a partition, so the exchange carries
-    ~n_docs rows, not n_docs * bands) and collision-checked: a 64-bit
-    collision would merge two entities, so it fails loudly (callers can
-    pre-assign dense int ids and pass ``encode_ids=False`` if their id
-    space ever trips this). A null id raises ValueError("null input ids
-    ..."), counted in the same aggregate."""
-    if not encode_ids:
-        narrow = keys.select(F.col(id_col).alias("iid"), "block_key").persist()
-        return narrow, None, [narrow]
-    raw = keys.persist()
+def _id_mapping(ids: DataFrame) -> DataFrame:
+    """(_id, iid = xxhash64(_id)) over the ``conv_id`` rows of ``ids``,
+    returned persisted and checked by one aggregate: a null id raises
+    ValueError("null input ids ..."), duplicate ids raise
+    ValueError("duplicate input ids ..."), and an xxhash64 collision
+    between distinct ids — it would merge two entities — raises
+    ValueError("xxhash64 id collision ..."). Nothing stays persisted
+    when it raises."""
     mapping = (
-        raw.select(F.col(id_col).alias("_id")).dropDuplicates()
+        ids.select(F.col("conv_id").alias("_id"))
         .withColumn("iid", F.xxhash64(F.col("_id")))
         .persist()
     )
@@ -125,17 +115,42 @@ def _prepare_keys(
         F.count("*").alias("n"), F.count("_id").alias("nn"),
         F.countDistinct("iid").alias("d")
     ).collect()[0]
-    n_ids, n_iids = chk["n"], chk["d"]
-    if chk["nn"] != n_ids or n_ids != n_iids:
+    if chk["nn"] != chk["n"]:
         mapping.unpersist()
-        raw.unpersist()
-        if chk["nn"] != n_ids:
-            raise _null_ids_error(n_ids - chk["nn"], n_ids)
+        raise _null_ids_error(chk["n"] - chk["nn"], chk["n"])
+    if chk["n"] != chk["d"]:
+        # failure path only: tell duplicate ids from a hash collision
+        n_distinct = mapping.agg(F.countDistinct("_id")).collect()[0][0]
+        mapping.unpersist()
+        if n_distinct != chk["n"]:
+            raise ValueError(
+                f"duplicate input ids ({chk['n']} id rows, "
+                f"{n_distinct} distinct); ids must be one row per entity"
+            )
         raise ValueError(
-            f"xxhash64 id collision ({n_ids} ids -> {n_iids} hashes); "
-            "pre-assign dense int ids and call with encode_ids=False"
-        )
-    narrow = raw.select(F.xxhash64(F.col(id_col)).alias("iid"), "block_key")
+            f"xxhash64 id collision ({chk['n']} ids -> {chk['d']} hashes)")
+    return mapping
+
+
+def _prepare_keys(
+    keys: DataFrame,
+) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
+    """Dictionary-encode ``conv_id`` to int64 (``xxhash64``).
+
+    Returns (narrow keys (iid, block_key), mapping (_id, iid), persisted
+    intermediates to release). The raw key table is persisted
+    FIRST so the (typically expensive) upstream key producer — e.g. the
+    minhash band UDF — runs exactly once across the mapping build, the
+    stats pass and pair generation. The mapping dedup is partial-aggregated
+    (ids repeat once per band within a partition, so the exchange carries
+    ~n_docs rows, not n_docs * bands) and checked by ``_id_mapping``."""
+    raw = keys.persist()
+    try:
+        mapping = _id_mapping(raw.select("conv_id").dropDuplicates())
+    except ValueError:
+        raw.unpersist()
+        raise
+    narrow = raw.select(F.xxhash64("conv_id").alias("iid"), "block_key")
     return narrow, mapping, [raw, mapping]
 
 
@@ -168,99 +183,6 @@ def _finalize(
     return pairs, stats
 
 
-def dense_id_mapping(
-    ids: DataFrame,
-    id_col: str = "_id",
-    partitions: int | None = None,
-) -> DataFrame:
-    """(\\_id, iid) with iid a dense 0-based BIJECTION over the distinct
-    id set — deterministic, distributed, recompute-safe.
-
-    Bucket assignment is ``pmod(xxhash64(_id), p)`` — a pure function of
-    the id, so any recomputation (cache eviction, executor loss, retried
-    stage) reproduces the exact same bucket membership; within a bucket
-    the rank is a sort by id. This replaces the earlier sampled
-    ``repartitionByRange`` scheme, whose bounds were re-sampled per
-    evaluation: if the persisted partitioning was lost between the
-    offsets pass and the rank pass, ids moved buckets and duplicate iids
-    were silently assigned (observed at 176k ids: two docs sharing an
-    iid merged their pair sets). Determinism now comes from the hash,
-    not from pinning one evaluation. iid order is (bucket, id) order —
-    a bijection but NOT the global id sort order, which packing never
-    needed; consumers must canonicalize decoded pair orientation with
-    least/greatest on the real ids.
-
-    A post-build invariant check asserts the bijection onto [0, n) AND
-    that the input ids were distinct (one aggregate over the o(corpus)
-    dictionary — cheap insurance against a nondeterminism regression on
-    one side and a caller passing a non-deduplicated id column on the
-    other; callers relying on "signatures are one row per entity" get
-    that assumption enforced here rather than as silent join fan-out).
-    The same aggregate counts null ids, which raise
-    ValueError("null input ids ...").
-
-    Returns a PERSISTED, materialized DataFrame; the caller owns the
-    unpersist.
-    """
-    p = int(
-        partitions
-        or ids.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    base = (
-        ids.select(F.col(id_col).alias("_id"))
-        .withColumn(
-            "_pid", F.pmod(F.xxhash64("_id"), F.lit(p)).cast("int")
-        )
-        .persist()
-    )
-    counts = (
-        base.groupBy("_pid").agg(F.count("*").alias("_c"))
-        .orderBy("_pid")
-        .collect()
-    )
-    offsets, acc = [], 0
-    for r in counts:
-        offsets.append((r["_pid"], acc))
-        acc += r["_c"]
-    off_df = base.sparkSession.createDataFrame(offsets, ["_pid", "_off"])
-    w = Window.partitionBy("_pid").orderBy("_id")
-    mapping = (
-        base.join(F.broadcast(off_df), "_pid")
-        .withColumn("iid", F.row_number().over(w) - 1 + F.col("_off"))
-        .select("_id", "iid")
-        .persist()
-    )
-    chk = mapping.agg(
-        F.count("*").alias("n"),
-        F.count("_id").alias("nn"),
-        F.countDistinct("iid").alias("d"),
-        F.countDistinct("_id").alias("du"),
-        F.max("iid").alias("hi"),
-    ).collect()[0]
-    if chk["nn"] != chk["n"]:
-        mapping.unpersist()
-        base.unpersist()
-        raise _null_ids_error(chk["n"] - chk["nn"], chk["n"])
-    if not (chk["n"] == chk["d"] == chk["du"]
-            == (chk["hi"] + 1 if chk["n"] else 0)):
-        mapping.unpersist()
-        base.unpersist()
-        # du < n means the CALLER passed duplicate ids (each would get
-        # several iids and every downstream pair join would fan out);
-        # d < n would be a determinism regression in the rank pass
-        raise AssertionError(
-            f"dense_id_mapping lost bijectivity: n={chk['n']} "
-            f"distinct_iid={chk['d']} distinct_id={chk['du']} "
-            f"max={chk['hi']}"
-            + (" — input ids contain duplicates"
-               if chk["du"] < chk["n"] else "")
-        )
-    base.unpersist()
-    # stash the (already-computed) cardinality so callers skip a count job
-    mapping.nem_n = chk["n"]
-    return mapping
-
-
 def _null_ids_error(n_null: int, n: int) -> ValueError:
     # without the check, xxhash64(null) codes a null id like any other and
     # least/greatest drops the null end of its pairs, so every doc that
@@ -271,10 +193,8 @@ def _null_ids_error(n_null: int, n: int) -> ValueError:
 
 def grouped_pairs_from_block_keys(
     keys: DataFrame,
+    ids: DataFrame,
     block_cap: int = 200,
-    id_col: str = "conv_id",
-    encode_ids: bool = True,
-    ids: DataFrame | None = None,
     physical_block_cap: int = 1 << 20,
 ) -> tuple[DataFrame, BlockingStats]:
     """Grouped pair generation, SINGLE-PASS (r7, guide §2.4): one exchange
@@ -292,55 +212,21 @@ def grouped_pairs_from_block_keys(
     the oversized arrays exactly once, in the stats job that detects
     them. ``stats.extra['fallback']`` records the trigger.
 
-    ``ids``: optional pre-distinct entity-id set (one row per entity,
-    e.g. the signature table's id column). Supplying it replaces the
-    dropDuplicates exchange over the membership rows with a projection
-    of the entity table AND lets ``keys`` stream straight into the group
-    exchange with no persist (the expensive key producer — the minhash
-    band UDF — runs exactly once either way, but the cache write/read
-    and its materialization job disappear). Precondition: ``ids`` covers
-    every id in ``keys``: an id missing from it has no mapping row, so
-    its pairs vanish in the decode join. A null id in ``ids`` raises
-    ValueError("null input ids ..."), duplicate ids raise
-    ValueError("duplicate input ids ..."), and an xxhash64 collision
-    between distinct ids raises ValueError("xxhash64 id collision ...").
+    ``keys``: (conv_id, block_key) rows. ``ids``: the entity-id set, one
+    ``conv_id`` row per entity (e.g. the signature table's id column). It
+    builds the id mapping from a projection of the entity table, so
+    ``keys`` streams straight into the group exchange with no persist
+    and no dropDuplicates exchange over the membership rows.
+    Precondition: ``ids`` covers every id in ``keys``: an id missing from
+    it has no mapping row, so its pairs vanish in the decode join. A null
+    id in ``ids`` raises ValueError("null input ids ..."), duplicate ids
+    raise ValueError("duplicate input ids ..."), and an xxhash64
+    collision between distinct ids raises ValueError("xxhash64 id
+    collision ...").
     """
-    release: list[DataFrame] = []
-    if not encode_ids:
-        narrow = keys.select(F.col(id_col).alias("iid"), "block_key")
-        mapping = None
-    elif ids is not None:
-        mapping = (
-            ids.select(F.col(id_col).alias("_id"))
-            .withColumn("iid", F.xxhash64(F.col("_id")))
-            .persist()
-        )
-        release.append(mapping)
-        chk = mapping.agg(
-            F.count("*").alias("n"), F.count("_id").alias("nn"),
-            F.countDistinct("iid").alias("d")
-        ).collect()[0]
-        if chk["nn"] != chk["n"]:
-            mapping.unpersist()
-            raise _null_ids_error(chk["n"] - chk["nn"], chk["n"])
-        if chk["n"] != chk["d"]:
-            # failure path only: tell duplicate ids from a hash collision
-            n_distinct = mapping.agg(F.countDistinct("_id")).collect()[0][0]
-            mapping.unpersist()
-            if n_distinct != chk["n"]:
-                raise ValueError(
-                    f"duplicate input ids ({chk['n']} id rows, "
-                    f"{n_distinct} distinct); ids must be one row per entity"
-                )
-            raise ValueError(
-                f"xxhash64 id collision ({chk['n']} ids -> {chk['d']} "
-                "hashes); pre-assign dense int ids and call with "
-                "encode_ids=False"
-            )
-        narrow = keys.select(F.xxhash64(F.col(id_col)).alias("iid"),
-                             "block_key")
-    else:
-        narrow, mapping, release = _prepare_keys(keys, id_col, True)
+    mapping = _id_mapping(ids)
+    release = [mapping]
+    narrow = keys.select(F.xxhash64("conv_id").alias("iid"), "block_key")
     grouped = (
         narrow.groupBy("block_key")
         .agg(F.sort_array(F.collect_list("iid")).alias("ids"))
@@ -369,9 +255,8 @@ def grouped_pairs_from_block_keys(
         # buffered exactly once, in the stats job above)
         grouped.unpersist()
         release.remove(grouped)
-        if ids is not None or not encode_ids:
-            narrow = narrow.persist()  # keys stream twice below
-            release.append(narrow)
+        narrow = narrow.persist()  # keys stream twice below
+        release.append(narrow)
         sizes = narrow.groupBy("block_key").agg(F.count("*").alias("bs"))
         eligible = sizes.filter(
             (F.col("bs") >= 2) & (F.col("bs") <= block_cap)
@@ -399,20 +284,13 @@ def grouped_pairs_from_block_keys(
         .select(F.col("p.iid_a"), F.col("p.iid_b"))
         .dropDuplicates(["iid_a", "iid_b"])
     )
-    if mapping is not None:
-        pairs = _decode_pairs(pairs, mapping)
-    else:
-        pairs = pairs.select(F.col("iid_a").alias("conv_id_a"),
-                             F.col("iid_b").alias("conv_id_b"))
-    return _finalize(pairs, stats, release)
+    return _finalize(_decode_pairs(pairs, mapping), stats, release)
 
 
 def two_table_pairs_from_block_keys(
     keys_lhs: DataFrame,
     keys_rhs: DataFrame,
     block_cap: int = 200,
-    id_col: str = "conv_id",
-    encode_ids: bool = True,
 ) -> tuple[DataFrame, BlockingStats]:
     """Two-table blocking: cross-side candidate pairs only.
 
@@ -420,7 +298,7 @@ def two_table_pairs_from_block_keys(
     keeps only lhs x rhs pairs — the lhs/rhs re-alignment at
     reference script/blocking_algorithms.py:149-172 and every
     ``run_magellan_models`` call (model_magellan_ml.py:183-193). Here each
-    side's (id, block_key) rows meet in an equi-join on block_key;
+    side's (conv_id, block_key) rows meet in an equi-join on block_key;
     same-side pairs never form because the join sides are distinct tables.
 
     Output preserves orientation: ``conv_id_a`` is always from the lhs
@@ -433,9 +311,9 @@ def two_table_pairs_from_block_keys(
     not counted. A null id on either side raises
     ValueError("null input ids ...").
     """
-    la, ma, rel_a = _prepare_keys(keys_lhs, id_col, encode_ids)
+    la, ma, rel_a = _prepare_keys(keys_lhs)
     try:
-        lb, mb, rel_b = _prepare_keys(keys_rhs, id_col, encode_ids)
+        lb, mb, rel_b = _prepare_keys(keys_rhs)
     except ValueError:
         for df in rel_a:
             df.unpersist()
@@ -467,155 +345,13 @@ def two_table_pairs_from_block_keys(
         .join(lb.select("block_key", F.col("iid").alias("iid_b")), "block_key")
         .select("iid_a", "iid_b")
         .dropDuplicates(["iid_a", "iid_b"])
-    )
-    if ma is not None:
-        m_a, m_b = F.broadcast(ma), F.broadcast(mb)
-        pairs = (
-            pairs
-            .join(m_a.select(F.col("iid").alias("iid_a"),
-                             F.col("_id").alias("conv_id_a")), "iid_a")
-            .join(m_b.select(F.col("iid").alias("iid_b"),
-                             F.col("_id").alias("conv_id_b")), "iid_b")
-            .select("conv_id_a", "conv_id_b")
-        )
-    else:
-        pairs = pairs.select(F.col("iid_a").alias("conv_id_a"),
-                             F.col("iid_b").alias("conv_id_b"))
-    return _finalize(pairs, stats, release)
-
-
-_PACK = 1 << 32
-
-
-def packed_two_table_pairs_from_block_keys(
-    keys_lhs: DataFrame,
-    keys_rhs: DataFrame,
-    block_cap: int = 200,
-    id_col: str = "conv_id",
-    ids_lhs: DataFrame | None = None,
-    ids_rhs: DataFrame | None = None,
-) -> tuple[DataFrame, BlockingStats]:
-    """Two-table pair generation with cross-side pairs PACKED into one
-    int64 (``iid_lhs * 2^32 + iid_rhs``, each side's OWN dense rank,
-    ``dense_id_mapping``) through the dedup exchange.
-
-    Why: ``two_table_pairs_from_block_keys`` shuffles two int64 columns
-    through its pair dedup — the stage's largest exchange at
-    decontamination scale (cross-corpus dedup blocks a training corpus
-    against a benchmark corpus; the candidate volume is bands x corpus).
-    Packing halves the dedup exchange's row payload and reduces the hash
-    aggregate to a single-long key (r7 measured 21.9s -> 15.1s for a
-    30.0M-row one-table pair dedup packed the same way).
-
-    Orientation is structural: the lhs rank ALWAYS occupies the high 32
-    bits, so unpacking preserves the reference's ltable/rtable
-    convention with no least/greatest canonicalization. Each side gets the
-    single-pass grouping of ``grouped_pairs_from_block_keys``: one
-    exchange builds member arrays AND sizes; blocks present on only one
-    side drop out in the inner join (inert, uncounted — same stats
-    semantics as the unpacked two-table path). Requires < 2^31 distinct
-    ids PER SIDE.
-
-    ``ids_lhs`` / ``ids_rhs``: optional pre-distinct id sets (e.g. each
-    signature table's id column) — skips a dropDuplicates exchange per
-    side. A null id on either side raises ValueError("null input ids
-    ...") from ``dense_id_mapping``. ``stats.extra``: ``packed_pairs`` (persisted packed handle),
-    ``id_mapping_lhs`` / ``id_mapping_rhs``.
-    """
-    sides = {}
-    release: list[DataFrame] = []
-
-    def release_all():
-        for df in release:
-            df.unpersist()
-        for _, prior_mapping in sides.values():
-            # a side already built (lhs when rhs fails) persisted its
-            # dense-id mapping too
-            prior_mapping.unpersist()
-
-    for tag, keys, ids in (("lhs", keys_lhs, ids_lhs),
-                           ("rhs", keys_rhs, ids_rhs)):
-        if ids is not None:
-            raw = keys
-            id_src = ids.select(F.col(id_col).alias("_id"))
-        else:
-            raw = keys.persist()
-            release.append(raw)
-            id_src = raw.select(F.col(id_col).alias("_id")).dropDuplicates()
-        try:
-            mapping = dense_id_mapping(id_src)
-        except (ValueError, AssertionError):
-            release_all()
-            raise
-        n_ids = getattr(mapping, "nem_n", None) or mapping.count()
-        if n_ids >= (1 << 31):
-            mapping.unpersist()
-            release_all()
-            raise ValueError(
-                f"{n_ids} distinct {tag} ids exceed the int32 packing "
-                "range; use two_table_pairs_from_block_keys instead")
-        grouped = (
-            raw.join(F.broadcast(mapping), raw[id_col] == mapping["_id"])
-            .select("iid", "block_key")
-            .groupBy("block_key")
-            .agg(F.sort_array(F.collect_list("iid")).alias(f"ids_{tag}"))
-        )
-        sides[tag] = (grouped, mapping)
-    ga, ma = sides["lhs"]
-    gb, mb = sides["rhs"]
-    joined = (
-        ga.join(gb, "block_key")
-        .select("ids_lhs", "ids_rhs",
-                F.size("ids_lhs").alias("ca"), F.size("ids_rhs").alias("cb"))
-        .persist()
-    )
-    release.append(joined)
-    over = (F.col("ca") > block_cap) | (F.col("cb") > block_cap)
-    stats_row = joined.agg(
-        F.count("*").alias("total"),
-        F.sum(over.cast("int")).alias("over"),
-        F.sum(F.when(over, F.col("ca") + F.col("cb")).otherwise(0))
-        .alias("dropped"),
-    ).collect()[0]
-    stats = BlockingStats(
-        total_blocks=stats_row["total"] or 0,
-        oversized_blocks=stats_row["over"] or 0,
-        dropped_memberships=stats_row["dropped"] or 0,
-        capped_at=block_cap,
-        extra={"strategy": "two_table_packed",
-               "id_mapping_lhs": ma, "id_mapping_rhs": mb},
-    )
-    pair_expr = (
-        "flatten(transform(ids_lhs, x -> "
-        "transform(ids_rhs, y -> x * 4294967296L + y)))"
-    )
-    packed = (
-        joined.filter(~over)
-        .select(F.explode(F.expr(pair_expr)).alias("pk"))
-        .dropDuplicates(["pk"])
-        .persist()
-    )
-    stats.extra["packed_pairs"] = packed
-    stats.extra["n_pairs"] = packed.count()
-    for df in release:
-        df.unpersist()
-    pairs = packed.select(
-        F.floor(F.col("pk") / F.lit(_PACK)).cast("long").alias("iid_a"),
-        F.pmod("pk", F.lit(_PACK)).alias("iid_b"),
-    )
-    # lazy decode through each side's mapping: real ids, lhs/rhs
-    # orientation preserved structurally by the packing
-    pairs = (
-        pairs
         .join(F.broadcast(ma).select(F.col("iid").alias("iid_a"),
-                                     F.col("_id").alias("conv_id_a")),
-              "iid_a")
+                                     F.col("_id").alias("conv_id_a")), "iid_a")
         .join(F.broadcast(mb).select(F.col("iid").alias("iid_b"),
-                                     F.col("_id").alias("conv_id_b")),
-              "iid_b")
+                                     F.col("_id").alias("conv_id_b")), "iid_b")
         .select("conv_id_a", "conv_id_b")
     )
-    return pairs, stats
+    return _finalize(pairs, stats, release)
 
 
 def lsh_block(
@@ -657,12 +393,10 @@ def lsh_block(
                              seed, block_cap)
     if local is not None:
         return local
-    # signatures are one-row-per-entity: their id column is the
-    # pre-distinct id set (skips the raw-keys persist and the
-    # dropDuplicates exchange over the 64-bands-per-doc memberships)
+    # signatures are one row per entity: their id column is the id set
     return grouped_pairs_from_block_keys(
         lsh_band_keys(signatures, num_hashes, bands, char_ngram, seed),
-        block_cap=block_cap, ids=signatures.select(F.col("conv_id")))
+        signatures.select("conv_id"), block_cap=block_cap)
 
 
 def _local_lsh_pairs(
@@ -729,7 +463,7 @@ def _local_lsh_pairs(
         }))
         return grouped_pairs_from_block_keys(
             keys_df.select("conv_id", F.explode("bands").alias("block_key")),
-            block_cap=block_cap, ids=signatures.select(F.col("conv_id")))
+            signatures.select("conv_id"), block_cap=block_cap)
     stats = BlockingStats(
         total_blocks=len(sizes),
         oversized_blocks=int(over.sum()),
@@ -774,6 +508,10 @@ def token_overlap_block(
     runs lhs-tokens x rhs-tokens, only cross-side pairs form, orientation
     is preserved (conv_id_a from lhs), and the token-df cap counts
     document frequency across BOTH sides.
+
+    A null id on a doc with any token raises ValueError("null input ids
+    ..."), counted in the aggregate that counts the hot tokens (one
+    count over the token rows when ``max_token_df`` is None).
     """
 
     def _toks(df):
@@ -789,11 +527,24 @@ def token_overlap_block(
         capped_at=max_token_df,
         extra={"strategy": "two_table" if toks_b is not None else "self"},
     )
+    both = toks_a if toks_b is None else toks_a.unionByName(toks_b)
+    if max_token_df is None:
+        chk = both.agg(F.count("*").alias("n"),
+                       F.count("conv_id").alias("nn")).collect()[0]
+    else:
+        df_counts = both.groupBy("token").agg(
+            F.count("*").alias("df"), F.count("conv_id").alias("nn"))
+        chk = df_counts.agg(
+            F.sum("df").alias("n"), F.sum("nn").alias("nn"),
+            F.count(F.when(F.col("df") > max_token_df, 1)).alias("hot"),
+        ).collect()[0]
+    if chk["n"] != chk["nn"]:
+        # self mode's a < b filter would drop a null id's pairs, two-table
+        # mode would emit them as (None, b)
+        raise _null_ids_error(chk["n"] - chk["nn"], chk["n"])
     if max_token_df is not None:
-        both = toks_a if toks_b is None else toks_a.unionByName(toks_b)
-        df_counts = both.groupBy("token").agg(F.count("*").alias("df"))
+        stats.extra["hot_tokens_dropped"] = chk["hot"]
         hot = df_counts.filter(F.col("df") > max_token_df)
-        stats.extra["hot_tokens_dropped"] = hot.count()
         hot_b = F.broadcast(hot.select("token"))
         toks_a = toks_a.join(hot_b, "token", "left_anti")
         if toks_b is not None:

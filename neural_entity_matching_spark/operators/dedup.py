@@ -18,16 +18,14 @@ always an equi-join on a block key (never a cross join).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from neural_entity_matching_spark.functions.minhash import band_keys_udf
 from neural_entity_matching_spark.operators.blocking import (
     BlockingStats,
     grouped_pairs_from_block_keys,
+    two_table_pairs_from_block_keys,
 )
 
 
@@ -135,16 +133,12 @@ def cross_corpus_dedup(
     (the corpus being cleaned), ``id_b`` from ``reference_docs`` — the
     caller anti-joins ``docs`` on id_a to drop contaminated rows.
 
-    Pair generation runs the PACKED two-table path (per-side dense
-    ranks, candidates dedup'd as one int64): at decontamination scale
-    the candidate volume is bands x corpus and the pair-dedup exchange
-    is the stage's largest — packing halves its row payload.
-    Orientation is structural (lhs rank in the high 32 bits).
+    Pair generation is ``two_table_pairs_from_block_keys``, the same path
+    as ``lsh_block``'s two-table mode: ids coded by ``xxhash64``, per-side
+    block sizes first, then the lhs x rhs join of the blocks within the
+    cap. A null ``id_col`` on either side raises
+    ValueError("null input ids ...").
     """
-    from neural_entity_matching_spark.operators.blocking import (
-        packed_two_table_pairs_from_block_keys,
-    )
-
     udf = band_keys_udf(num_hashes=num_hashes, bands=bands,
                         char_ngram=char_ngram, seed=seed)
 
@@ -155,7 +149,7 @@ def cross_corpus_dedup(
             .select("conv_id", F.explode(udf("t")).alias("block_key"))
         )
 
-    cand, stats = packed_two_table_pairs_from_block_keys(
+    cand, stats = two_table_pairs_from_block_keys(
         _keys(docs), _keys(reference_docs), block_cap=block_cap)
 
     def _grams(d):
@@ -178,8 +172,7 @@ def cross_corpus_dedup(
         .select("id_a", "id_b", F.round("jacc", 6).alias("jacc"))
     ).persist()
     stats.extra["n_verified"] = pairs.count()
-    for h in ("packed_pairs", "id_mapping_lhs", "id_mapping_rhs"):
-        stats.extra[h].unpersist()
+    cand.unpersist()
     return pairs, stats
 
 

@@ -21,16 +21,6 @@ from pyspark.sql import functions as F
 PAIR_KEY = ["conv_id_a", "conv_id_b"]
 
 
-def canonicalize_pairs(df: DataFrame) -> DataFrame:
-    """Enforce conv_id_a < conv_id_b (order-insensitive pair identity)."""
-    a, b = F.col("conv_id_a"), F.col("conv_id_b")
-    return df.withColumn("_lo", F.least(a, b)).withColumn(
-        "_hi", F.greatest(a, b)
-    ).drop(*PAIR_KEY).withColumnRenamed("_lo", "conv_id_a").withColumnRenamed(
-        "_hi", "conv_id_b"
-    )
-
-
 def blocking_recall(candidates: DataFrame, truth: DataFrame) -> float:
     """|truth ∩ candidates| / |truth| (evaluation_functions.py:100-125)."""
     n_truth = truth.count()

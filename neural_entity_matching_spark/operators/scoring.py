@@ -118,7 +118,6 @@ def featurize_pairs(
     candidates: DataFrame,
     signatures: DataFrame,
     with_jaro_winkler: bool = False,
-    lev_prefix: int | None = LEV_PREFIX,
     broadcast_signatures: bool = False,
     with_tfidf: bool = False,
     tfidf_max_df: int | None = None,
@@ -147,10 +146,10 @@ def featurize_pairs(
     sandbox); per-doc vectors computed once, pair cosine is a JVM
     zip_with dot.
 
-    ``lev_prefix``: Levenshtein is O(len_a * len_b / 64) word ops PER
+    Edit window: Levenshtein is O(len_a * len_b / 64) word ops PER
     PAIR — on unbounded multi-turn signatures that term dominates the
     whole pipeline, so the edit ratio is computed over the first
-    ``lev_prefix`` normalized chars (None = unbounded). Token-Jaccard and
+    ``similarity.LEV_PREFIX`` (512) normalized chars. Token-Jaccard and
     length features still see the full signature. At 10^12-turn scale a
     bounded edit window is the only viable contract; the F1 gate is
     enforced on exactly this definition.
@@ -166,10 +165,8 @@ def featurize_pairs(
         # table fits an executor; at 10^12-turn scale leave False and let
         # AQE plan the shuffled join on the bucketed conv_id.
         sig = F.broadcast(sig)
-    la, lb = F.col("sig_a"), F.col("sig_b")
-    if lev_prefix is not None:
-        la = F.substring("sig_a", 1, lev_prefix)
-        lb = F.substring("sig_b", 1, lev_prefix)
+    la = F.substring("sig_a", 1, LEV_PREFIX)
+    lb = F.substring("sig_b", 1, LEV_PREFIX)
 
     def _side(suffix: str) -> DataFrame:
         return (sig.withColumnRenamed("conv_id", f"conv_id_{suffix}")
@@ -188,7 +185,7 @@ def featurize_pairs(
     out = (
         candidates.join(_side("a"), "conv_id_a").join(_side("b"), "conv_id_b")
         .withColumn(
-            "_lj", lev_tokjac_udf(lev_prefix)(F.col("sig_a"), F.col("sig_b")))
+            "_lj", lev_tokjac_udf(F.col("sig_a"), F.col("sig_b")))
         .withColumn(
             "lev_ratio",
             100.0
@@ -256,9 +253,8 @@ def featurize_pairs(
 
 def featurize_pairs_local(candidates: pa.Table,
                           signatures: pa.Table) -> pa.Table:
-    """``featurize_pairs`` (default features, ``lev_prefix=LEV_PREFIX``)
-    on driver-held Arrow tables: the same rows, the same column order and
-    bit-identical doubles.
+    """``featurize_pairs`` (default features) on driver-held Arrow tables:
+    the same rows, the same column order and bit-identical doubles.
 
     ``signatures`` holds ``conv_id`` and ``sig_text``, plain or dictionary
     encoded. As in the two inner joins, a candidate whose id has no
@@ -293,7 +289,7 @@ def featurize_pairs_local(candidates: pa.Table,
     cb = pairs.column("_code_b").to_numpy()
     null_a, null_b = ca == n, cb == n
     ok = ~(null_a | null_b)
-    d, ti, tu = lev_tokjac(vals[ca[ok]], vals[cb[ok]], LEV_PREFIX,
+    d, ti, tu = lev_tokjac(vals[ca[ok]], vals[cb[ok]],
                            chunk=8192, cell_budget=1 << 23)
     la, lb = lens[ca], lens[cb]  # 0 for a null text
     # featurize_pairs' lev_ratio: 100.0 * (1.0 - _lj.d /
@@ -327,7 +323,6 @@ def fast_threshold_score(
     threshold: float = 0.55,
     w_lev: float = 0.5,
     w_jacc: float = 0.5,
-    lev_prefix: int = LEV_PREFIX,
     broadcast_signatures: bool = False,
 ) -> DataFrame:
     """Decision-exact fused featurize+score using *thresholded* levenshtein.
@@ -378,8 +373,7 @@ def fast_threshold_score(
     """
     sig = signatures.select(
         "conv_id",
-        (F.substring("sig_text", 1, lev_prefix) if lev_prefix is not None
-         else F.col("sig_text")).alias("sig_lev"),
+        F.substring("sig_text", 1, LEV_PREFIX).alias("sig_lev"),
         F.length("sig_text").alias("sig_len"),
         F.expr(
             "array_distinct(transform(split(trim(sig_text), '\\\\s+'), x -> xxhash64(x)))"

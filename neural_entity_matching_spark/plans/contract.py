@@ -287,7 +287,7 @@ def q_pair_features(spark, sf_dir):
         .select("conv_id_a", "conv_id_b")
     )
     feats = featurize_pairs(cands, sigs, with_jaro_winkler=True,
-                            with_tfidf=True, lev_prefix=512)
+                            with_tfidf=True)
     return feats.select(
         F.col("conv_id_a").alias("id_a"),
         F.col("conv_id_b").alias("id_b"),
@@ -588,14 +588,6 @@ FROM n, cand, truth, inter
 # ---------------------------------------------------------------------------
 # Group 2 — training-data pipeline operators (dedup / ANN / text analysis)
 # ---------------------------------------------------------------------------
-
-def _ngram_expr(col_name: str, n: int) -> F.Column:
-    """Array of distinct char n-grams, fully JVM-side."""
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(length({col_name}) - {n - 1}, 1)),"
-        f" i -> substring({col_name}, i, {n})))"
-    )
-
 
 def q_ngram_jaccard_dedup(spark, sf_dir):
     """Char 3-gram Jaccard near-dup detection within a cheap block (same

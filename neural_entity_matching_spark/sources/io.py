@@ -72,16 +72,6 @@ from pyspark.sql.types import (
 )
 
 
-def have_iceberg(spark: SparkSession) -> bool:
-    """True if an Iceberg catalog is configured and its classes are present."""
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 def fingerprint(*parts: object) -> str:
     """Deterministic snapshot id from stage inputs/params."""
     h = hashlib.sha256()

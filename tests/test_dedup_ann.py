@@ -41,7 +41,7 @@ def test_minhash_lsh_dedup_matches_bruteforce(spark, docs):
 
 def test_minhash_dedup_duplicate_doc_ids_fail_loudly(spark):
     """Duplicate ids are a caller error, not a hash collision: the raise
-    names the real cause and does not send the caller to encode_ids."""
+    names the real cause and does not call it a hash collision."""
     rows = [(1, "the same words here"), (2, "other text entirely"),
             (1, "the same words again")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])

@@ -1,7 +1,9 @@
-"""README claims that name a number the code defines must match it, and
-the committed deployment zip must match the package source. Pure Python:
-reads the files, starts no SparkSession."""
+"""README claims that name a number the code defines must match it, the
+committed deployment zip must match the package source, and COVERAGE's
+symbol references must name what the package defines. Pure Python: reads
+the files, starts no SparkSession."""
 
+import importlib
 import re
 import zipfile
 from pathlib import Path
@@ -70,3 +72,26 @@ def test_readme_paths_exist():
     assert len(named) > 20, "README path parse found too few entries"
     missing = [p.relative_to(ROOT).as_posix() for p in named if not p.exists()]
     assert not missing, f"README names missing paths: {missing}"
+
+
+def test_coverage_symbols_resolve():
+    """Every `module.name` in COVERAGE.md whose module is a package module
+    (by file name, optionally behind its directory, as in
+    `operators/dedup.exact_dedup`) names an attribute of that module.
+    ``.py`` file names and non-package modules (`np.unique`) are
+    skipped."""
+    pkg = ROOT / "neural_entity_matching_spark"
+    modules = {p.relative_to(ROOT).with_suffix("").as_posix(): p
+               for p in pkg.rglob("*.py") if p.stem != "__init__"}
+    refs = []
+    for span in re.findall(r"`([^`]+)`", (ROOT / "COVERAGE.md").read_text()):
+        for path, name in re.findall(r"(?<![\w./])((?:\w+/)*\w+)\.(\w+)",
+                                     span):
+            found = [m for m in modules if m.endswith("/" + path)]
+            if name != "py" and found:
+                assert len(found) == 1, f"{path} names several modules"
+                refs.append((found[0].replace("/", "."), name))
+    assert len(refs) > 40, "COVERAGE symbol parse found too few references"
+    stale = [f"{mod}.{name}" for mod, name in refs
+             if not hasattr(importlib.import_module(mod), name)]
+    assert not stale, f"COVERAGE.md names missing symbols: {stale}"

@@ -104,7 +104,7 @@ def test_featurize_fused_udf_bitexact_vs_jvm_expressions(fixture_small):
              .filter(F.col("conv_id_a") < F.col("conv_id_b"))
              .filter(F.pmod(F.xxhash64("conv_id_a", "conv_id_b"), F.lit(7))
                      == 0))
-    got = featurize_pairs(cands, sigs, lev_prefix=512)
+    got = featurize_pairs(cands, sigs)
     sig2 = sigs.select("conv_id", "sig_text")
     exp = (
         cands

@@ -12,7 +12,7 @@ from neural_entity_matching_spark.plans import pipeline
 from neural_entity_matching_spark.plans.pipeline import PipelineConfig, run_pipeline
 
 ASTRAL = "\U0001d518\U0001d52b\U0001d526 \U0001f600 text \U00020000"
-LONG = " ".join(f"word{i % 97}" for i in range(200))  # > lev_prefix chars
+LONG = " ".join(f"word{i % 97}" for i in range(200))  # > LEV_PREFIX chars
 # (conv_id, sig_text): empty, whitespace-only, astral-plane, long, a null
 # text, and one id twice; "ghost" has no signature row
 EDGE_SIGS = [

@@ -44,56 +44,29 @@ def _pair_set(pairs):
     return {(r["conv_id_a"], r["conv_id_b"]) for r in pairs.collect()}
 
 
+def _ids(keys):
+    return keys.select("conv_id").distinct()
+
+
 def test_grouped_keeps_hot_block_under_cap(spark):
     keys = _hot_keys(spark)
     expect = _oracle_pairs(keys, block_cap=1000)
     # hot pairs + C(3,2) per normal block
     assert len(expect) == 120 * 119 // 2 + 100 * 3
-    pairs, stats = grouped_pairs_from_block_keys(keys, block_cap=1000)
+    pairs, stats = grouped_pairs_from_block_keys(keys, _ids(keys),
+                                                 block_cap=1000)
     assert _pair_set(pairs) == expect
     assert stats.extra["n_pairs"] == len(expect)
     assert stats.oversized_blocks == 0
     pairs.unpersist()
 
 
-def test_dense_id_mapping_bijection_multi_partition(spark):
-    """Rank assignment must be a bijection 0..n-1 over MANY partitions —
-    regression for the double-evaluation hazard where the offsets pass and
-    the rank pass saw different sampled range bounds and assigned
-    duplicate iids (observed at 176k ids before the mapping pinned one
-    materialized partitioning)."""
-    import pyspark.sql.functions as F2
-
-    from neural_entity_matching_spark.operators.blocking import (
-        dense_id_mapping,
-    )
-
-    n = 50000
-    ids = spark.range(n).select(
-        F2.md5(F2.col("id").cast("string")).alias("_id"))
-    m = dense_id_mapping(ids, partitions=16)
-    row = m.agg(
-        F2.count("*").alias("n"),
-        F2.countDistinct("iid").alias("d"),
-        F2.min("iid").alias("lo"),
-        F2.max("iid").alias("hi"),
-    ).collect()[0]
-    assert (row["n"], row["d"], row["lo"], row["hi"]) == (n, n, 0, n - 1)
-    # assignment is a pure function of the id set: an independent rebuild
-    # (different partition count) must reproduce the identical mapping
-    # under the same bucket count, and stay a bijection under another
-    m1 = {r["_id"]: r["iid"] for r in m.collect()}
-    m_again = dense_id_mapping(ids, partitions=16)
-    assert {r["_id"]: r["iid"] for r in m_again.collect()} == m1
-    m_again.unpersist()
-    m.unpersist()
-
-
 def test_cap_drops_mega_block_visibly(spark):
     keys = _hot_keys(spark)
     expect = _oracle_pairs(keys, block_cap=50)
     assert len(expect) == 100 * 3  # only the normal blocks survive
-    pairs, stats = grouped_pairs_from_block_keys(keys, block_cap=50)
+    pairs, stats = grouped_pairs_from_block_keys(keys, _ids(keys),
+                                                 block_cap=50)
     assert stats.oversized_blocks == 1
     assert stats.dropped_memberships == 120
     assert _pair_set(pairs) == expect
@@ -101,51 +74,30 @@ def test_cap_drops_mega_block_visibly(spark):
 
 
 def test_all_strategies_and_encodings_identical(spark):
-    """grouped == the oracle pair set, with and without id encoding."""
+    """grouped == the oracle pair set."""
     keys = _hot_keys(spark, n_hot=60, n_normal=200)
     expect = _oracle_pairs(keys, block_cap=80)
     assert expect  # non-trivial
 
-    g, _ = grouped_pairs_from_block_keys(keys, block_cap=80)
-    raw, _ = grouped_pairs_from_block_keys(keys, block_cap=80, encode_ids=False)
+    g, _ = grouped_pairs_from_block_keys(keys, _ids(keys), block_cap=80)
     assert _pair_set(g) == expect
-    assert _pair_set(raw) == expect
-    for df in (g, raw):
-        df.unpersist()
-
-
-def test_dense_id_mapping_rejects_duplicate_ids(spark):
-    """The bijection check must catch a caller passing a NON-distinct id
-    column (each dup would get several iids and every downstream pair
-    join would silently fan out) — round-4 advice item."""
-    import pytest
-
-    from neural_entity_matching_spark.operators.blocking import (
-        dense_id_mapping,
-    )
-
-    ids = spark.createDataFrame(
-        [("a",), ("b",), ("c",), ("b",)], ["_id"]
-    )
-    with pytest.raises(AssertionError, match="duplicates"):
-        dense_id_mapping(ids, partitions=4)
+    g.unpersist()
 
 
 def test_grouped_physical_cap_fallback(spark):
     """Degenerate mega-block auto-fallback (round-5 verdict item #5): when
     a physical block exceeds physical_block_cap, the single-pass grouped
     blocker must rebuild through prune-before-collect — identical pair
-    set and stats to the non-fallback run, in both the raw-keys and the
-    ids-provided shapes — and record the trigger."""
+    set and stats to the non-fallback run — and record the trigger."""
     keys = _hot_keys(spark)
-    ids = keys.select("conv_id").distinct()
+    ids = _ids(keys)
 
     # fallback triggers (HOT's 120 members > physical cap 50); HOT still
     # capped out by block_cap like the normal path
-    pf, sf = grouped_pairs_from_block_keys(keys, block_cap=100,
+    pf, sf = grouped_pairs_from_block_keys(keys, ids, block_cap=100,
                                            physical_block_cap=50)
     assert "prune-before-collect" in sf.extra["fallback"]
-    pn, sn = grouped_pairs_from_block_keys(keys, block_cap=100)
+    pn, sn = grouped_pairs_from_block_keys(keys, ids, block_cap=100)
     assert "fallback" not in sn.extra
     assert _pair_set(pf) == _pair_set(pn)
     assert sf.extra["n_pairs"] == sn.extra["n_pairs"] == 100 * 3
@@ -163,17 +115,9 @@ def test_grouped_physical_cap_fallback(spark):
     fb = [e for e in d if e.startswith("fallback:")]
     assert len(fb) == 1 and "prune-before-collect" in fb[0] and d[fb[0]] == 1
 
-    # ids-provided shape (keys stream, no raw persist): fallback must
-    # re-persist the narrow keys and still match
-    pi, si = grouped_pairs_from_block_keys(keys, block_cap=100,
-                                           physical_block_cap=50, ids=ids)
-    assert "prune-before-collect" in si.extra["fallback"]
-    assert _pair_set(pi) == _pair_set(pn)
-    assert si.extra["n_pairs"] == 100 * 3
-
     # fallback with the cap ABOVE the hot block: full pair set preserved
-    pf2, sf2 = grouped_pairs_from_block_keys(keys, block_cap=1000,
-                                             physical_block_cap=50, ids=ids)
-    pn2, sn2 = grouped_pairs_from_block_keys(keys, block_cap=1000)
+    pf2, sf2 = grouped_pairs_from_block_keys(keys, ids, block_cap=1000,
+                                             physical_block_cap=50)
+    pn2, sn2 = grouped_pairs_from_block_keys(keys, ids, block_cap=1000)
     s_f, s_n = _pair_set(pf2), _pair_set(pn2)
     assert s_f == s_n and len(s_f) == 120 * 119 // 2 + 100 * 3

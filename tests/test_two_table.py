@@ -2,16 +2,18 @@
 (reference script/blocking_algorithms.py:149-172 re-aligns lhs/rhs ids;
 model_magellan_ml.py:183-193 always blocks Amazon x Google)."""
 
+from collections import defaultdict
+
 import pyspark.sql.functions as F
 import pytest
 
 from neural_entity_matching_spark.functions.normalize import build_signatures
 from neural_entity_matching_spark.operators.blocking import (
     lsh_block,
-    packed_two_table_pairs_from_block_keys,
     token_overlap_block,
     two_table_pairs_from_block_keys,
 )
+from neural_entity_matching_spark.operators.dedup import cross_corpus_dedup
 
 LSH = dict(num_hashes=128, bands=64, char_ngram=8, seed=42)
 
@@ -79,12 +81,25 @@ def test_two_table_token_overlap_orientation(spark):
     assert got == {("a1", "b1")}
 
 
-def test_packed_two_table_equals_unpacked(spark):
-    """Round-5 verdict item #8: the packed two-table path (per-side dense
-    ranks, single-int64 dedup exchange) must produce the identical
-    oriented pair set and identical cap/stats semantics as the unpacked
-    two-table join, including blocks oversized on exactly one side and
-    ids appearing under many block keys (dedup load)."""
+def _cross_product_oracle(rows_l, rows_r, block_cap):
+    """The reference's two-table blocking on the driver: per block, every
+    lhs x rhs member pair; a block above the cap on either side drops."""
+    blocks = defaultdict(lambda: (set(), set()))
+    for side, rows in ((0, rows_l), (1, rows_r)):
+        for conv_id, key in rows:
+            blocks[key][side].add(conv_id)
+    return {
+        (a, b)
+        for lhs, rhs in blocks.values()
+        if len(lhs) <= block_cap and len(rhs) <= block_cap
+        for a in lhs for b in rhs
+    }
+
+
+def test_two_table_equals_cross_product_oracle(spark):
+    """Two-table pairs equal a per-block lhs x rhs cross product, oriented
+    lhs -> rhs, with a block oversized on exactly one side and ids under
+    several block keys (the pair dedup's load)."""
     rows_l = (
         [(f"l{i}", "hot") for i in range(6)]
         + [("l9", "cold"), ("l10", "cold"), ("l9", "warm"), ("l10", "warm")]
@@ -95,49 +110,15 @@ def test_packed_two_table_equals_unpacked(spark):
     )
     kl = spark.createDataFrame(rows_l, ["conv_id", "block_key"])
     kr = spark.createDataFrame(rows_r, ["conv_id", "block_key"])
-    for cap in (5, 200):
-        pu, su = two_table_pairs_from_block_keys(kl, kr, block_cap=cap)
-        pp, sp = packed_two_table_pairs_from_block_keys(kl, kr,
-                                                        block_cap=cap)
-        got_u = {(r["conv_id_a"], r["conv_id_b"]) for r in pu.collect()}
-        got_p = {(r["conv_id_a"], r["conv_id_b"]) for r in pp.collect()}
-        assert got_p == got_u
-        # orientation: lhs ids only ever on the a side
-        assert all(a.startswith("l") and b.startswith("r")
-                   for a, b in got_p)
-        assert (sp.total_blocks, sp.oversized_blocks,
-                sp.dropped_memberships, sp.extra["n_pairs"]) == (
-            su.total_blocks, su.oversized_blocks,
-            su.dropped_memberships, su.extra["n_pairs"])
-        sp.extra["packed_pairs"].unpersist()
-        for m in (sp.extra["id_mapping_lhs"], sp.extra["id_mapping_rhs"]):
-            m.unpersist()
-
-
-def test_two_table_lsh_packed_strategy(fixture_small):
-    """The packed two-table path on LSH band keys of both sides (the
-    decontamination shape) matches the default two-table plan of
-    lsh_block(signatures_rhs=...) at the LSH operating point."""
-    from neural_entity_matching_spark.operators.blocking import lsh_band_keys
-
-    transcripts, _, _ = fixture_small
-    sigs = build_signatures(transcripts).cache()
-    lhs = sigs.filter(~F.col("conv_id").rlike("-d[0-9]$")).cache()
-    rhs = sigs.filter(F.col("conv_id").rlike("-d[0-9]$")).cache()
-    p_def, s_def = lsh_block(lhs, block_cap=35, signatures_rhs=rhs, **LSH)
-    p_pkd, s_pkd = packed_two_table_pairs_from_block_keys(
-        lsh_band_keys(lhs, **LSH), lsh_band_keys(rhs, **LSH), block_cap=35,
-        ids_lhs=lhs.select("conv_id"), ids_rhs=rhs.select("conv_id"))
-    got_def = {(r["conv_id_a"], r["conv_id_b"]) for r in p_def.collect()}
-    got_pkd = {(r["conv_id_a"], r["conv_id_b"]) for r in p_pkd.collect()}
-    assert got_def and got_pkd == got_def
-    assert s_pkd.extra["n_pairs"] == s_def.extra["n_pairs"]
-    assert (s_pkd.total_blocks, s_pkd.oversized_blocks,
-            s_pkd.dropped_memberships) == (
-        s_def.total_blocks, s_def.oversized_blocks, s_def.dropped_memberships)
-    p_def.unpersist()
-    for h in ("packed_pairs", "id_mapping_lhs", "id_mapping_rhs"):
-        s_pkd.extra[h].unpersist()
+    for cap, over in ((5, 1), (200, 0)):
+        pairs, stats = two_table_pairs_from_block_keys(kl, kr, block_cap=cap)
+        got = [(r["conv_id_a"], r["conv_id_b"]) for r in pairs.collect()]
+        expect = _cross_product_oracle(rows_l, rows_r, cap)
+        assert len(got) == len(set(got)) == stats.extra["n_pairs"]
+        assert set(got) == expect
+        assert (stats.total_blocks, stats.oversized_blocks,
+                stats.dropped_memberships) == (3, over, 9 * over)
+        pairs.unpersist()
 
 
 LHS = [("a1", "hello there how can i help you today with your order"),
@@ -166,17 +147,31 @@ def test_null_id_raises_on_two_table_lsh(spark, side):
     assert _persisted(spark) == before
 
 
-@pytest.mark.parametrize("pass_ids", [False, True])
-def test_null_id_raises_on_packed_two_table(spark, pass_ids):
-    # it used to fail the bijection check as "input ids contain duplicates"
-    kl = spark.createDataFrame([("l1", 1), (None, 1), ("l2", 2)],
-                               "conv_id string, block_key long")
-    kr = spark.createDataFrame([("r1", 1), ("r2", 2)],
-                               "conv_id string, block_key long")
-    ids = {}
-    if pass_ids:
-        ids = dict(ids_lhs=kl.select("conv_id"), ids_rhs=kr.select("conv_id"))
+@pytest.mark.parametrize("side", ["lhs", "rhs"])
+def test_null_id_raises_on_cross_corpus_dedup(spark, side):
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id string, text string")
+
+    lhs = LHS + (NULL_ID if side == "lhs" else [])
+    rhs = RHS + (NULL_ID if side == "rhs" else [])
     before = _persisted(spark)
     with pytest.raises(ValueError, match=r"^null input ids \(1 of 3 "):
-        packed_two_table_pairs_from_block_keys(kl, kr, block_cap=5, **ids)
+        cross_corpus_dedup(docs(lhs), docs(rhs), block_cap=5)
     assert _persisted(spark) == before
+
+
+@pytest.mark.parametrize("max_token_df", [1000, None])
+@pytest.mark.parametrize("mode", ["self", "two_table"])
+def test_null_id_raises_on_token_overlap(spark, mode, max_token_df):
+    # two-table mode used to return (None, 'b1') next to ('a1', 'b1');
+    # self mode silently dropped the null-id doc's pair
+    def sigs(rows):
+        return spark.createDataFrame(rows, "conv_id string, sig_text string")
+
+    if mode == "self":
+        lhs, rhs = LHS + RHS[:1] + NULL_ID, None
+    else:
+        lhs, rhs = LHS + NULL_ID, sigs(RHS)
+    with pytest.raises(ValueError, match=r"^null input ids"):
+        token_overlap_block(sigs(lhs), min_shared_tokens=2,
+                            max_token_df=max_token_df, signatures_rhs=rhs)
